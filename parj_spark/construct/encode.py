@@ -136,13 +136,6 @@ def build_dictionary(triples_uri: DataFrame, hash_ids: bool = False) -> DataFram
     terms = triples_uri.select(F.col("s_uri").alias("uri")).union(
         triples_uri.select(F.col("o_uri").alias("uri"))
     )
-    # cheap pre-gate for the driver-local id assignment: distinct terms are
-    # bounded by 2x the triple count (a metadata-only job on checkpointed
-    # parquet), so a corpus-scale dictionary skips the gate probe — which
-    # would otherwise collect and discard a gate-sized prefix — and goes
-    # straight to the distributed rank
-    n_bound = 2 * triples_uri.count()
-    local_below = 1_000_000 if n_bound <= 1_000_000 else 0
     if hash_ids:
         return (
             terms.distinct()
@@ -150,6 +143,13 @@ def build_dictionary(triples_uri: DataFrame, hash_ids: bool = False) -> DataFram
             .repartitionByRange(F.col("uri"))
             .sortWithinPartitions("uri")
         )
+    # cheap pre-gate for the driver-local id assignment: distinct terms are
+    # bounded by 2x the triple count (a metadata-only job on checkpointed
+    # parquet), so a corpus-scale dictionary skips the gate probe — which
+    # would otherwise collect and discard a gate-sized prefix — and goes
+    # straight to the distributed rank
+    n_bound = 2 * triples_uri.count()
+    local_below = 1_000_000 if n_bound <= 1_000_000 else 0
     return (
         _dense_ids(terms, "uri", local_below=local_below)
         .repartitionByRange(F.col("uri"))

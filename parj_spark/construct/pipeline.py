@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from parj_spark.construct import canonicalize, encode, extract, linking, lineage
 from parj_spark.construct import materialize as mat
+from parj_spark.construct.schemas import read_table
 from parj_spark.fixtures import ontology as O
 
 
@@ -33,7 +34,12 @@ class GraphStore:
     out_dir: str
 
     def _read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, name))
+        return read_table(self.spark, self.out_dir, name)
+
+    def _read_analyzed(self, name: str) -> DataFrame | None:
+        if not lineage.stage_done(os.path.join(self.out_dir, name), self.spark):
+            return None
+        return self._read(name)
 
     def _permutation(self, plain: str, bucketed_sub: str) -> DataFrame:
         """Read a permutation relation from whichever on-disk copy exists.
@@ -69,35 +75,23 @@ class GraphStore:
         return self._read("stats")
 
     def join_stats(self) -> DataFrame | None:
-        path = os.path.join(self.out_dir, "join_stats")
-        if not lineage.stage_done(path, self.spark):
-            return None
-        return self.spark.read.parquet(path)
+        return self._read_analyzed("join_stats")
 
     def class_stats(self) -> DataFrame | None:
         """Per-class instance counts (reference T2: per-rdf:type stats,
         parj.c:338-364, MemoryStat.java:248-315); None on pre-T2 graphs."""
-        path = os.path.join(self.out_dir, "class_stats")
-        if not lineage.stage_done(path, self.spark):
-            return None
-        return self.spark.read.parquet(path)
+        return self._read_analyzed("class_stats")
 
     def class_join_stats(self) -> DataFrame | None:
         """Type-restricted T3 (reference getTypeCardinality, parj.c:510-547):
         per-(class, p1, p2, orientation) join cardinalities counting only
         join keys that are instances of the class; None on older graphs."""
-        path = os.path.join(self.out_dir, "class_join_stats")
-        if not lineage.stage_done(path, self.spark):
-            return None
-        return self.spark.read.parquet(path)
+        return self._read_analyzed("class_join_stats")
 
     def histograms(self) -> DataFrame | None:
         """Equi-depth (p, col) histograms (reference Histogram.java:106-212);
         None on graphs materialized before the histogram writer existed."""
-        path = os.path.join(self.out_dir, "histograms")
-        if not lineage.stage_done(path, self.spark):
-            return None
-        return self.spark.read.parquet(path)
+        return self._read_analyzed("histograms")
 
     def bucketed_prefix(self) -> str | None:
         """Table prefix of this graph's bucketed layout, registering the
@@ -111,7 +105,7 @@ class GraphStore:
         )
 
     def triples_uri(self) -> DataFrame:
-        return self._read("triples_uri")
+        return self.spark.read.parquet(os.path.join(self.out_dir, "triples_uri"))
 
     def decoded_triples(self) -> DataFrame:
         """The LIVE graph as (s_uri, p_uri, o_uri), decoded from the
@@ -151,7 +145,7 @@ class GraphStore:
         write_ntriples(self.decoded_triples(), path, partitions=partitions)
 
     def mentions(self) -> DataFrame:
-        return self._read("mentions")
+        return self.spark.read.parquet(os.path.join(self.out_dir, "mentions"))
 
 
 def _run_stage(spark, out_dir, name, resume, build):
@@ -172,7 +166,8 @@ def _run_stage(spark, out_dir, name, resume, build):
     lineage.record_stage(
         out_dir, name, None, obs.get["n"], time.time() - t0, spark=spark
     )
-    return spark.read.parquet(path)
+    # the frame just written carries the checkpoint's schema: no inference
+    return spark.read.schema(df.schema).parquet(path)
 
 
 # written only after ALL materialize writers commit — the resume key for the

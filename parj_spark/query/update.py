@@ -15,7 +15,8 @@ missing half, Spark-first, in two layers:
 2. :func:`apply_update` — merge-on-read deltas over a materialized
    :class:`~parj_spark.construct.pipeline.GraphStore`. Inserts ride the
    streaming epoch machinery (:func:`~parj_spark.streaming.append_epoch`:
-   encoded triples + dict/properties catalog deltas); deletes land as
+   encoded triples + dict/properties catalog deltas, existence-guarded by
+   its anti-join against the alive graph); deletes land as
    **tombstone epochs** — encoded ``(s, p, o)`` sets suppressed at read time
    by :class:`~parj_spark.streaming.StreamedGraphStore` (an anti-join whose
    equi keys are the triple and whose residual predicate is the epoch
@@ -27,15 +28,13 @@ missing half, Spark-first, in two layers:
    directory write is the commit witness.
 
 Scale notes: the store path never rewrites or re-encodes the base graph.
-The insert existence guard is one scan of the live view probed by a
-broadcast of the (small) candidate set — no shuffle of the base tables; the
+The insert existence guard reads only the predicate slices the inserts
+touch (p-partition pruning on the base layout and the delta tail); the
 WHERE group is planned by the regular statistics-driven BGPEngine over the
 live merge-on-read view.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -54,8 +53,10 @@ def _is_var(t) -> bool:
 
 
 def _ground_rows(spark, templates: list[Pattern]) -> DataFrame:
+    # a DATA block may repeat a triple; the graph is a set
     return spark.createDataFrame(
-        [(t.s, t.p, t.o) for t in templates], "s string, p string, o string"
+        list(dict.fromkeys((t.s, t.p, t.o) for t in templates)),
+        "s string, p string, o string",
     )
 
 
@@ -119,17 +120,14 @@ def apply_update_on_triples(triples: DataFrame, text: str, **flags) -> DataFrame
 # --- store-backed merge-on-read path ---------------------------------------
 
 
-def _encode_triples(uris: DataFrame, dict_df: DataFrame, props_df: DataFrame,
-                    keep_uris: bool = False) -> DataFrame:
+def _encode_triples(uris: DataFrame, dict_df: DataFrame, props_df: DataFrame) -> DataFrame:
     """Inner-join encode a string (s, p, o) relation against the combined
     catalogs. A term absent from the dictionary cannot occur in the graph,
-    so dropping it (inner join) is exact for deletion/existence purposes."""
+    so dropping it (inner join) is exact for deletion purposes."""
     d_s = dict_df.select(F.col("id").alias("es"), F.col("uri").alias("s"))
     d_o = dict_df.select(F.col("id").alias("eo"), F.col("uri").alias("o"))
     d_p = props_df.select(F.col("id").alias("ep"), F.col("uri").alias("p"))
     enc = uris.join(F.broadcast(d_p), "p").join(d_s, "s").join(d_o, "o")
-    if keep_uris:
-        return enc.select("s", "p", "o", "es", "ep", "eo")
     return enc.select(
         F.col("es").alias("s"), F.col("ep").alias("p"), F.col("eo").alias("o")
     )
@@ -143,12 +141,13 @@ def apply_update(store, stream_dir: str, text: str, **flags):
     Per operation: the WHERE group is answered by a ``BGPEngine`` over the
     live view (so each operation sees the preceding ones, and un-compacted
     stream deltas are part of the match domain); deletions are written as one
-    tombstone epoch of encoded (s, p, o) ids; insertions are
-    existence-filtered against the live view and appended through
-    :func:`~parj_spark.streaming.append_epoch` (which owns dict/properties
-    catalog deltas for novel terms). The insert epoch is allocated after the
-    tombstone epoch, so a triple both deleted and inserted by one operation
-    ends up present (delete-then-insert, SPARQL 1.1 Update §3.1.3).
+    tombstone epoch of encoded (s, p, o) ids; insertions are appended
+    through :func:`~parj_spark.streaming.append_epoch`, which owns the
+    dict/properties catalog deltas for novel terms and drops the triples
+    already alive. An operation that changes nothing writes no epoch. The
+    insert epoch is allocated after the tombstone epoch, so a triple both
+    deleted and inserted by one operation ends up present
+    (delete-then-insert, SPARQL 1.1 Update §3.1.3).
 
     The base permutation layout is never touched: queries between updates
     pay one anti-join against the (small) tombstone set, and
@@ -162,6 +161,7 @@ def apply_update(store, stream_dir: str, text: str, **flags):
         StreamedGraphStore,
         append_epoch,
         next_epoch,
+        write_epoch_delta,
     )
 
     spark = store.spark
@@ -195,46 +195,23 @@ def apply_update(store, stream_dir: str, text: str, **flags):
             ins = _instantiate(sols, op.insert_templates) if op.insert_templates else None
 
         if dels is not None:
-            enc = _encode_triples(dels, view.dict(), view.properties())
-            if not enc.isEmpty():
-                epoch = next_epoch(stream_dir)
-                enc.write.mode("overwrite").parquet(
-                    os.path.join(stream_dir, "tombstones", f"epoch={epoch}")
-                )
-                view = StreamedGraphStore(spark, out_dir, stream_dir=stream_dir)
+            write_epoch_delta(
+                _encode_triples(dels, view.dict(), view.properties()),
+                stream_dir, "tombstones", next_epoch(stream_dir),
+            )
         if ins is not None:
-            # existence guard: encode the candidates (small), probe the live
-            # view with a broadcast semi-join (one scan, no base shuffle),
-            # and keep only the genuinely new triples — an RDF graph is a
-            # set, and duplicate rows would double BGP solution counts
-            cand = _encode_triples(
-                ins, view.dict(), view.properties(), keep_uris=True
-            ).localCheckpoint()
-            probe = cand.select(
-                F.col("es").alias("s"), F.col("ep").alias("p"),
-                F.col("eo").alias("o"),
+            append_epoch(
+                ins.select(
+                    F.col("s").alias("s_uri"),
+                    F.col("p").alias("p_uri"),
+                    F.col("o").alias("o_uri"),
+                ),
+                base.dict(),
+                base.properties(),
+                stream_dir,
+                next_epoch(stream_dir),
+                base_spo=base.spo(),
             )
-            hits = view.spo().select(*_SPO).join(
-                F.broadcast(probe), _SPO, "left_semi"
-            )
-            existing = cand.join(
-                F.broadcast(hits),
-                (cand.es == hits.s) & (cand.ep == hits.p) & (cand.eo == hits.o),
-                "left_semi",
-            ).select(*_SPO)
-            new_ins = ins.join(F.broadcast(existing), _SPO, "left_anti")
-            if not new_ins.isEmpty():
-                append_epoch(
-                    new_ins.select(
-                        F.col("s").alias("s_uri"),
-                        F.col("p").alias("p_uri"),
-                        F.col("o").alias("o_uri"),
-                    ),
-                    base.dict(),
-                    base.properties(),
-                    stream_dir,
-                    next_epoch(stream_dir),
-                )
         if sols is not None:
             sols.unpersist()
     return StreamedGraphStore(spark, out_dir, stream_dir=stream_dir)

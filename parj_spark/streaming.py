@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from parj_spark.construct import extract
 from parj_spark.construct.pipeline import GraphStore
+from parj_spark.construct.schemas import read_table
 from parj_spark.fixtures.generator import DOCS_SCHEMA
 
 
@@ -119,13 +120,10 @@ def _alive_triples(
     ``pids`` predicate-prunes the tail when the caller only cares about a
     known predicate slice (the caller prunes ``base`` itself)."""
     rows = base.select("s", "p", "o").withColumn("__epoch", F.lit(-1).cast("long"))
-    tri_path = os.path.join(stream_dir, "triples")
-    epoch_dirs = _epoch_paths(tri_path, exclude_epoch)
+    epoch_dirs = _epoch_paths(os.path.join(stream_dir, "triples"), exclude_epoch)
     if epoch_dirs:
-        tail = (
-            spark.read.option("basePath", tri_path)
-            .parquet(*epoch_dirs)
-            .select("s", "p", "o", F.col("epoch").cast("long").alias("__epoch"))
+        tail = read_table(spark, stream_dir, "triples", epoch_dirs).select(
+            "s", "p", "o", F.col("epoch").cast("long").alias("__epoch")
         )
         if pids is not None:
             tail = tail.filter(F.col("p").isin(pids))
@@ -133,7 +131,7 @@ def _alive_triples(
     tomb_path = os.path.join(stream_dir, "tombstones")
     if not os.path.exists(tomb_path):
         return rows.select("s", "p", "o")
-    tombs = spark.read.parquet(tomb_path).select(
+    tombs = read_table(spark, stream_dir, "tombstones").select(
         F.col("s").alias("__ts"),
         F.col("p").alias("__tp"),
         F.col("o").alias("__to"),
@@ -154,19 +152,46 @@ def _neg_id(col):
     return -(F.pmod(F.xxhash64(col), F.lit(1 << 61)) + 1)
 
 
-def _prior_delta(spark, stream_dir: str, name: str, epoch_id: int) -> DataFrame | None:
-    """(id, uri) union of every epoch delta EXCEPT the current one — the
-    current epoch's own dir is excluded so a re-delivered epoch rewrites its
-    delta instead of anti-joining it away (idempotence under retries)."""
-    path = os.path.join(stream_dir, name)
-    epoch_dirs = _epoch_paths(path, epoch_id)
+def _with_deltas(
+    base: DataFrame, stream_dir: str, name: str, exclude_epoch: int | None = None
+) -> DataFrame:
+    """The (id, uri) ``base`` catalog plus every ``name`` epoch delta except
+    ``exclude_epoch`` — the current epoch is excluded at append time so a
+    re-delivered epoch rewrites its delta instead of anti-joining it away
+    (idempotence under retries)."""
+    base = base.select("id", "uri")
+    epoch_dirs = _epoch_paths(os.path.join(stream_dir, name), exclude_epoch)
     if not epoch_dirs:
-        return None
-    return (
-        spark.read.option("basePath", path)
-        .parquet(*epoch_dirs)
-        .select("id", "uri")
+        return base
+    delta = read_table(base.sparkSession, stream_dir, name, epoch_dirs)
+    return base.union(delta.select("id", "uri"))
+
+
+def _drop_epoch(stream_dir: str, name: str, epoch_id: int) -> None:
+    """Remove one epoch of a delta kind, and the kind's dir once it is empty
+    (an existing ``triples``/``tombstones`` dir means "deltas exist")."""
+    import shutil
+
+    root = os.path.join(stream_dir, name)
+    shutil.rmtree(os.path.join(root, f"epoch={epoch_id}"), ignore_errors=True)
+    if os.path.isdir(root) and not os.listdir(root):
+        os.rmdir(root)
+
+
+def write_epoch_delta(df: DataFrame, stream_dir: str, name: str, epoch_id: int) -> int:
+    """Write ``df`` as epoch ``epoch_id`` of delta kind ``name`` and return
+    its row count, observed on the write itself; an empty epoch leaves no
+    dir behind."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+        os.path.join(stream_dir, name, f"epoch={epoch_id}")
     )
+    n = obs.get["n"]
+    if n == 0:
+        _drop_epoch(stream_dir, name, epoch_id)
+    return n
 
 
 def append_epoch(
@@ -180,78 +205,79 @@ def append_epoch(
     """Encode one epoch's (s_uri, p_uri, o_uri) triples against the base
     catalogs and append the encoded triples plus duplicate-free dict /
     properties deltas under ``stream_dir`` (see
-    :func:`incremental_graph_append` for the layout and invariants)."""
+    :func:`incremental_graph_append` for the layout and invariants).
+
+    With ``base_spo`` the epoch keeps only the triples not already alive in
+    base + prior epochs − tombstones. An epoch that adds no triple leaves
+    no dir of any delta kind behind."""
     spark = triples_uri.sparkSession
 
-    # predicates: unseen ones get reserved negative ids appended as a
-    # per-epoch properties delta (ADVICE r2: the old inner join silently
-    # dropped every triple whose predicate wasn't in the base catalog)
-    all_props = props_df.select("id", "uri")
-    prior_props = _prior_delta(spark, stream_dir, "properties", epoch_id)
-    if prior_props is not None:
-        all_props = all_props.union(prior_props)
-    preds = triples_uri.select(F.col("p_uri").alias("uri")).distinct()
-    new_props = preds.join(all_props, "uri", "left_anti").select(
-        _neg_id(F.col("uri")).alias("id"), "uri"
+    # one catalog lookup per epoch: every distinct predicate and term of the
+    # epoch, left-joined against base + prior-epoch catalogs. A null id marks
+    # a new one, which takes its reserved negative id (ADVICE r2: the old
+    # inner join silently dropped every triple whose predicate wasn't in the
+    # base catalog). Checkpointed rather than persisted: a cached plan keeps
+    # every shuffle partition, and each delta below would be written as
+    # that many small files.
+    catalogs = (
+        _with_deltas(props_df, stream_dir, "properties", epoch_id)
+        .withColumn("is_p", F.lit(True))
+        .unionByName(
+            _with_deltas(dict_df, stream_dir, "dict", epoch_id)
+            .withColumn("is_p", F.lit(False))
+        )
     )
-    new_props.write.mode("overwrite").parquet(
-        os.path.join(stream_dir, "properties", f"epoch={epoch_id}")
+    wanted = (
+        triples_uri.select(F.lit(True).alias("is_p"), F.col("p_uri").alias("uri"))
+        .union(triples_uri.select(F.lit(False), "s_uri"))
+        .union(triples_uri.select(F.lit(False), "o_uri"))
+        .distinct()
     )
-    full_props = all_props.union(
-        spark.read.parquet(
-            os.path.join(stream_dir, "properties", f"epoch={epoch_id}")
-        ).select("id", "uri")
+    lookup = (
+        wanted.join(catalogs, ["is_p", "uri"], "left")
+        .select(
+            "is_p",
+            "uri",
+            F.coalesce("id", _neg_id(F.col("uri"))).alias("id"),
+            F.col("id").isNull().alias("new"),
+        )
+        .localCheckpoint()
     )
-
-    # dict delta BEFORE the triples: readers treat the triples dir as the
+    # catalog deltas BEFORE the triples: readers treat the triples dir as the
     # epoch's commit witness (combined_triples unions only epochs whose
     # triples landed), so writing catalogs first means a crash between the
-    # two writes leaves at worst an orphan delta — never a committed epoch
-    # whose negative stream ids are missing from combined_dict, which would
-    # make decode joins return nulls until the epoch is redelivered.
-    terms = triples_uri.select(F.col("s_uri").alias("uri")).union(
-        triples_uri.select(F.col("o_uri").alias("uri"))
-    ).distinct()
-    known = dict_df.select("id", "uri")
-    prior_dict = _prior_delta(spark, stream_dir, "dict", epoch_id)
-    if prior_dict is not None:
-        known = known.union(prior_dict)
-    new_terms = terms.join(known, "uri", "left_anti").select(
-        _neg_id(F.col("uri")).alias("id"), "uri"
-    )
-    new_terms.write.mode("overwrite").parquet(
-        os.path.join(stream_dir, "dict", f"epoch={epoch_id}")
-    )
-
-    d_s = dict_df.select(F.col("id").alias("s_id"), F.col("uri").alias("s_uri"))
-    d_o = dict_df.select(F.col("id").alias("o_id"), F.col("uri").alias("o_uri"))
-    d_p = full_props.select(F.col("id").alias("p"), F.col("uri").alias("p_uri"))
-    enc = (
-        triples_uri.join(F.broadcast(d_p), "p_uri")
-        .join(d_s, "s_uri", "left")
-        .join(d_o, "o_uri", "left")
-        .select(
-            F.coalesce("s_id", _neg_id(F.col("s_uri"))).alias("s"),
-            "p",
-            F.coalesce("o_id", _neg_id(F.col("o_uri"))).alias("o"),
+    # writes leaves at worst an orphan delta — never a committed epoch whose
+    # negative stream ids are missing from combined_dict, which would make
+    # decode joins return nulls until the epoch is redelivered.
+    for name, is_p in (("properties", True), ("dict", False)):
+        lookup.filter((F.col("is_p") == is_p) & F.col("new")).select(
+            "id", "uri"
+        ).write.mode("overwrite").parquet(
+            os.path.join(stream_dir, name, f"epoch={epoch_id}")
         )
+
+    def ids(is_p: bool, uri: str, id_: str) -> DataFrame:
+        return lookup.filter(F.col("is_p") == is_p).select(
+            F.col("uri").alias(uri), F.col("id").alias(id_)
+        )
+
+    out = (
+        triples_uri.join(F.broadcast(ids(True, "p_uri", "p")), "p_uri")
+        .join(ids(False, "s_uri", "s"), "s_uri")
+        .join(ids(False, "o_uri", "o"), "o_uri")
+        .select("s", "p", "o")
     )
     if base_spo is not None:
         # set semantics at append time (an RDF graph is a set — duplicate
-        # rows double BGP solution counts; update.apply_update enforces the
-        # same invariant on its insert path): anti-join the epoch against
-        # the currently-ALIVE copy of its own predicate slice. The probe is
+        # rows double BGP solution counts): anti-join the epoch against the
+        # currently-ALIVE copy of its own predicate slice. The probe is
         # predicate-pruned on both the p-partitioned base layout and the
         # epoch tail, so at scale it touches only the slices the epoch
         # writes; excluding the current epoch keeps foreachBatch retries
         # idempotent (a redelivered epoch must not anti-join itself away),
         # and anti-joining ALIVE (not merely present) rows keeps a
         # tombstoned-then-reasserted triple alive.
-        # persist the encode join chain once: the pids collect and the
-        # write are both actions over it, and unpersisted each would
-        # recompute the full three-join encode (ADVICE r4)
-        enc = enc.persist()
-        pids = [r.p for r in enc.select("p").distinct().collect()]
+        pids = [r.id for r in lookup.filter("is_p").select("id").collect()]
         alive = _alive_triples(
             spark,
             base_spo.filter(F.col("p").isin(pids)),
@@ -259,14 +285,10 @@ def append_epoch(
             exclude_epoch=epoch_id,
             pids=pids,
         )
-        out = enc.join(alive, ["s", "p", "o"], "left_anti")
-    else:
-        out = enc
-    out.write.mode("overwrite").parquet(
-        os.path.join(stream_dir, "triples", f"epoch={epoch_id}")
-    )
-    if base_spo is not None:
-        enc.unpersist()
+        out = out.join(alive, ["s", "p", "o"], "left_anti")
+    if not write_epoch_delta(out, stream_dir, "triples", epoch_id):
+        for name in ("properties", "dict"):
+            _drop_epoch(stream_dir, name, epoch_id)
 
 
 def entail_delta(triples_uri: DataFrame, tbox, schema_preds: list[str]) -> DataFrame:
@@ -609,18 +631,10 @@ class StreamedGraphStore(GraphStore):
         return self._merged(super().osp())
 
     def dict(self) -> DataFrame:
-        base = super().dict()
-        path = os.path.join(self.stream_dir, "dict")
-        if not os.path.exists(path):
-            return base
-        return base.union(self.spark.read.parquet(path).select("id", "uri"))
+        return _with_deltas(super().dict(), self.stream_dir, "dict")
 
     def properties(self) -> DataFrame:
-        base = super().properties()
-        path = os.path.join(self.stream_dir, "properties")
-        if not os.path.exists(path):
-            return base
-        return base.union(self.spark.read.parquet(path).select("id", "uri"))
+        return _with_deltas(super().properties(), self.stream_dir, "properties")
 
     def stats(self) -> DataFrame:
         # tombstoned rows are NOT subtracted: the merged stats are upper
@@ -629,7 +643,7 @@ class StreamedGraphStore(GraphStore):
         if not os.path.exists(os.path.join(self.stream_dir, "triples")):
             return base
         tail = (
-            self.spark.read.parquet(os.path.join(self.stream_dir, "triples"))
+            read_table(self.spark, self.stream_dir, "triples")
             .groupBy("p")
             .agg(
                 F.count("*").alias("n"),
@@ -668,21 +682,13 @@ def combined_dict(store, stream_dir: str) -> DataFrame:
     each epoch's delta against base + all prior epochs, so a plain union is
     a set union and decode joins through it never fan out rows.
     """
-    base = store.dict()
-    path = os.path.join(stream_dir, "dict")
-    if not os.path.exists(path):
-        return base
-    return base.union(store.spark.read.parquet(path).select("id", "uri"))
+    return _with_deltas(store.dict(), stream_dir, "dict")
 
 
 def combined_properties(store, stream_dir: str) -> DataFrame:
     """Base predicate catalog + streamed predicate additions (duplicate-free
     by the same per-epoch anti-join construction as :func:`combined_dict`)."""
-    base = store.properties()
-    path = os.path.join(stream_dir, "properties")
-    if not os.path.exists(path):
-        return base
-    return base.union(store.spark.read.parquet(path).select("id", "uri"))
+    return _with_deltas(store.properties(), stream_dir, "properties")
 
 
 def stateful_entity_counts(docs_stream: DataFrame):

@@ -1,3 +1,6 @@
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
 from parj_spark.session import get_spark
@@ -24,3 +27,21 @@ def tiny_graph(spark, tiny_corpus, tmp_path_factory):
     docs, _ = tiny_corpus
     out = str(tmp_path_factory.mktemp("graph"))
     return run_pipeline(spark, docs, out, resume=True)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` — ``ids()`` lists the Spark jobs this
+    thread submitted inside the block (tracked through a job group)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def track():
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            yield lambda: list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc._jsc.clearJobGroup()
+
+    return track

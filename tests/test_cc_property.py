@@ -87,3 +87,19 @@ def test_cc_local_path_deep_chain_and_gate_boundary(spark):
     assert {r["node"]: r["component"] for r in local.collect()} == oracle
     dist, _ = connected_components(df, collect_below=len(edges) - 1)
     assert {r["node"]: r["component"] for r in dist.collect()} == oracle
+
+
+def test_cc_null_endpoint_same_labels_on_both_paths(spark):
+    # an edge with a null endpoint links nothing: the driver-local solver
+    # must not merge it into another component (pandas codes null as -1),
+    # and the distributed loop must not emit a null node
+    from parj_spark.construct.canonicalize import LOCAL_CC_EDGES
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("c", None), ("d", "e")], "src string, dst string"
+    )
+    got = []
+    for gate in (LOCAL_CC_EDGES, 0):
+        labels, _ = connected_components(df, collect_below=gate)
+        got.append({r["node"]: r["component"] for r in labels.collect()})
+    assert got[0] == got[1] == {"a": "a", "b": "a", "d": "d", "e": "d"}

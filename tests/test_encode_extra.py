@@ -18,6 +18,17 @@ def test_hash_ids_deterministic_and_unique(spark, tiny_graph):
     assert enc.count() == triples.count()
 
 
+def test_hash_ids_dictionary_is_lazy(spark, tiny_graph, tmp_path, spark_jobs):
+    """The hash-id dictionary needs no size gate: building it submits no
+    Spark job until its result is written."""
+    triples = tiny_graph.triples_uri()
+    with spark_jobs() as jobs:
+        d = encode.build_dictionary(triples, hash_ids=True)
+        assert jobs() == []
+        d.write.parquet(str(tmp_path / "dict"))
+        assert jobs()
+
+
 def test_dense_ids_order_follows_sort(spark):
     terms = spark.createDataFrame(
         [("b",), ("a",), ("c",), ("a",)], ["uri"]

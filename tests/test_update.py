@@ -259,3 +259,52 @@ def test_store_update_where_over_live_view(spark, tiny_graph, tmp_path):
     )
     rows = _rows(_decoded(live))
     assert ("ub:X_1", "ub:reach", "ub:X_3") in rows
+
+
+def _epoch_dirs(stream_dir):
+    return {
+        (kind, e)
+        for kind in os.listdir(stream_dir)
+        for e in os.listdir(os.path.join(stream_dir, kind))
+        if e.startswith("epoch=")
+    }
+
+
+def test_store_update_single_insert_path(spark, tiny_graph, tmp_path):
+    """Inserts go through append_epoch's alive-set guard alone: in one
+    request an already-present (or repeated) triple stays single, a triple
+    tombstoned by the request's earlier op is re-inserted, and a new
+    predicate and term are catalogued — the live view equals the batch
+    path, row for row. A request whose inserts all exist (or whose deletes
+    match nothing) leaves no epoch dir behind."""
+    stream_dir = str(tmp_path / "stream")
+    base = sorted(_rows(_decoded(tiny_graph)))
+    present = next(r for r in base if r[1] == "ub:memberOf")
+    moved = next(r for r in base if r[1] == "ub:advisor")
+    fresh = ("ub:Brand_New_1", "ub:brandNewPred", moved[2])
+
+    def data(*triples):
+        return " . ".join(" ".join(f"<{t}>" for t in r) for r in triples)
+
+    text = (
+        PRO
+        + "DELETE { ?s ub:advisor ?o } INSERT { ?s ub:advisedBy ?o } "
+        "WHERE { ?s ub:advisor ?o } ; "
+        f"INSERT DATA {{ {data(present, moved, fresh, fresh)} }}"
+    )
+    expected = _rows(apply_update_on_triples(_decoded(tiny_graph), text))
+    assert {present, moved, fresh} <= expected
+    live = apply_update(tiny_graph, stream_dir, text)
+    assert _rows(_decoded(live)) == expected
+    assert _decoded(live).count() == len(expected)
+
+    before = _epoch_dirs(stream_dir)
+    live = apply_update(
+        tiny_graph, stream_dir,
+        PRO
+        + f"INSERT DATA {{ {data(present, moved, fresh)} }} ; "
+        "INSERT { ?s ub:advisedBy ?o } WHERE { ?s ub:advisedBy ?o } ; "
+        "DELETE DATA { <ub:Nobody_1> <ub:advisor> <ub:Nobody_2> }",
+    )
+    assert _epoch_dirs(stream_dir) == before
+    assert _rows(_decoded(live)) == expected
