@@ -77,7 +77,10 @@ def _dense_ids(terms: DataFrame, col: str, local_below: int = 1_000_000) -> Data
     """
     from pyspark.sql import Window
 
-    dedup = terms.select(F.col(col).alias("uri")).distinct()
+    # a null term names nothing: drop it before either path, so the local
+    # sort (nulls last) and the distributed range sort (nulls first) rank
+    # the same set
+    dedup = terms.select(F.col(col).alias("uri")).dropna().distinct()
     if local_below and local_below > 0:
         head = dedup.limit(local_below + 1).toPandas()
         if len(head) <= local_below:

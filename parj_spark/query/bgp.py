@@ -22,6 +22,16 @@ pattern reads the OSP table when its object is bound (global o-sort gives
 parquet range pruning) and the SPO table otherwise. Predicate ids live in
 their own dense space (the properties catalog, not the term dictionary), so
 a variable may not appear in both predicate and subject/object position.
+
+SPARQL is lowered once, like the reference's one DagCreator → SQL path:
+:class:`GraphAccess` holds the only algebra lowering (UNION, OPTIONAL,
+MINUS, EXISTS, VALUES, BIND, subqueries, SERVICE, FILTER, aggregates, the
+query forms, solution modifiers) and the only property-path evaluator,
+and reaches its graph through a handful of primitives — join a pattern
+list, resolve constants, decode or encode named columns, the edge relation
+paths walk. :class:`BGPEngine` implements them over the encoded
+permutation tables; ``sparql.TripleAccess`` over a string triple relation
+(:func:`~parj_spark.query.sparql.execute_on_triples`).
 """
 
 from __future__ import annotations
@@ -135,7 +145,913 @@ def parse_bgp(text: str) -> list[Pattern]:
     return pats
 
 
-class BGPEngine:
+class GraphAccess:
+    """The one SPARQL lowering, over whatever graph a subclass gives it.
+
+    :meth:`_sparql_query` lowers a parsed ``SparqlQuery`` (core BGP, UNION,
+    SERVICE, subqueries, VALUES, OPTIONAL, MINUS, [NOT] EXISTS, FILTER,
+    BIND, the ASK/CONSTRUCT/DESCRIBE forms, aggregates and the solution
+    modifiers) and :meth:`_path_rel` evaluates property paths. Both reach
+    the graph only through these primitives, which a subclass supplies:
+
+    - ``_bgp(patterns)``: the joined solutions of a pattern list;
+      ``_block(group, terms)`` an OPTIONAL block's, or None when it can
+      match nothing; ``_check_var_spaces(patterns)`` rejects what the
+      graph cannot join.
+    - ``_resolve(patterns)``: the constants of an OPTIONAL block, ready
+      for ``_block``; ``_term_ids(terms)`` / ``_pred_id(term)``: constant
+      terms (predicates) as the graph's join keys.
+    - ``_decode_frame(df, pvars, only)``: named columns as term strings;
+      ``_encode(df, v, gated)``: a term-string column as a join key;
+      ``_with_term(df, v, pvars)``: ``v``'s term string as ``__lit_<v>``.
+    - ``_const_frame(term, col)`` and ``_described(ids)``: DESCRIBE's
+      resource constants and the outgoing edges of a resource set.
+    - ``_edges_all()``: the (s, p, o) relation property paths walk, with
+      terms of type ``TERM_TYPE``.
+
+    :class:`BGPEngine` implements them over the encoded permutation tables
+    (dictionary ids, stats-driven join order);
+    :class:`~parj_spark.query.sparql.TripleAccess` over a string triple
+    relation, where every term is its own id and decoding is a no-op.
+    """
+
+    MAX_PATH_DEPTH = 64
+    TERM_TYPE = "long"
+    # SERVICE name -> registered (s, p, o) string relation
+    services: dict = {}
+
+    def _closure_edges(self, edges: DataFrame) -> DataFrame:
+        """Distinct transitive closure of an (s, o) edge relation — the
+        SPARQL ``p+`` path, which the reference (BGP-only) cannot express.
+        Semi-naive iteration: each round extends only the previous round's
+        frontier by one edge and anti-joins away the already-known pairs,
+        so work is O(new pairs) per round, not O(closure) — the standard
+        Datalog delta evaluation, distributed. Lineage is cut with
+        localCheckpoint every round (self-referencing iterative joins grow
+        the logical plan multiplicatively — same discipline as
+        canonicalize.connected_components). The iteration runs actions at
+        plan-build time, so :meth:`_path_rel` caches its result."""
+        edges = edges.distinct().localCheckpoint()
+        paths = edges
+        frontier = edges
+        for _ in range(self.MAX_PATH_DEPTH):
+            ext = (
+                frontier.withColumnRenamed("o", "m")
+                .join(edges.withColumnRenamed("s", "m"), "m")
+                .select("s", "o")
+            )
+            frontier = (
+                ext.join(paths, ["s", "o"], "left_anti").distinct().localCheckpoint()
+            )
+            if frontier.isEmpty():
+                return paths
+            paths = paths.union(frontier).localCheckpoint()
+        raise RuntimeError(
+            f"property-path closure exceeded {self.MAX_PATH_DEPTH} hops"
+        )
+
+    def _nodes_rel(self) -> DataFrame:
+        """Zero-length path domain: every term occurring as subject or
+        object (SPARQL ZeroLengthPath over the graph's term set). One
+        distinct over the edge relation, cached for the access's lifetime —
+        at scale this is the graph's node set, which star/opt paths with
+        unbound endpoints inherently require."""
+        cached = self._closure_cache.get("__nodes__")
+        if cached is None:
+            t = self._edges_all()
+            cached = (
+                t.select(F.col("s").alias("n"))
+                .union(t.select(F.col("o").alias("n")))
+                .distinct()
+                .localCheckpoint()
+            )
+            self._closure_cache["__nodes__"] = cached
+        return cached
+
+    def _path_rel(self, path: Path) -> DataFrame:
+        """Evaluate a property path to its (s, o) pair relation,
+        recursively: link = the predicate's edge set, inv = swapped
+        columns, seq = joins o->s left to right, alt = bag union,
+        plus/star = distinct closure (star/opt add the zero-length
+        identity over the node domain). Relations are cached per path
+        shape for the access's lifetime."""
+        cached = self._closure_cache.get(path)
+        if cached is not None:
+            return cached
+        if path.op == "link":
+            pid = self._pred_id(path.parts[0])
+            df = (
+                self._edges_all()
+                .filter(F.col("p") == pid if pid is not None else F.lit(False))
+                .select("s", "o")
+            )
+        elif path.op == "inv":
+            df = self._path_rel(path.parts[0]).select(
+                F.col("o").alias("s"), F.col("s").alias("o")
+            )
+        elif path.op == "seq":
+            df = self._path_rel(path.parts[0])
+            for nxt in path.parts[1:]:
+                df = (
+                    df.withColumnRenamed("o", "m")
+                    .join(self._path_rel(nxt).withColumnRenamed("s", "m"), "m")
+                    .select("s", "o")
+                )
+        elif path.op == "alt":
+            df = self._path_rel(path.parts[0])
+            for nxt in path.parts[1:]:
+                df = df.unionByName(self._path_rel(nxt))
+        elif path.op == "negset":
+            # any single edge whose predicate is NOT in the listed set:
+            # scans every predicate partition except the excluded ones
+            # (partition pruning still drops the listed partitions)
+            pids = [i for i in map(self._pred_id, path.parts) if i is not None]
+            df = (
+                self._edges_all()
+                .filter(~F.col("p").isin(pids) if pids else F.lit(True))
+                .select("s", "o")
+            )
+        elif path.op == "plus":
+            df = self._closure_edges(self._path_rel(path.parts[0]))
+        elif path.op in ("star", "opt"):
+            zero = self._nodes_rel().select(
+                F.col("n").alias("s"), F.col("n").alias("o")
+            )
+            step = self._path_rel(path.parts[0])
+            if path.op == "star":
+                step = self._closure_edges(step)
+            df = step.unionByName(zero).distinct()
+        else:  # pragma: no cover - parser never emits other ops
+            raise ValueError(f"unknown path op {path.op!r}")
+        self._closure_cache[path] = df
+        return df
+
+    def _path_pairs(self, path: Path, anchor=None) -> DataFrame:
+        """The (s, o) relation a path pattern scans. ``anchor`` is the
+        pattern's constant endpoint (as a join key), if any: an anchored
+        zero-length form contributes just (c, c) — gated on c occurring in
+        the graph by a lazy limit(1) probe — so the whole-graph node-domain
+        distinct is never built for it."""
+        if path.op not in ("star", "opt") or anchor is None:
+            return self._path_rel(path)
+        # reuse the cached plus-closure for star (one fixpoint per access
+        # lifetime, like every other path relation)
+        step = self._path_rel(
+            Path("plus", (path.parts[0],)) if path.op == "star" else path.parts[0]
+        )
+        c = F.lit(anchor).cast(self.TERM_TYPE)
+        zero = (
+            self._edges_all()
+            .filter((F.col("s") == anchor) | (F.col("o") == anchor))
+            .limit(1)
+            .select(c.alias("s"), c.alias("o"))
+        )
+        return step.unionByName(zero).distinct()
+
+    def _apply_optional_groups(
+        self,
+        result: DataFrame,
+        opt_groups: list[list[Pattern]],
+        terms: dict,
+        literal: "frozenset[str] | set[str]" = frozenset(),
+        pvars: "frozenset[str] | set[str]" = frozenset(),
+        opt_filters: list | None = None,
+    ) -> DataFrame:
+        """Left-join each OPTIONAL block onto the accumulated solution set:
+        the block's patterns join each other first, then the assembled block
+        left-joins ``result``, so it matches as a whole or leaves all its
+        vars unbound (SPARQL group semantics).
+
+        Placement contract: in the SPARQL path this runs AFTER every
+        binding join (core BGP ⋈ UNION ⋈ SERVICE ⋈ subquery ⋈ VALUES) —
+        the group-element normal form documented on SparqlQuery — so no
+        equi-join downstream ever sees a possibly-unbound (null) key. The
+        differential fuzzer found the old order (OPTIONAL inside the core
+        query(), UNION joined after) null-dropping solutions whose
+        OPTIONAL var a UNION group shares: SPARQL's compatibility join
+        treats unbound as joining-with-anything, which a plain equi-join
+        on a null key silently violates.
+
+        ``literal`` names result columns already holding decoded term
+        strings (constant-FILTER rebinds, subquery ride-alongs): a block
+        var shared with one decodes ON THE BLOCK SIDE before the join —
+        the same probe-side decode the MINUS/EXISTS paths apply — so the
+        join compares strings to strings instead of casting a term string
+        to a long key (which threw at runtime before r5).
+        ``opt_filters`` holds each block's scoped FILTER expressions
+        (SPARQL LeftJoin(G, P, E), E over P's vars), applied to the
+        block's ENCODED frame before the left join via
+        _filter_group_frame."""
+        for gi, group in enumerate(opt_groups):
+            gdf = self._block(group, terms)
+            # None = a group pattern with an unknown constant matches nothing
+            dead = gdf is None
+            group_vars = sorted({v for p in group for v in p.vars()})
+            if dead:
+                for v in group_vars:
+                    if v not in result.columns:
+                        result = result.withColumn(v, F.lit(None).cast("long"))
+                continue
+            if "__exists" in gdf.columns:
+                gdf = gdf.drop("__exists")
+            if opt_filters and gi < len(opt_filters) and opt_filters[gi]:
+                gdf = self._filter_group_frame(
+                    gdf, opt_filters[gi], group, pvars
+                )
+            if not gdf.columns:
+                continue  # fully-bound block binds nothing
+            shared = sorted(set(result.columns) & set(gdf.columns))
+            lit_shared = [v for v in shared if v in literal]
+            if lit_shared:
+                gpv = {v for p in group for v in [p.pred_var()] if v}
+                cols = list(gdf.columns)
+                gdf = self._decode_frame(
+                    gdf, set(pvars) | gpv, only=lit_shared
+                ).select(*cols)
+            # no shared vars: constant-true left join preserves core rows
+            # even when the optional side is empty (crossJoin annihilates)
+            result = (
+                result.join(gdf, on=shared, how="left")
+                if shared
+                else result.join(gdf, F.lit(True), "left")
+            )
+        return result
+
+    def _filter_group_frame(
+        self,
+        gdf: DataFrame,
+        gfs: list,
+        group: list[Pattern],
+        pvars: "frozenset[str] | set[str]",
+    ) -> DataFrame:
+        """Apply block-scoped FILTERs to an OPTIONAL / MINUS / EXISTS
+        group's ENCODED frame.
+
+        Same two-tier lowering as the top-level FILTER path: id-lowerable
+        forms (=/!=/IN/BOUND over vars and constant terms) prune on join
+        keys after a pruned driver-side constant lookup; the rest decode
+        ONLY the referenced vars into throwaway ``__lit_*`` columns so the
+        block's join keys stay encoded for the join that follows."""
+        from parj_spark.query.sparql import filter_to_column, filter_vars
+
+        gpv = {v for p in group for v in [p.pred_var()] if v} | set(pvars)
+        cols = set(gdf.columns)
+        lowerable, rest, ent_consts = [], [], set()
+        for fexpr in gfs:
+            plan = self._filter_id_plan(fexpr, cols, set(), gpv)
+            if plan is None:
+                rest.append(fexpr)
+            else:
+                lowerable.append(fexpr)
+                ent_consts |= plan[0]
+        if lowerable:
+            ent_ids = self._term_ids(ent_consts)
+            for fexpr in lowerable:
+                gdf = gdf.filter(self._filter_id_column(fexpr, ent_ids, gpv))
+        if rest:
+            refs = sorted({v for fexpr in rest for v in filter_vars(fexpr)} & cols)
+            for v in refs:
+                gdf = self._with_term(gdf, v, gpv)
+            for fexpr in rest:
+                gdf = gdf.filter(
+                    filter_to_column(fexpr, lambda n: F.col(f"__lit_{n}"))
+                )
+            gdf = gdf.drop(*[f"__lit_{v}" for v in refs])
+        return gdf
+
+    # --- FILTER lowering onto encoded ids ------------------------------
+    def _filter_id_plan(self, e, cols: set[str], literal: set[str], pvars: set[str]):
+        """If FILTER expression ``e`` can evaluate on ENCODED ids, return
+        (entity_consts, pred_consts) — the constant terms it needs resolved
+        — else None. Lowerable: =/!= between vars and/or literal terms,
+        [NOT] IN over literal terms, BOUND, and NOT/&&/|| compositions of
+        those: for these shapes term comparison IS dictionary-id comparison
+        (the dictionary is a bijection), so the filter prunes on longs
+        BEFORE any decode join (the reference's decode-outputs-last rule,
+        QueryTester.java:189-223, extended to FILTER). Numeric comparisons,
+        regex and string functions need the decoded term — not lowerable.
+        Mixed predicate/entity-var comparisons are refused (the two id
+        spaces are separate catalogs)."""
+        from parj_spark.query import sparql as S
+
+        if isinstance(e, S.Comparison):
+            if e.op not in ("=", "!="):
+                return None
+            if not (isinstance(e.lhs, tuple) and isinstance(e.rhs, tuple)):
+                # BIND-grammar operand (arithmetic/CONCAT/IF/COALESCE):
+                # needs the decoded term value, not lowerable onto ids
+                return None
+            vs = [t for t in (e.lhs, e.rhs) if t[0] == "var"]
+            if not vs:
+                return None
+            for t in vs:
+                if t[1] in literal or t[1] not in cols:
+                    return None
+            kinds = {t[1] in pvars for t in vs}
+            if len(kinds) > 1:
+                return None
+            is_pred = kinds.pop()
+            ent, pred = set(), set()
+            for t in (e.lhs, e.rhs):
+                if t[0] == "lit":
+                    (pred if is_pred else ent).add(t[1])
+                elif t[0] != "var":
+                    return None
+            return ent, pred
+        if isinstance(e, S.Bound):
+            if e.var in cols and e.var not in literal:
+                return set(), set()
+            return None
+        if isinstance(e, S.InList):
+            if e.arg[0] != "var" or e.arg[1] in literal or e.arg[1] not in cols:
+                return None
+            if any(v[0] != "lit" for v in e.values):
+                return None
+            vals = {v[1] for v in e.values}
+            if e.arg[1] in pvars:
+                return set(), vals
+            return vals, set()
+        if isinstance(e, S.Not):
+            return self._filter_id_plan(e.expr, cols, literal, pvars)
+        if isinstance(e, (S.And, S.Or)):
+            ent, pred = set(), set()
+            for p in e.parts:
+                c = self._filter_id_plan(p, cols, literal, pvars)
+                if c is None:
+                    return None
+                ent |= c[0]
+                pred |= c[1]
+            return ent, pred
+        return None
+
+    def _filter_id_column(self, e, ent_ids: dict, pvars: set[str]):
+        """Compile an id-lowerable FILTER expression (see _filter_id_plan)
+        to a Column over the ENCODED solution columns. ``ent_ids`` maps
+        resolved entity terms to ids; terms absent from the dictionary can
+        match nothing, compiled null-exactly (when(bound, const)) so
+        OPTIONAL-null rows still drop under NOT per SPARQL's
+        evaluation-error-is-false rule."""
+        from parj_spark.query import sparql as S
+
+        def const_when_bound(var_col, value: bool):
+            return F.when(var_col.isNotNull(), F.lit(value))
+
+        if isinstance(e, S.Comparison):
+            vs = [t for t in (e.lhs, e.rhs) if t[0] == "var"]
+            is_pred = vs[0][1] in pvars
+
+            def resolve(t):
+                if t[0] == "var":
+                    return F.col(t[1])
+                tid = self._pred_id(t[1]) if is_pred else ent_ids.get(t[1])
+                return None if tid is None else F.lit(tid)
+
+            l, r = resolve(e.lhs), resolve(e.rhs)
+            if l is None or r is None:
+                # absent term: '=' can never hold, '!=' holds for every
+                # BOUND value (null rows still error out to null)
+                return const_when_bound(F.col(vs[0][1]), e.op == "!=")
+            return (l == r) if e.op == "=" else (l != r)
+        if isinstance(e, S.Bound):
+            return F.col(e.var).isNotNull()
+        if isinstance(e, S.InList):
+            is_pred = e.arg[1] in pvars
+            ids = [
+                (self._pred_id(v[1]) if is_pred else ent_ids.get(v[1]))
+                for v in e.values
+            ]
+            ids = [i for i in ids if i is not None]
+            c = F.col(e.arg[1])
+            if not ids:
+                return const_when_bound(c, e.negated)
+            m = c.isin(ids)
+            return ~m if e.negated else m
+        if isinstance(e, S.Not):
+            return ~self._filter_id_column(e.expr, ent_ids, pvars)
+        parts = [self._filter_id_column(p, ent_ids, pvars) for p in e.parts]
+        out = parts[0]
+        for p in parts[1:]:
+            out = (out & p) if isinstance(e, S.And) else (out | p)
+        return out
+
+    def _propagate_const_filters(self, q):
+        """Sideways information passing for constant equality: a top-level
+        ``FILTER(?v = "term")`` (or single-member ``IN``) conjunct whose var
+        appears ONLY in the core BGP's s/o slots binds ?v BEFORE planning —
+        the pattern slot becomes a constant term, so the planner sees the
+        true point-lookup selectivity (orientation choice, bucket/row-group
+        pruning, join order seeded from the selective pattern) instead of
+        discovering the constant only as a Catalyst pushdown after the join
+        tree is fixed. The reference gets this for free because constants
+        can only arrive inside the query string (DagCreator.java builds
+        access paths from the triple's bound slots); the rewrite puts
+        FILTER constants on equal footing. ?v re-surfaces as a constant
+        literal column after the core compose, so projection/ORDER
+        BY/other filters see it unchanged. A term absent from the
+        dictionary yields the empty result through the ordinary
+        constant-resolution path — identical to '=' error semantics.
+
+        Vars referenced anywhere else (OPTIONAL/UNION/MINUS/EXISTS/VALUES/
+        BIND/CONSTRUCT/DESCRIBE/GRAPH slots/subquery projections/predicate
+        position) are left to the post-compose id-lowered filter — the
+        rewrite must not change group semantics, only access paths.
+        Returns (q', [(var, term), ...]); ``q`` itself is not mutated."""
+        import dataclasses
+
+        from parj_spark.query import sparql as S
+
+        if not q.filters or not q.patterns:
+            return q, []
+
+        blocked: set[str] = set()
+
+        def block_pats(pats):
+            for p in pats:
+                for t in (p.s, p.o):
+                    if _is_var(t):
+                        blocked.add(t[1:])
+                pv = p.pred_var()
+                if pv:
+                    blocked.add(pv)
+                if p.g is not None and _is_var(p.g):
+                    blocked.add(p.g[1:])
+
+        for grp in q.optional:
+            block_pats(grp)
+        for grp in q.unions:
+            for alt in grp:
+                block_pats(alt)
+        for grp in q.minus:
+            block_pats(grp)
+        for _, grp in q.exists:
+            block_pats(grp)
+        for _, _, grp in q.services:
+            block_pats(grp)
+        for vars_, _ in q.values:
+            blocked.update(vars_)
+        for expr, alias in q.binds:
+            blocked.add(alias)
+            blocked.update(S.bind_vars(expr))
+        if q.construct is not None:
+            block_pats(q.construct)
+        if q.describe is not None:
+            blocked.update(t[1:] for t in q.describe if t.startswith("?"))
+        for sub in q.subqueries:
+            if sub.select is None:
+                return q, []  # SELECT * projection: can't bound its vars
+            blocked.update(sub.select)
+            blocked.update(a.alias for a in sub.aggregates)
+        for p in q.patterns:  # predicate/GRAPH position in the core itself
+            pv = p.pred_var()
+            if pv:
+                blocked.add(pv)
+            if p.g is not None and _is_var(p.g):
+                blocked.add(p.g[1:])
+        core_vars = {
+            t[1:] for p in q.patterns for t in (p.s, p.o) if _is_var(t)
+        }
+
+        def eq_const(f):
+            if (
+                isinstance(f, S.Comparison)
+                and f.op == "="
+                and isinstance(f.lhs, tuple)
+                and isinstance(f.rhs, tuple)
+            ):
+                vs = [t for t in (f.lhs, f.rhs) if t[0] == "var"]
+                ls = [t for t in (f.lhs, f.rhs) if t[0] == "lit"]
+                if len(vs) == 1 and len(ls) == 1:
+                    return vs[0][1], ls[0][1]
+            if (
+                isinstance(f, S.InList)
+                and not f.negated
+                and f.arg[0] == "var"
+                and len(f.values) == 1
+                and f.values[0][0] == "lit"
+            ):
+                return f.arg[1], f.values[0][1]
+            return None
+
+        sub: dict[str, str] = {}
+        kept = []
+        for f in q.filters:
+            hit = eq_const(f)
+            if (
+                hit is not None
+                and hit[0] in core_vars
+                and hit[0] not in blocked
+                and hit[0] not in sub
+            ):
+                sub[hit[0]] = hit[1]
+            else:
+                kept.append(f)
+        if not sub:
+            return q, []
+
+        def slot(t):
+            return sub[t[1:]] if _is_var(t) and t[1:] in sub else t
+
+        pats = [
+            dataclasses.replace(p, s=slot(p.s), o=slot(p.o))
+            for p in q.patterns
+        ]
+        return dataclasses.replace(q, patterns=pats, filters=kept), sorted(
+            sub.items()
+        )
+
+    def _sparql_query(self, q, decode: bool) -> DataFrame:
+        """Lower one parsed (sub)query — recursive for nested ``{ SELECT }``
+        groups, in the group-element normal form documented on SparqlQuery:
+        core BGP ⋈ UNION ⋈ SERVICE ⋈ subquery ⋈ VALUES, then OPTIONAL
+        left joins, MINUS / EXISTS, FILTER / BIND, the query form and the
+        solution modifiers."""
+        from parj_spark.query.sparql import (
+            agg_value_vars,
+            aggregate_columns,
+            bind_to_column,
+            bind_vars,
+            filter_to_column,
+            filter_vars,
+            order_columns,
+            order_vars,
+        )
+
+        # `literal` tracks solution columns that hold FINAL values (decoded
+        # terms, BIND outputs, subquery aggregates) instead of join keys.
+        # Everything else stays encoded until the last possible moment —
+        # joins, MINUS/EXISTS probes, id-lowerable FILTERs and hash
+        # aggregates all run on keys (the reference's decode-outputs-last
+        # rule, QueryTester.java:189-223)
+        literal: set[str] = set()
+        order_cols = order_columns(q.order_by) or None
+        if q.filters and not decode:
+            raise ValueError(
+                "FILTER expressions compare decoded term values; "
+                "sparql(..., filters=True) requires decode=True"
+            )
+        # sideways information passing: constant-equality FILTERs over
+        # core-BGP-only vars bind the pattern slot BEFORE planning (point
+        # lookup + true selectivity); the vars re-surface as constant
+        # literal columns right after the compose
+        q, const_binds = self._propagate_const_filters(q)
+        # run the core BGP and every UNION alternative ENCODED so all joins
+        # happen on join keys — decoding each sub-BGP separately would both
+        # repeat the dictionary join per alternative and shuffle term
+        # strings instead of longs; decode once at the end. OPTIONAL groups
+        # do NOT join here: they left-join AFTER the UNION/SERVICE/
+        # subquery/VALUES binding joins (see _apply_optional_groups's
+        # placement contract), so a var those elements share with an
+        # OPTIONAL block is never a possibly-null equi-join key.
+        opt_pats = [p for g in q.optional for p in g]
+        if opt_pats:
+            self._check_var_spaces(list(q.patterns) + opt_pats)
+        result = self._bgp(q.patterns) if q.patterns else None
+        for v, term in const_binds:
+            result = result.withColumn(v, F.lit(term))
+            literal.add(v)
+
+        def join(result, df):
+            if result is None:
+                return df
+            shared = sorted(set(result.columns) & set(df.columns))
+            return result.join(df, on=shared) if shared else result.crossJoin(df)
+
+        for grp in q.unions:
+            # alternatives bind the same vars (parse-enforced) -> a plain
+            # column-aligned union, then an equi-join with the core BGP
+            u = self._bgp(grp[0])
+            for alt in grp[1:]:
+                u = u.unionByName(self._bgp(alt))
+            result = join(result, u)
+        for silent, name, spats in q.services:
+            # SERVICE: the block's BGP over the caller-registered relation
+            # (a federation seam, not a network call); the cross-dataset
+            # join is a plain Spark join
+            rel = self.services.get(name)
+            if rel is not None:
+                from parj_spark.query.sparql import TripleAccess
+
+                result = join(result, TripleAccess(rel.select("s", "p", "o"))._bgp(spats))
+                continue
+            if not silent:
+                raise ValueError(
+                    f"SERVICE {name!r} is not registered "
+                    "(pass services={name: DataFrame})"
+                )
+            # SERVICE SILENT failure = the single empty solution: it joins
+            # as identity and leaves the block's variables unbound (null),
+            # so projections still resolve
+            svars = sorted(
+                {v for p in spats for v in p.vars() if not v.startswith("__bn")}
+            )
+            nul = F.lit(None).cast("string")
+            if result is None:
+                result = self.spark.range(1).select(*[nul.alias(v) for v in svars])
+            for v in svars:
+                if v not in result.columns:
+                    result = result.withColumn(v, nul)
+        all_pats = (
+            list(q.patterns)
+            + opt_pats
+            + [p for grp in q.unions for alt in grp for p in alt]
+        )
+        pvars = {v for p in all_pats for v in [p.pred_var()] if v}
+        for sub in q.subqueries:
+            # nested SELECT: its own lowering (recursively). The subquery
+            # surfaces decoded term strings (its own contract), but the
+            # enclosing group must keep joining on keys — so shared
+            # projected vars are encoded BACK at the boundary and only the
+            # subquery's non-shared outputs (typically aggregates) ride
+            # along as literal columns.
+            sdf = self._sparql_query(sub, decode=True)
+            if result is None:
+                result = sdf
+                literal.update(sdf.columns)
+                continue
+            shared = sorted(set(result.columns) & set(sdf.columns))
+            for v in shared:
+                if v not in literal:  # both sides literal -> join on values
+                    sdf = self._encode(sdf, v)
+            literal.update(set(sdf.columns) - set(shared))
+            result = join(result, sdf)
+        for vars_, rows in q.values:
+            # VALUES inline bindings, joined on ENCODED keys: join-key terms
+            # of the tiny literal relation encode first (terms absent from
+            # the graph bind nothing there, per inner-join semantics), so
+            # the constraint prunes the core join on keys instead of waiting
+            # for the decoded strings. Vars the solution set does NOT
+            # already bind ride along as literal string columns (they key
+            # nothing — and a term outside the graph still binds, per
+            # SPARQL, which an id could not carry). UNDEF rows group by
+            # their bound-variable mask: each mask joins on its own shared
+            # vars and the branches union — every row lives in exactly one
+            # mask, so the union IS SPARQL's compatibility (multiset) join.
+            rcols = set(result.columns) if result is not None else set()
+            ride = [v for v in vars_ if v not in rcols]
+            by_mask: dict = {}
+            for r in rows:
+                mask = tuple(v for v, t in zip(vars_, r) if t is not None)
+                by_mask.setdefault(mask, []).append(
+                    tuple(t for t in r if t is not None)
+                )
+            branches = []
+            for mask, mrows in sorted(by_mask.items()):
+                if mask:
+                    vdf = self.spark.createDataFrame(
+                        mrows, schema=", ".join(f"{v} string" for v in mask)
+                    )
+                    for v in mask:
+                        if v in rcols and v not in literal:
+                            vdf = self._encode(vdf, v, gated=False)
+                else:
+                    # all-UNDEF rows constrain nothing: k of them multiply
+                    # every solution k times (bag semantics)
+                    vdf = self.spark.range(len(mrows)).select(
+                        F.lit(1).alias("__dup")
+                    )
+                if result is None:
+                    br = vdf
+                else:
+                    shared = sorted(rcols & set(vdf.columns))
+                    br = (
+                        result.join(F.broadcast(vdf), on=shared)
+                        if shared
+                        else result.crossJoin(F.broadcast(vdf))
+                    )
+                if "__dup" in br.columns:
+                    br = br.drop("__dup")
+                for v in ride:
+                    if v not in br.columns:
+                        br = br.withColumn(v, F.lit(None).cast("string"))
+                branches.append(br)
+            new = branches[0]
+            for b in branches[1:]:
+                new = new.unionByName(b)
+            result = new
+            literal.update(ride)
+        if q.optional:
+            # OPTIONAL left-joins the fully-composed binding set (core ⋈
+            # UNION ⋈ SERVICE ⋈ subquery ⋈ VALUES) in typical document
+            # order. The core join neither resolved this block's constants
+            # nor hydrated its predicates' stats, so _resolve does both.
+            if result is None:
+                raise ValueError("OPTIONAL without a core BGP is not supported")
+            result = self._apply_optional_groups(
+                result,
+                [list(g) for g in q.optional],
+                self._resolve(opt_pats),
+                literal=literal,
+                pvars=pvars,
+                opt_filters=q.optional_filters,
+            )
+
+        def block_frame(group, gfs):
+            """A MINUS / EXISTS block's ENCODED frame, pre-filtered by its
+            scoped FILTERs (exact per spec: a MINUS block never sees outer
+            bindings; for EXISTS the join equates the shared vars)."""
+            gdf = self._bgp(group)
+            if gfs:
+                gdf = self._filter_group_frame(gdf, gfs, group, pvars)
+            return gdf
+
+        def probe_side(gdf, group, shared):
+            """Decode the block's shared vars that are literal on the
+            solution side, so the probe compares like with like."""
+            lit_shared = [v for v in shared if v in literal]
+            if not lit_shared:
+                return gdf
+            gpv = {v for p in group for v in [p.pred_var()] if v}
+            cols = list(gdf.columns)
+            return self._decode_frame(gdf, pvars | gpv, only=lit_shared).select(*cols)
+
+        for gi, group in enumerate(q.minus):
+            # MINUS on encoded keys BEFORE decode: the anti-join probes
+            # keys (same plan shape as the reference-parity semi/anti ops),
+            # and removed rows never pay the dictionary join. A block with
+            # no shared variable removes nothing (SPARQL disjoint-domain
+            # rule) — skipped, since anti-joining on no keys annihilates.
+            mdf = block_frame(group, q.minus_filters[gi] if gi < len(q.minus_filters) else None)
+            shared = sorted(set(result.columns) & set(mdf.columns))
+            if shared:
+                mdf = probe_side(mdf, group, shared)
+                result = result.join(mdf, on=shared, how="left_anti")
+        for gi, (positive, group) in enumerate(q.exists):
+            # FILTER [NOT] EXISTS on encoded keys (same placement rationale
+            # as MINUS); a no-shared-variable block gates globally via a
+            # constant-true semi/anti join against the block's first row.
+            gdf = block_frame(group, q.exists_filters[gi] if gi < len(q.exists_filters) else None)
+            shared = sorted(set(result.columns) & set(gdf.columns))
+            how = "left_semi" if positive else "left_anti"
+            if shared:
+                gdf = probe_side(gdf, group, shared)
+                result = result.join(gdf, on=shared, how=how)
+            else:
+                result = result.join(gdf.limit(1), F.lit(True), how)
+
+        def decode_cols(df: DataFrame, cols) -> DataFrame:
+            """Decode the named columns in place (order preserved), skip
+            ones already literal, and record them as literal."""
+            todo = [c for c in cols if c in df.columns and c not in literal]
+            if not todo:
+                return df
+            order = list(df.columns)
+            out = self._decode_frame(df, pvars, only=todo).select(*order)
+            literal.update(todo)
+            return out
+
+        # split FILTERs: id-lowerable ones (=/!=/IN/BOUND over vars and
+        # constant terms) prune the ENCODED solution set — constants
+        # resolve to join keys driver-side in one pruned point-lookup
+        # job — and the rest evaluate on decoded strings after decoding
+        # ONLY the vars they reference.
+        str_filters = list(q.filters)
+        if q.filters and result is not None:
+            lowerable, rest, ent_consts = [], [], set()
+            rcols = set(result.columns)
+            for fexpr in q.filters:
+                plan = self._filter_id_plan(fexpr, rcols, literal, pvars)
+                if plan is None:
+                    rest.append(fexpr)
+                else:
+                    lowerable.append(fexpr)
+                    ent_consts |= plan[0]
+            ent_ids = self._term_ids(ent_consts)
+            for fexpr in lowerable:
+                result = result.filter(
+                    self._filter_id_column(fexpr, ent_ids, pvars)
+                )
+            str_filters = rest
+        pre_vars = {v for fe in str_filters for v in filter_vars(fe)}
+        for expr, _ in q.binds:
+            pre_vars |= bind_vars(expr)
+        if result is not None and result.columns and pre_vars:
+            result = decode_cols(result, sorted(pre_vars))
+        for expr, v in q.binds:
+            # BIND(expr AS ?v): a computed column on the solution set, in
+            # document order (later binds may reference earlier targets),
+            # after ALL the group's joins — OPTIONAL blocks included, whose
+            # vars a bind/SELECT expression may reference
+            result = result.withColumn(v, bind_to_column(expr, F.col))
+            literal.add(v)
+        # FILTERs apply after OPTIONAL joins but before projection (their
+        # vars need not be selected); compiled to native Column predicates
+        for fexpr in str_filters:
+            result = result.filter(filter_to_column(fexpr, F.col))
+        # the remaining OUTPUT columns decode AFTER the filters have pruned
+        # — and only the columns the query actually surfaces (projection +
+        # ORDER BY keys + CONSTRUCT template vars): a var that is joined on
+        # but never output never pays a dictionary join at all.
+        # ASK/DESCRIBE/aggregates handle their own (late or no) decode.
+        if (
+            result is not None
+            and result.columns
+            and (
+                q.construct is not None
+                or (
+                    decode and not q.ask and q.describe is None
+                    and not q.aggregates
+                )
+            )
+        ):
+            if q.construct is not None:
+                need = {
+                    t[1:]
+                    for tp in q.construct
+                    for t in (tp.s, tp.p, tp.o)
+                    if _is_var(t)
+                }
+            elif q.select:
+                need = set(q.select) | order_vars(q.order_by)
+            else:
+                need = {c for c in result.columns if not c.startswith("__bn")}
+            result = decode_cols(result, sorted(need))
+        if q.ask:
+            # ASK: one row, one boolean — any solution exists? limit(1)
+            # before the aggregate makes it an existence probe (LocalLimit
+            # short-circuits each task's scan after the first solution)
+            # instead of a full count of every solution — the reference's
+            # first-solution semantics at plan level, not just result level.
+            return result.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
+        if q.construct is not None:
+            # CONSTRUCT over the decoded solution set: instantiate each
+            # template triple per solution, union, dedup (a result graph is
+            # a set of triples)
+            out = None
+            for tp in q.construct:
+                row = result.select(
+                    *(
+                        (F.col(t[1:]) if _is_var(t) else F.lit(t))
+                        .cast("string")  # a graph holds terms, not typed values
+                        .alias(c)
+                        for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
+                    )
+                )
+                out = row if out is None else out.unionByName(row)
+            return out.distinct()
+        if q.describe is not None:
+            # DESCRIBE: the distinct outgoing edges of the described
+            # resources (concise bounded description, one hop). The
+            # resource set is assembled on ENCODED keys — solution columns
+            # are keys unless FILTER/BIND forced an early decode, and
+            # constants resolve through the dictionary (pruned point
+            # lookups) — so the edge fetch is a semi-join on keys; the
+            # (usually small) result decodes at the end.
+            ids = None
+            for t in q.describe:
+                if t.startswith("?"):
+                    c = result.select(F.col(t[1:]).alias("rid")).distinct()
+                    if t[1:] in literal:  # term strings -> back to keys
+                        c = self._encode(c, "rid")
+                else:
+                    c = self._const_frame(t, "rid")
+                ids = c if ids is None else ids.unionByName(c)
+            edges = self._described(ids.distinct().withColumnRenamed("rid", "s"))
+            if decode:
+                edges = self._decode_frame(edges, pvars={"p"}).select("s", "p", "o")
+            return edges
+        if q.aggregates:
+            # GROUP BY + aggregates with SQL-oracle (varchar) value
+            # semantics, one hash aggregate, partial+final combine for free.
+            # Scale-critical placement: only the aggregate VALUE vars are
+            # decoded before grouping (SUM/AVG/MIN/MAX read term strings);
+            # the GROUP BY keys stay encoded through the shuffle and decode
+            # on the (small) aggregated output — the reference's
+            # decode-outputs-last rule (QueryTester.java:189-223) applied
+            # to the aggregate boundary. HAVING runs after the key decode,
+            # so its string comparisons see terms either way. decode_cols
+            # skips vars a FILTER/BIND already decoded, so a value var
+            # doubling as a group key simply groups on its decoded form.
+            if decode and result.columns:
+                value_vars = sorted(agg_value_vars(q.aggregates))
+                if value_vars:
+                    result = decode_cols(result, value_vars)
+            grouped = result.groupBy(*q.group_by) if q.group_by else result.groupBy()
+            result = grouped.agg(*aggregate_columns(q.aggregates))
+            literal.update(a.alias for a in q.aggregates)
+            if decode and q.group_by:
+                result = decode_cols(result, list(q.group_by))
+            for h in q.having:
+                result = result.filter(filter_to_column(h, F.col))
+            result = result.select(*((q.select or []) + [a.alias for a in q.aggregates]))
+        elif q.select:
+            result = result.select(*[c for c in q.select if c in result.columns])
+        else:
+            # SELECT *: blank-node anonymous vars join but never project
+            bn = [c for c in result.columns if c.startswith("__bn")]
+            if bn:
+                result = result.drop(*bn)
+        if q.distinct:
+            result = result.distinct()
+        if order_cols:
+            result = result.orderBy(*order_cols)
+        if q.offset is not None:
+            result = result.offset(q.offset)
+        if q.limit is not None:
+            result = result.limit(q.limit)
+        return result
+
+
+class BGPEngine(GraphAccess):
     """BGP executor over a GraphStore.
 
     ``bucketed_prefix``: which permutation-table layout joins read.
@@ -217,8 +1133,8 @@ class BGPEngine:
         self._hist_df = getattr(store, "histograms", lambda: None)()
         self._hists: dict[tuple[int, str], list[tuple[int, int, int, int]]] = {}
         self._hydrated_pids: set[int] = set()
-        # property-path relations, keyed by predicate id (p+ closures),
-        # Path tree (composite paths) or "__nodes__" (zero-length domain)
+        # property-path relations (GraphAccess._path_rel), keyed by Path
+        # tree or "__nodes__" (zero-length domain)
         self._closure_cache: dict = {}
 
         # T2 per-class stats (parj.c:338-364, MemoryStat.java:248-315):
@@ -304,13 +1220,86 @@ class BGPEngine:
             return self.spark.table(f"{self.bucketed_prefix}_{orientation}_b")
         return self.store.spo() if orientation == "spo" else self.store.pos()
 
-    # --- term resolution -----------------------------------------------
+    # --- term resolution and the other GraphAccess primitives -----------
     def _resolve_terms(self, patterns: list[Pattern]) -> dict[str, int]:
-        consts = {t for p in patterns for t in (p.s, p.o) if not _is_var(t)}
-        if not consts:
+        return self._term_ids(
+            {t for p in patterns for t in (p.s, p.o) if not _is_var(t)}
+        )
+
+    def _term_ids(self, terms) -> dict[str, int]:
+        """Dictionary ids of constant entity terms — one pruned point-lookup
+        job, none when there is no term; an absent term has no entry."""
+        if not terms:
             return {}
-        rows = self._dict.filter(F.col("uri").isin(list(consts))).collect()
+        rows = self._dict.filter(F.col("uri").isin(sorted(terms))).collect()
         return {r["uri"]: r["id"] for r in rows}
+
+    def _pred_id(self, term: str) -> int | None:
+        return self._props.get(term)
+
+    def _resolve(self, patterns: list[Pattern]) -> dict[str, int]:
+        self._hydrate(patterns)
+        return self._resolve_terms(patterns)
+
+    def _bgp(self, patterns: list[Pattern]) -> DataFrame:
+        return self.query(patterns, select=None, decode=False)
+
+    def _block(self, group: list[Pattern], terms: dict) -> DataFrame | None:
+        return self._compose_joins(
+            self._order(group, terms) if len(group) > 1 else list(group), terms
+        )
+
+    def _check_var_spaces(self, patterns: list[Pattern]) -> set[str]:
+        """Reject a variable used in both predicate and subject/object
+        position — predicate ids live in the properties catalog, entity
+        ids in the term dictionary, and joining across the two spaces is
+        invalid. Returns the predicate variables."""
+        pvars = {v for p in patterns for v in [p.pred_var()] if v}
+        evars = {v for p in patterns for v in p.entity_vars()}
+        if pvars & evars:
+            raise ValueError(
+                f"variable(s) used in both predicate and subject/object "
+                f"position: {sorted(pvars & evars)}"
+            )
+        return pvars
+
+    def _edges_all(self) -> DataFrame:
+        return self._table("spo")
+
+    def _term_frame(self, v: str, pvars) -> DataFrame:
+        """The (id, uri) catalog ``v`` decodes through: the (tiny,
+        broadcast) properties catalog for predicate vars, else the
+        size-gated term dictionary."""
+        if v in pvars:
+            return F.broadcast(self.store.properties())
+        return self._decode_dict()
+
+    def _with_term(self, df: DataFrame, v: str, pvars) -> DataFrame:
+        d = self._term_frame(v, pvars).select(
+            F.col("id").alias(v), F.col("uri").alias(f"__lit_{v}")
+        )
+        return df.join(d, v, "left")
+
+    def _encode(self, df: DataFrame, v: str, gated: bool = True) -> DataFrame:
+        """Resolve term-string column ``v`` back to dictionary ids (an inner
+        join: a term outside the graph matches nothing). ``gated`` joins
+        the size-gated broadcast dictionary, else the plain one."""
+        d = (self._decode_dict() if gated else self._dict).select(
+            F.col("uri").alias(v), F.col("id").alias(f"__{v}_id")
+        )
+        return df.join(d, v).drop(v).withColumnRenamed(f"__{v}_id", v)
+
+    def _const_frame(self, term: str, col: str) -> DataFrame:
+        return (
+            self._decode_dict()
+            .filter(F.col("uri") == term)
+            .select(F.col("id").alias(col))
+        )
+
+    def _described(self, ids: DataFrame) -> DataFrame:
+        # SPO is a set by construction and the semi-join preserves that,
+        # so no distinct is needed before or after decode
+        return self.store.spo().join(ids, "s", "left_semi").select("s", "p", "o")
 
     # --- planning --------------------------------------------------------
     def _catalog_sums(self) -> tuple[float, float, float]:
@@ -433,128 +1422,6 @@ class BGPEngine:
             n *= sel
         return n
 
-    MAX_PATH_DEPTH = 64
-
-    def _closure(self, pid: int) -> DataFrame:
-        """Distinct (s, o) pairs connected by one-or-more ``pid`` edges —
-        the SPARQL ``p+`` property path, which the reference (BGP-only)
-        cannot express at all. Semi-naive iteration: each round extends
-        only the previous round's frontier by one edge and anti-joins away
-        the already-known pairs, so work is O(new pairs) per round, not
-        O(closure) — the standard Datalog delta evaluation, distributed.
-        Lineage is cut with localCheckpoint every round (self-referencing
-        iterative joins grow the logical plan multiplicatively — same
-        discipline as canonicalize.connected_components). The computed
-        closure is cached per predicate for the engine's lifetime: the
-        iteration runs actions at plan-build time, so without the cache
-        every rep of a path query would recompute the fixpoint."""
-        cached = self._closure_cache.get(pid)
-        if cached is not None:
-            return cached
-        edges = self._table("spo").filter(F.col("p") == pid).select("s", "o")
-        paths = self._closure_edges(edges)
-        self._closure_cache[pid] = paths
-        return paths
-
-    def _closure_edges(self, edges: DataFrame) -> DataFrame:
-        """Distinct transitive closure of an arbitrary (s, o) edge relation
-        (the general-path twin of :meth:`_closure`; same semi-naive delta
-        iteration and per-round lineage cuts)."""
-        edges = edges.distinct().localCheckpoint()
-        paths = edges
-        frontier = edges
-        for _ in range(self.MAX_PATH_DEPTH):
-            ext = (
-                frontier.withColumnRenamed("o", "m")
-                .join(edges.withColumnRenamed("s", "m"), "m")
-                .select("s", "o")
-            )
-            frontier = (
-                ext.join(paths, ["s", "o"], "left_anti").distinct().localCheckpoint()
-            )
-            if frontier.isEmpty():
-                return paths
-            paths = paths.union(frontier).localCheckpoint()
-        raise RuntimeError(
-            f"property-path closure exceeded {self.MAX_PATH_DEPTH} hops"
-        )
-
-    def _nodes_rel(self) -> DataFrame:
-        """Zero-length path domain: every term id occurring as subject or
-        object (SPARQL ZeroLengthPath over the graph's term set). One
-        distinct over the SPO table, cached for the engine's lifetime —
-        at scale this is the graph's node set, which star/opt paths with
-        unbound endpoints inherently require."""
-        cached = self._closure_cache.get("__nodes__")
-        if cached is None:
-            t = self._table("spo")
-            cached = (
-                t.select(F.col("s").alias("n"))
-                .union(t.select(F.col("o").alias("n")))
-                .distinct()
-                .localCheckpoint()
-            )
-            self._closure_cache["__nodes__"] = cached
-        return cached
-
-    def _path_rel(self, path: Path) -> DataFrame:
-        """Evaluate a composite property path to its (s, o) pair relation
-        over encoded ids, recursively: link = the predicate's edge set,
-        inv = swapped columns, seq = joins o->s left to right, alt = bag
-        union, plus/star = distinct closure (star/opt add the zero-length
-        identity over the node domain). Composite relations are cached per
-        path shape for the engine's lifetime, like the p+ closures."""
-        cached = self._closure_cache.get(path)
-        if cached is not None:
-            return cached
-        if path.op == "link":
-            pid = self._props.get(path.parts[0])
-            df = (
-                self._table("spo")
-                .filter(F.col("p") == pid if pid is not None else F.lit(False))
-                .select("s", "o")
-            )
-        elif path.op == "inv":
-            df = self._path_rel(path.parts[0]).select(
-                F.col("o").alias("s"), F.col("s").alias("o")
-            )
-        elif path.op == "seq":
-            df = self._path_rel(path.parts[0])
-            for nxt in path.parts[1:]:
-                df = (
-                    df.withColumnRenamed("o", "m")
-                    .join(self._path_rel(nxt).withColumnRenamed("s", "m"), "m")
-                    .select("s", "o")
-                )
-        elif path.op == "alt":
-            df = self._path_rel(path.parts[0])
-            for nxt in path.parts[1:]:
-                df = df.unionByName(self._path_rel(nxt))
-        elif path.op == "negset":
-            # any single edge whose predicate is NOT in the listed set:
-            # scans every predicate partition except the excluded ones
-            # (partition pruning still drops the listed partitions)
-            pids = [self._props[x] for x in path.parts if x in self._props]
-            df = (
-                self._table("spo")
-                .filter(~F.col("p").isin(pids) if pids else F.lit(True))
-                .select("s", "o")
-            )
-        elif path.op == "plus":
-            df = self._closure_edges(self._path_rel(path.parts[0]))
-        elif path.op in ("star", "opt"):
-            zero = self._nodes_rel().select(
-                F.col("n").alias("s"), F.col("n").alias("o")
-            )
-            step = self._path_rel(path.parts[0])
-            if path.op == "star":
-                step = self._closure_edges(step)
-            df = step.unionByName(zero).distinct()
-        else:  # pragma: no cover - parser never emits other ops
-            raise ValueError(f"unknown path op {path.op!r}")
-        self._closure_cache[path] = df
-        return df
-
     def _scan(
         self, pat: Pattern, terms: dict[str, int], orient_hint: str | None = None
     ) -> DataFrame | None:
@@ -564,6 +1431,10 @@ class BGPEngine:
         the subject var joins, "pos" if the object var joins) — reading the
         matching sort order gives the bucketed/sorted join path (reference
         J2 access-path choice, DagCreator.java:94-122)."""
+        if pat.g is not None:
+            raise ValueError(
+                "GRAPH patterns need a quad relation (use execute_on_quads)"
+            )
         s_const = None if _is_var(pat.s) else terms.get(pat.s)
         o_const = None if _is_var(pat.o) else terms.get(pat.o)
         if (not _is_var(pat.s) and s_const is None) or (
@@ -595,41 +1466,15 @@ class BGPEngine:
             # composite property path (extension): the scan is the path's
             # evaluated pair relation; constant/variable handling below
             # applies to it unchanged
-            if pat.p.op in ("star", "opt") and (
-                s_const is not None or o_const is not None
-            ):
-                # constant-anchored zero-length form: the identity
-                # contribution is just (c, c) — gated on c occurring in the
-                # graph via a lazy limit(1) probe — so the whole-graph
-                # node-domain distinct is never built for an anchored path
-                c = s_const if s_const is not None else o_const
-                # reuse the cached plus-closure for star (one fixpoint per
-                # engine lifetime, like every other path relation)
-                step = self._path_rel(
-                    Path("plus", (pat.p.parts[0],))
-                    if pat.p.op == "star"
-                    else pat.p.parts[0]
-                )
-                t = self._table("spo")
-                zero = (
-                    t.filter((F.col("s") == c) | (F.col("o") == c))
-                    .limit(1)
-                    .select(
-                        F.lit(c).cast("long").alias("s"),
-                        F.lit(c).cast("long").alias("o"),
-                    )
-                )
-                df = step.unionByName(zero).distinct()
-            else:
-                df = self._path_rel(pat.p)
+            anchor = s_const if s_const is not None else o_const
+            df = self._path_pairs(pat.p, anchor)
         elif pat.p.endswith("+"):
             # property path p+ (extension beyond the reference): the scan
             # is the transitive closure of the predicate's edge set; the
             # constant/variable handling below applies to it unchanged
-            pid = self._props.get(pat.p[:-1])
-            if pid is None:
+            if pat.p[:-1] not in self._props:
                 return None
-            df = self._closure(pid)
+            df = self._path_rel(Path("plus", (Path("link", (pat.p[:-1],)),)))
         else:
             pid = self._props.get(pat.p)
             if pid is None:
@@ -930,151 +1775,12 @@ class BGPEngine:
         else:
             opt_groups = [list(g) for g in optional]
         opt_patterns = [p for g in opt_groups for p in g]
-        all_for_check = list(patterns) + opt_patterns
-        pvars = {v for p in all_for_check for v in [p.pred_var()] if v}
-        evars = {v for p in all_for_check for v in p.entity_vars()}
-        if pvars & evars:
-            # predicate ids live in the properties catalog, entity ids in
-            # the term dictionary — joining across the two spaces is invalid
-            raise ValueError(
-                f"variable(s) used in both predicate and subject/object "
-                f"position: {sorted(pvars & evars)}"
-            )
+        pvars = self._check_var_spaces(list(patterns) + opt_patterns)
         return self._plan_and_execute(
             patterns, opt_groups, opt_patterns, pvars,
             select=select, distinct=distinct, decode=decode,
             order_by=order_by, limit=limit,
         )
-
-    def _apply_optional_groups(
-        self,
-        result: DataFrame,
-        opt_groups: list[list[Pattern]],
-        terms: dict,
-        literal: "frozenset[str] | set[str]" = frozenset(),
-        pvars: "frozenset[str] | set[str]" = frozenset(),
-        opt_filters: list | None = None,
-    ) -> DataFrame:
-        """Left-join each OPTIONAL block onto the accumulated solution set:
-        the block's patterns join each other first, then the assembled block
-        left-joins ``result``, so it matches as a whole or leaves all its
-        vars unbound (SPARQL group semantics).
-
-        Placement contract: in the SPARQL path this runs AFTER every
-        binding join (core BGP ⋈ UNION ⋈ subquery ⋈ VALUES) — the same
-        group-element normal form execute_on_triples uses — so no
-        equi-join downstream ever sees a possibly-unbound (null) key. The
-        differential fuzzer found the old order (OPTIONAL inside the core
-        query(), UNION joined after) null-dropping solutions whose
-        OPTIONAL var a UNION group shares: SPARQL's compatibility join
-        treats unbound as joining-with-anything, which a plain equi-join
-        on a null key silently violates.
-
-        ``literal`` names result columns already holding decoded term
-        strings (constant-FILTER rebinds, subquery ride-alongs): a block
-        var shared with one decodes ON THE BLOCK SIDE before the join —
-        the same probe-side decode the MINUS/EXISTS paths apply — so the
-        join compares strings to strings instead of casting a term string
-        to a long key (which threw at runtime before r5).
-        ``opt_filters`` holds each block's scoped FILTER expressions
-        (SPARQL LeftJoin(G, P, E), E over P's vars), applied to the
-        block's ENCODED frame before the left join via
-        _filter_group_frame."""
-        for gi, group in enumerate(opt_groups):
-            gdf = self._compose_joins(
-                self._order(group, terms) if len(group) > 1 else list(group),
-                terms,
-            )
-            # None = a group pattern with an unknown constant matches nothing
-            dead = gdf is None
-            group_vars = sorted({v for p in group for v in p.vars()})
-            if dead:
-                for v in group_vars:
-                    if v not in result.columns:
-                        result = result.withColumn(v, F.lit(None).cast("long"))
-                continue
-            if "__exists" in gdf.columns:
-                gdf = gdf.drop("__exists")
-            if opt_filters and gi < len(opt_filters) and opt_filters[gi]:
-                gdf = self._filter_group_frame(
-                    gdf, opt_filters[gi], group, pvars
-                )
-            if not gdf.columns:
-                continue  # fully-bound block binds nothing
-            shared = sorted(set(result.columns) & set(gdf.columns))
-            lit_shared = [v for v in shared if v in literal]
-            if lit_shared:
-                gpv = {v for p in group for v in [p.pred_var()] if v}
-                cols = list(gdf.columns)
-                gdf = self._decode_frame(
-                    gdf, set(pvars) | gpv, only=lit_shared
-                ).select(*cols)
-            # no shared vars: constant-true left join preserves core rows
-            # even when the optional side is empty (crossJoin annihilates)
-            result = (
-                result.join(gdf, on=shared, how="left")
-                if shared
-                else result.join(gdf, F.lit(True), "left")
-            )
-        return result
-
-    def _filter_group_frame(
-        self,
-        gdf: DataFrame,
-        gfs: list,
-        group: list[Pattern],
-        pvars: "frozenset[str] | set[str]",
-    ) -> DataFrame:
-        """Apply block-scoped FILTERs to an OPTIONAL group's ENCODED frame.
-
-        Same two-tier lowering as the top-level FILTER path: id-lowerable
-        forms (=/!=/IN/BOUND over vars and constant terms) prune on longs
-        after a pruned driver-side constant lookup; the rest decode ONLY
-        the referenced vars into throwaway ``__lit_*`` columns so the
-        block's join keys stay encoded for the left join that follows."""
-        from parj_spark.query.sparql import filter_to_column, filter_vars
-
-        gpv = {v for p in group for v in [p.pred_var()] if v} | set(pvars)
-        cols = set(gdf.columns)
-        lowerable, rest, ent_consts = [], [], set()
-        for fexpr in gfs:
-            plan = self._filter_id_plan(fexpr, cols, set(), gpv)
-            if plan is None:
-                rest.append(fexpr)
-            else:
-                lowerable.append(fexpr)
-                ent_consts |= plan[0]
-        if lowerable:
-            ent_ids = (
-                {
-                    r["uri"]: r["id"]
-                    for r in self._dict.filter(
-                        F.col("uri").isin(sorted(ent_consts))
-                    ).collect()
-                }
-                if ent_consts
-                else {}
-            )
-            for fexpr in lowerable:
-                gdf = gdf.filter(self._filter_id_column(fexpr, ent_ids, gpv))
-        if rest:
-            refs = sorted({v for fexpr in rest for v in filter_vars(fexpr)} & cols)
-            for v in refs:
-                src = (
-                    F.broadcast(self.store.properties())
-                    if v in gpv
-                    else self._decode_dict()
-                )
-                d = src.select(
-                    F.col("id").alias(v), F.col("uri").alias(f"__lit_{v}")
-                )
-                gdf = gdf.join(d, v, "left")
-            for fexpr in rest:
-                gdf = gdf.filter(
-                    filter_to_column(fexpr, lambda n: F.col(f"__lit_{n}"))
-                )
-            gdf = gdf.drop(*[f"__lit_{v}" for v in refs])
-        return gdf
 
     def _compose_joins(
         self, ordered: list[Pattern], terms: dict[str, int]
@@ -1306,328 +2012,41 @@ class BGPEngine:
         the hash aggregate). Column order is not preserved — callers
         re-select."""
         for v in (list(result.columns) if only is None else only):
-            src = (
-                F.broadcast(self.store.properties())
-                if v in pvars
-                else self._decode_dict()
+            d = self._term_frame(v, pvars).select(
+                F.col("id").alias(v), F.col("uri").alias(f"{v}_uri")
             )
-            d = src.select(F.col("id").alias(v), F.col("uri").alias(f"{v}_uri"))
             result = result.join(d, v, "left").drop(v).withColumnRenamed(f"{v}_uri", v)
         return result
 
-    # --- FILTER lowering onto encoded ids ------------------------------
-    def _filter_id_plan(self, e, cols: set[str], literal: set[str], pvars: set[str]):
-        """If FILTER expression ``e`` can evaluate on ENCODED ids, return
-        (entity_consts, pred_consts) — the constant terms it needs resolved
-        — else None. Lowerable: =/!= between vars and/or literal terms,
-        [NOT] IN over literal terms, BOUND, and NOT/&&/|| compositions of
-        those: for these shapes term comparison IS dictionary-id comparison
-        (the dictionary is a bijection), so the filter prunes on longs
-        BEFORE any decode join (the reference's decode-outputs-last rule,
-        QueryTester.java:189-223, extended to FILTER). Numeric comparisons,
-        regex and string functions need the decoded term — not lowerable.
-        Mixed predicate/entity-var comparisons are refused (the two id
-        spaces are separate catalogs)."""
-        from parj_spark.query import sparql as S
+    def sparql(self, text: str, decode: bool = True, **flags) -> DataFrame:
+        """Execute a SPARQL string — the reference's actual entry point
+        (QueryTester.java:152 parses SPARQL text; DagCreator.java:55-154
+        lowers it to the join DAG).
 
-        if isinstance(e, S.Comparison):
-            if e.op not in ("=", "!="):
-                return None
-            if not (isinstance(e.lhs, tuple) and isinstance(e.rhs, tuple)):
-                # BIND-grammar operand (arithmetic/CONCAT/IF/COALESCE):
-                # needs the decoded term value, not lowerable onto ids
-                return None
-            vs = [t for t in (e.lhs, e.rhs) if t[0] == "var"]
-            if not vs:
-                return None
-            for t in vs:
-                if t[1] in literal or t[1] not in cols:
-                    return None
-            kinds = {t[1] in pvars for t in vs}
-            if len(kinds) > 1:
-                return None
-            is_pred = kinds.pop()
-            ent, pred = set(), set()
-            for t in (e.lhs, e.rhs):
-                if t[0] == "lit":
-                    (pred if is_pred else ent).add(t[1])
-                elif t[0] != "var":
-                    return None
-            return ent, pred
-        if isinstance(e, S.Bound):
-            if e.var in cols and e.var not in literal:
-                return set(), set()
-            return None
-        if isinstance(e, S.InList):
-            if e.arg[0] != "var" or e.arg[1] in literal or e.arg[1] not in cols:
-                return None
-            if any(v[0] != "lit" for v in e.values):
-                return None
-            vals = {v[1] for v in e.values}
-            if e.arg[1] in pvars:
-                return set(), vals
-            return vals, set()
-        if isinstance(e, S.Not):
-            return self._filter_id_plan(e.expr, cols, literal, pvars)
-        if isinstance(e, (S.And, S.Or)):
-            ent, pred = set(), set()
-            for p in e.parts:
-                c = self._filter_id_plan(p, cols, literal, pvars)
-                if c is None:
-                    return None
-                ent |= c[0]
-                pred |= c[1]
-            return ent, pred
-        return None
+        ``flags`` opt in to the parser's extensions under the engine's
+        spelling (``filters=True``, ``unions=True``, ``paths=True``, ...;
+        see ``ENGINE_FLAGS`` in :mod:`parj_spark.query.sparql`). A plain
+        BGP (+ OPTIONAL + modifiers) lowers straight to :meth:`query`;
+        everything else goes through the shared lowering
+        (:meth:`GraphAccess._sparql_query`) over the encoded permutation
+        tables: UNION alternatives plan as their own BGPs, id-lowerable
+        FILTERs (=/!=/IN/BOUND over constant terms) prune on ENCODED ids
+        before any decode join, other FILTERs decode only the vars they
+        reference, and a ``{ SELECT }`` subquery's shared projected vars
+        re-encode to ids at the boundary, so the enclosing group still
+        joins on longs."""
+        from parj_spark.query.sparql import parse_engine_sparql
 
-    def _filter_id_column(self, e, ent_ids: dict, pvars: set[str]):
-        """Compile an id-lowerable FILTER expression (see _filter_id_plan)
-        to a Column over the ENCODED solution columns. ``ent_ids`` maps
-        resolved entity terms to ids; terms absent from the dictionary can
-        match nothing, compiled null-exactly (when(bound, const)) so
-        OPTIONAL-null rows still drop under NOT per SPARQL's
-        evaluation-error-is-false rule."""
-        from parj_spark.query import sparql as S
-
-        def const_when_bound(var_col, value: bool):
-            return F.when(var_col.isNotNull(), F.lit(value))
-
-        if isinstance(e, S.Comparison):
-            vs = [t for t in (e.lhs, e.rhs) if t[0] == "var"]
-            is_pred = vs[0][1] in pvars
-
-            def resolve(t):
-                if t[0] == "var":
-                    return F.col(t[1])
-                tid = self._props.get(t[1]) if is_pred else ent_ids.get(t[1])
-                return None if tid is None else F.lit(tid)
-
-            l, r = resolve(e.lhs), resolve(e.rhs)
-            if l is None or r is None:
-                # absent term: '=' can never hold, '!=' holds for every
-                # BOUND value (null rows still error out to null)
-                return const_when_bound(F.col(vs[0][1]), e.op == "!=")
-            return (l == r) if e.op == "=" else (l != r)
-        if isinstance(e, S.Bound):
-            return F.col(e.var).isNotNull()
-        if isinstance(e, S.InList):
-            is_pred = e.arg[1] in pvars
-            ids = [
-                (self._props.get(v[1]) if is_pred else ent_ids.get(v[1]))
-                for v in e.values
-            ]
-            ids = [i for i in ids if i is not None]
-            c = F.col(e.arg[1])
-            if not ids:
-                return const_when_bound(c, e.negated)
-            m = c.isin(ids)
-            return ~m if e.negated else m
-        if isinstance(e, S.Not):
-            return ~self._filter_id_column(e.expr, ent_ids, pvars)
-        parts = [self._filter_id_column(p, ent_ids, pvars) for p in e.parts]
-        out = parts[0]
-        for p in parts[1:]:
-            out = (out & p) if isinstance(e, S.And) else (out | p)
-        return out
-
-    def _propagate_const_filters(self, q):
-        """Sideways information passing for constant equality: a top-level
-        ``FILTER(?v = "term")`` (or single-member ``IN``) conjunct whose var
-        appears ONLY in the core BGP's s/o slots binds ?v BEFORE planning —
-        the pattern slot becomes a constant term, so the planner sees the
-        true point-lookup selectivity (orientation choice, bucket/row-group
-        pruning, join order seeded from the selective pattern) instead of
-        discovering the constant only as a Catalyst pushdown after the join
-        tree is fixed. The reference gets this for free because constants
-        can only arrive inside the query string (DagCreator.java builds
-        access paths from the triple's bound slots); the rewrite puts
-        FILTER constants on equal footing. ?v re-surfaces as a constant
-        literal column after the core compose, so projection/ORDER
-        BY/other filters see it unchanged. A term absent from the
-        dictionary yields the empty result through the ordinary
-        constant-resolution path — identical to '=' error semantics.
-
-        Vars referenced anywhere else (OPTIONAL/UNION/MINUS/EXISTS/VALUES/
-        BIND/CONSTRUCT/DESCRIBE/GRAPH slots/subquery projections/predicate
-        position) are left to the post-compose id-lowered filter — the
-        rewrite must not change group semantics, only access paths.
-        Returns (q', [(var, term), ...]); ``q`` itself is not mutated."""
-        import dataclasses
-
-        from parj_spark.query import sparql as S
-
-        if not q.filters or not q.patterns:
-            return q, []
-
-        blocked: set[str] = set()
-
-        def block_pats(pats):
-            for p in pats:
-                for t in (p.s, p.o):
-                    if _is_var(t):
-                        blocked.add(t[1:])
-                pv = p.pred_var()
-                if pv:
-                    blocked.add(pv)
-                if p.g is not None and _is_var(p.g):
-                    blocked.add(p.g[1:])
-
-        for grp in q.optional:
-            block_pats(grp)
-        for grp in q.unions:
-            for alt in grp:
-                block_pats(alt)
-        for grp in q.minus:
-            block_pats(grp)
-        for _, grp in q.exists:
-            block_pats(grp)
-        for _, _, grp in q.services:
-            block_pats(grp)
-        for vars_, _ in q.values:
-            blocked.update(vars_)
-        for expr, alias in q.binds:
-            blocked.add(alias)
-            blocked.update(S.bind_vars(expr))
-        if q.construct is not None:
-            block_pats(q.construct)
-        if q.describe is not None:
-            blocked.update(t[1:] for t in q.describe if t.startswith("?"))
-        for sub in q.subqueries:
-            if sub.select is None:
-                return q, []  # SELECT * projection: can't bound its vars
-            blocked.update(sub.select)
-            blocked.update(a.alias for a in sub.aggregates)
-        for p in q.patterns:  # predicate/GRAPH position in the core itself
-            pv = p.pred_var()
-            if pv:
-                blocked.add(pv)
-            if p.g is not None and _is_var(p.g):
-                blocked.add(p.g[1:])
-        core_vars = {
-            t[1:] for p in q.patterns for t in (p.s, p.o) if _is_var(t)
-        }
-
-        def eq_const(f):
-            if (
-                isinstance(f, S.Comparison)
-                and f.op == "="
-                and isinstance(f.lhs, tuple)
-                and isinstance(f.rhs, tuple)
-            ):
-                vs = [t for t in (f.lhs, f.rhs) if t[0] == "var"]
-                ls = [t for t in (f.lhs, f.rhs) if t[0] == "lit"]
-                if len(vs) == 1 and len(ls) == 1:
-                    return vs[0][1], ls[0][1]
-            if (
-                isinstance(f, S.InList)
-                and not f.negated
-                and f.arg[0] == "var"
-                and len(f.values) == 1
-                and f.values[0][0] == "lit"
-            ):
-                return f.arg[1], f.values[0][1]
-            return None
-
-        sub: dict[str, str] = {}
-        kept = []
-        for f in q.filters:
-            hit = eq_const(f)
-            if (
-                hit is not None
-                and hit[0] in core_vars
-                and hit[0] not in blocked
-                and hit[0] not in sub
-            ):
-                sub[hit[0]] = hit[1]
-            else:
-                kept.append(f)
-        if not sub:
-            return q, []
-
-        def slot(t):
-            return sub[t[1:]] if _is_var(t) and t[1:] in sub else t
-
-        pats = [
-            dataclasses.replace(p, s=slot(p.s), o=slot(p.o))
-            for p in q.patterns
-        ]
-        return dataclasses.replace(q, patterns=pats, filters=kept), sorted(
-            sub.items()
-        )
-
-    def sparql(
-        self,
-        text: str,
-        decode: bool = True,
-        var_predicates: bool = False,
-        filters: bool = False,
-        unions: bool = False,
-        ask: bool = False,
-        minus: bool = False,
-        paths: bool = False,
-        offset: bool = False,
-        aggregates: bool = False,
-        values: bool = False,
-        construct: bool = False,
-        bind: bool = False,
-        subquery: bool = False,
-        describe: bool = False,
-    ) -> DataFrame:
-        """Execute a SPARQL BGP SELECT string — the reference's actual entry
-        point (QueryTester.java:152 parses SPARQL text; DagCreator.java:55-154
-        lowers it to the join DAG). Our lowering target is :meth:`query`.
-
-        ``filters=True`` / ``unions=True`` opt in to the extensions: the
-        BGPs run over the encoded permutation tables as usual; each UNION
-        alternative is planned as its own BGP, column-aligned (the parser
-        enforces equal variable sets) and unioned, then equi-joined with the
-        core BGP; id-lowerable FILTERs (=/!=/IN/BOUND over constant terms)
-        prune on ENCODED ids before any decode join, other FILTERs decode
-        only the vars they reference, then the solution modifiers run.
-        OPTIONAL blocks left-join AFTER the UNION/subquery/VALUES binding
-        joins (the group-element normal form documented on SparqlQuery —
-        both evaluators share it, so a UNION var that only an OPTIONAL
-        binds is never a null equi-join key). A ``{ SELECT }`` subquery
-        lowers recursively; its shared projected vars re-encode to ids at
-        the boundary, so the enclosing group still joins on longs."""
-        q = self._parse_sparql_text(
-            text, var_predicates, filters, unions, ask, minus, paths, offset,
-            aggregates, values, construct, bind, subquery, describe,
-        )
-        return self._sparql_query(q, decode)
-
-    @staticmethod
-    def _parse_sparql_text(
-        text, var_predicates=False, filters=False, unions=False, ask=False,
-        minus=False, paths=False, offset=False, aggregates=False,
-        values=False, construct=False, bind=False, subquery=False,
-        describe=False,
-    ):
-        from parj_spark.query.sparql import parse_sparql
-
-        return parse_sparql(
-            text,
-            allow_var_predicates=var_predicates,
-            allow_filter=filters,
-            allow_union=unions,
-            allow_ask=ask,
-            allow_minus=minus,
-            allow_paths=paths,
-            allow_offset=offset,
-            allow_aggregates=aggregates,
-            allow_values=values,
-            allow_construct=construct,
-            allow_bind=bind,
-            allow_subquery=subquery,
-            allow_describe=describe,
-        )
+        return self._sparql_query(parse_engine_sparql(text, **flags), decode)
 
     def explain_sparql(self, text: str, **flags) -> str:
         """:meth:`explain` for a SPARQL string: parse with the same opt-in
         ``flags`` :meth:`sparql` takes and report the plan of the query's
         core BGP (UNION/OPTIONAL/MINUS blocks plan as their own BGPs with
         the same machinery and are not repeated here)."""
-        q = self._parse_sparql_text(text, **flags)
+        from parj_spark.query.sparql import parse_engine_sparql
+
+        q = parse_engine_sparql(text, **flags)
         pats = getattr(q, "patterns", None)
         if not pats:
             return "(no core BGP — nothing to plan driver-side)"
@@ -1686,434 +2105,28 @@ class BGPEngine:
         return report
 
     def _sparql_query(self, q, decode: bool) -> DataFrame:
-        """Lower one parsed (sub)query over the permutation tables —
-        recursive for nested ``{ SELECT }`` groups."""
-        from parj_spark.query.sparql import filter_to_column
-
-        # `literal` tracks solution columns that hold FINAL values (decoded
-        # terms, BIND outputs, subquery aggregates) instead of dictionary
-        # ids. Everything else stays an encoded long until the last
-        # possible moment — joins, MINUS/EXISTS probes, id-lowerable
-        # FILTERs and hash aggregates all run on longs (the reference's
-        # decode-outputs-last rule, QueryTester.java:189-223; VERDICT r4
-        # top-next: this replaced the sub_dec string-join pipeline and the
-        # FILTER/BIND full-width pre-decode)
-        literal: set[str] = set()
-        from parj_spark.query.sparql import order_columns, order_vars
-
-        order_cols = order_columns(q.order_by) or None
+        """A plain BGP (+ OPTIONAL blocks + modifiers) lowers straight to
+        :meth:`query`, which decodes after DISTINCT; everything else takes
+        the shared lowering."""
         if (
             not q.filters and not any(q.optional_filters) and not q.unions
             and not q.ask and not q.minus
             and not q.exists and q.offset is None and not q.aggregates
             and not q.values and q.construct is None and not q.binds
-            and not q.subqueries and q.describe is None
+            and not q.subqueries and q.describe is None and not q.services
         ):
+            from parj_spark.query.sparql import order_columns
+
             return self.query(
                 q.patterns,
                 select=q.select,
                 distinct=q.distinct,
                 decode=decode,
                 optional=q.optional or None,
-                order_by=order_cols,
+                order_by=order_columns(q.order_by) or None,
                 limit=q.limit,
             )
-        if q.filters and not decode:
-            raise ValueError(
-                "FILTER expressions compare decoded term values; "
-                "sparql(..., filters=True) requires decode=True"
-            )
-        if not q.patterns and q.optional:
-            raise ValueError("OPTIONAL without a core BGP is not supported")
-        # sideways information passing: constant-equality FILTERs over
-        # core-BGP-only vars bind the pattern slot BEFORE planning (point
-        # lookup + true selectivity); the vars re-surface as constant
-        # literal columns right after the compose
-        q, const_binds = self._propagate_const_filters(q)
-        # run the core BGP and every UNION alternative ENCODED (decode=False)
-        # so all joins happen on dictionary ids — decoding each sub-BGP
-        # separately would both repeat the dictionary join per alternative
-        # and shuffle term strings instead of longs; decode once at the end.
-        # OPTIONAL groups do NOT join here: they left-join AFTER the
-        # UNION/subquery/VALUES binding joins (see _apply_optional_groups's
-        # placement contract), so a var those elements share with an
-        # OPTIONAL block is never a possibly-null equi-join key.
-        opt_pats = [p for g in q.optional for p in g]
-        if opt_pats:
-            all_chk = list(q.patterns) + opt_pats
-            pv_chk = {v for p in all_chk for v in [p.pred_var()] if v}
-            ev_chk = {v for p in all_chk for v in p.entity_vars()}
-            if pv_chk & ev_chk:
-                # same invariant query(optional=...) enforced when the
-                # OPTIONAL blocks still joined inside the core call
-                raise ValueError(
-                    f"variable(s) used in both predicate and subject/object "
-                    f"position: {sorted(pv_chk & ev_chk)}"
-                )
-        result = (
-            self.query(
-                q.patterns,
-                select=None,
-                distinct=False,
-                decode=False,
-            )
-            if q.patterns
-            else None
-        )
-        for v, term in const_binds:
-            result = result.withColumn(v, F.lit(term))
-            literal.add(v)
-        for grp in q.unions:
-            u = self.query(grp[0], select=None, decode=False)
-            for alt in grp[1:]:
-                u = u.unionByName(self.query(alt, select=None, decode=False))
-            if result is None:
-                result = u
-            else:
-                shared = sorted(set(result.columns) & set(u.columns))
-                result = result.join(u, on=shared) if shared else result.crossJoin(u)
-        all_pats = (
-            list(q.patterns)
-            + [p for g in q.optional for p in g]
-            + [p for grp in q.unions for alt in grp for p in alt]
-        )
-        pvars = {v for p in all_pats for v in [p.pred_var()] if v}
-        for sub in q.subqueries:
-            # nested SELECT: its own lowering (recursively). The subquery
-            # surfaces decoded term strings (its own contract), but the
-            # enclosing group must keep joining on longs — so shared
-            # projected vars are resolved BACK to dictionary ids at the
-            # boundary (the DESCRIBE pattern) and only the subquery's
-            # non-shared outputs (typically aggregates) ride along as
-            # literal columns. Pre-r5 the whole enclosing group switched to
-            # decoded string joins instead (VERDICT r4 missing #2).
-            sdf = self._sparql_query(sub, decode=True)
-            if result is None:
-                result = sdf
-                literal.update(sdf.columns)
-                continue
-            shared = sorted(set(result.columns) & set(sdf.columns))
-            for v in shared:
-                if v in literal:
-                    continue  # both sides literal -> join on values
-                d = self._decode_dict().select(
-                    F.col("uri").alias(v), F.col("id").alias(f"__{v}_id")
-                )
-                sdf = sdf.join(d, v).drop(v).withColumnRenamed(f"__{v}_id", v)
-            literal.update(set(sdf.columns) - set(shared))
-            result = result.join(sdf, on=shared) if shared else result.crossJoin(sdf)
-        for vars_, rows in q.values:
-            # VALUES inline bindings, joined on ENCODED ids: join-key terms
-            # of the tiny literal relation resolve through the dictionary
-            # first (terms absent from the graph bind nothing there, per
-            # inner-join semantics), so the constraint prunes the core join
-            # on longs instead of waiting for the decoded strings. Vars the
-            # solution set does NOT already bind ride along as literal
-            # string columns (they key nothing — and a term outside the
-            # graph still binds, per SPARQL, which an id could not carry).
-            # UNDEF rows group by their bound-variable mask: each mask
-            # joins on its own shared vars and the branches union — every
-            # row lives in exactly one mask, so the union IS SPARQL's
-            # compatibility (multiset) join.
-            rcols = set(result.columns)
-            ride = [v for v in vars_ if v not in rcols]
-            by_mask: dict = {}
-            for r in rows:
-                mask = tuple(v for v, t in zip(vars_, r) if t is not None)
-                by_mask.setdefault(mask, []).append(
-                    tuple(t for t in r if t is not None)
-                )
-            branches = []
-            for mask, mrows in sorted(by_mask.items()):
-                if mask:
-                    vdf = self.spark.createDataFrame(
-                        mrows, schema=", ".join(f"{v} string" for v in mask)
-                    )
-                    for v in mask:
-                        if v in literal or v not in rcols:
-                            continue  # literal/ride-along: stays a string
-                        d = self._dict.select(
-                            F.col("uri").alias(v),
-                            F.col("id").alias(f"__{v}_id"),
-                        )
-                        vdf = (
-                            vdf.join(d, v)
-                            .drop(v)
-                            .withColumnRenamed(f"__{v}_id", v)
-                        )
-                else:
-                    # all-UNDEF rows constrain nothing: k of them multiply
-                    # every solution k times (bag semantics)
-                    vdf = self.spark.range(len(mrows)).select(
-                        F.lit(1).alias("__dup")
-                    )
-                shared = sorted(rcols & set(vdf.columns))
-                br = (
-                    result.join(F.broadcast(vdf), on=shared)
-                    if shared
-                    else result.crossJoin(F.broadcast(vdf))
-                )
-                if "__dup" in br.columns:
-                    br = br.drop("__dup")
-                for v in ride:
-                    if v not in br.columns:
-                        br = br.withColumn(v, F.lit(None).cast("string"))
-                branches.append(br)
-            new = branches[0]
-            for b in branches[1:]:
-                new = new.unionByName(b)
-            result = new
-            literal.update(ride)
-        if q.optional:
-            # OPTIONAL left-joins the fully-composed binding set (core ⋈
-            # UNION ⋈ subquery ⋈ VALUES) — matching execute_on_triples'
-            # normal form and typical document order. The core query() call
-            # neither resolved this block's constants nor hydrated its
-            # predicates' stats, so do both here.
-            opt_groups = [list(g) for g in q.optional]
-            self._hydrate(opt_pats)
-            result = self._apply_optional_groups(
-                result,
-                opt_groups,
-                self._resolve_terms(opt_pats),
-                literal=literal,
-                pvars=pvars,
-                opt_filters=q.optional_filters,
-            )
-        for gi, group in enumerate(q.minus):
-            # MINUS on encoded ids BEFORE decode: the anti-join probes long
-            # keys (same plan shape as the reference-parity semi/anti ops),
-            # and removed rows never pay the dictionary join. A block with
-            # no shared variable removes nothing (SPARQL disjoint-domain
-            # rule) — skipped, since anti-joining on no keys annihilates.
-            # Block-scoped FILTERs pre-filter the ENCODED block frame
-            # (exact per spec: a MINUS block never sees outer bindings).
-            mdf = self.query(group, select=None, decode=False)
-            if gi < len(q.minus_filters) and q.minus_filters[gi]:
-                mdf = self._filter_group_frame(
-                    mdf, q.minus_filters[gi], group, pvars
-                )
-            shared = sorted(set(result.columns) & set(mdf.columns))
-            if shared:
-                lit_shared = [v for v in shared if v in literal]
-                if lit_shared:  # probe side decodes to match literal cols
-                    gpv = {v for p in group for v in [p.pred_var()] if v}
-                    cols = list(mdf.columns)
-                    mdf = self._decode_frame(
-                        mdf, pvars | gpv, only=lit_shared
-                    ).select(*cols)
-                result = result.join(mdf, on=shared, how="left_anti")
-        for gi, (positive, group) in enumerate(q.exists):
-            # FILTER [NOT] EXISTS on encoded ids (same placement rationale
-            # as MINUS); a no-shared-variable block gates globally via a
-            # constant-true semi/anti join against the block's first row.
-            # Block-scoped FILTERs pre-filter the ENCODED block frame
-            # (exact for block-bound vars: the join equates shared vars).
-            gdf = self.query(group, select=None, decode=False)
-            if gi < len(q.exists_filters) and q.exists_filters[gi]:
-                gdf = self._filter_group_frame(
-                    gdf, q.exists_filters[gi], group, pvars
-                )
-            shared = sorted(set(result.columns) & set(gdf.columns))
-            how = "left_semi" if positive else "left_anti"
-            if shared:
-                lit_shared = [v for v in shared if v in literal]
-                if lit_shared:
-                    gpv = {v for p in group for v in [p.pred_var()] if v}
-                    cols = list(gdf.columns)
-                    gdf = self._decode_frame(
-                        gdf, pvars | gpv, only=lit_shared
-                    ).select(*cols)
-                result = result.join(gdf, on=shared, how=how)
-            else:
-                result = result.join(gdf.limit(1), F.lit(True), how)
-        from parj_spark.query.sparql import agg_value_vars, bind_vars, filter_vars
-
-        def decode_cols(df: DataFrame, cols) -> DataFrame:
-            """Decode the named columns in place (order preserved), skip
-            ones already literal, and record them as literal."""
-            todo = [c for c in cols if c in df.columns and c not in literal]
-            if not todo:
-                return df
-            order = list(df.columns)
-            out = self._decode_frame(df, pvars, only=todo).select(*order)
-            literal.update(todo)
-            return out
-
-        # split FILTERs: id-lowerable ones (=/!=/IN/BOUND over vars and
-        # constant terms) prune the ENCODED solution set — constants
-        # resolve to dictionary ids driver-side in one pruned point-lookup
-        # job — and the rest evaluate on decoded strings after decoding
-        # ONLY the vars they reference. The pre-r5 pipeline decoded every
-        # column before any filter ran (VERDICT r4 missing #1).
-        str_filters = list(q.filters)
-        if q.filters and result is not None:
-            lowerable, rest, ent_consts = [], [], set()
-            rcols = set(result.columns)
-            for fexpr in q.filters:
-                plan = self._filter_id_plan(fexpr, rcols, literal, pvars)
-                if plan is None:
-                    rest.append(fexpr)
-                else:
-                    lowerable.append(fexpr)
-                    ent_consts |= plan[0]
-            ent_ids = (
-                {
-                    r["uri"]: r["id"]
-                    for r in self._dict.filter(
-                        F.col("uri").isin(sorted(ent_consts))
-                    ).collect()
-                }
-                if ent_consts
-                else {}
-            )
-            for fexpr in lowerable:
-                result = result.filter(
-                    self._filter_id_column(fexpr, ent_ids, pvars)
-                )
-            str_filters = rest
-        pre_vars = {v for fe in str_filters for v in filter_vars(fe)}
-        if q.binds:
-            for expr, _ in q.binds:
-                pre_vars |= bind_vars(expr)
-        if result is not None and result.columns and pre_vars:
-            result = decode_cols(result, sorted(pre_vars))
-        if q.binds:
-            from parj_spark.query.sparql import bind_to_column
-
-            for expr, v in q.binds:
-                result = result.withColumn(v, bind_to_column(expr, F.col))
-                literal.add(v)
-        for fexpr in str_filters:
-            result = result.filter(filter_to_column(fexpr, F.col))
-        # the remaining OUTPUT columns decode AFTER the filters have pruned
-        # — and only the columns the query actually surfaces (projection +
-        # ORDER BY keys + CONSTRUCT template vars): a var that is joined on
-        # but never output never pays a dictionary join at all.
-        # ASK/DESCRIBE/aggregates handle their own (late or no) decode.
-        if (
-            result is not None
-            and result.columns
-            and (
-                q.construct is not None
-                or (
-                    decode and not q.ask and q.describe is None
-                    and not q.aggregates
-                )
-            )
-        ):
-            if q.construct is not None:
-                need = {
-                    t[1:]
-                    for tp in q.construct
-                    for t in (tp.s, tp.p, tp.o)
-                    if _is_var(t)
-                }
-            elif q.select:
-                need = set(q.select) | order_vars(q.order_by)
-            else:
-                need = {c for c in result.columns if not c.startswith("__bn")}
-            result = decode_cols(result, sorted(need))
-        if q.ask:
-            # ASK: one row, one boolean — any solution exists? limit(1)
-            # before the aggregate makes it an existence probe (LocalLimit
-            # short-circuits each task's scan after the first solution)
-            # instead of a full count of every solution — the reference's
-            # first-solution semantics at plan level, not just result level.
-            return result.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
-        if q.construct is not None:
-            # CONSTRUCT over the decoded solution set: instantiate each
-            # template triple per solution, union, dedup (a result graph is
-            # a set of triples)
-            out = None
-            for tp in q.construct:
-                row = result.select(
-                    *(
-                        (F.col(t[1:]) if _is_var(t) else F.lit(t))
-                        .cast("string")  # a graph holds terms, not typed values
-                        .alias(c)
-                        for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
-                    )
-                )
-                out = row if out is None else out.unionByName(row)
-            return out.distinct()
-        if q.describe is not None:
-            # DESCRIBE: the distinct outgoing edges of the described
-            # resources (concise bounded description, one hop). The
-            # resource set is assembled on ENCODED ids — solution columns
-            # are ids unless FILTER/BIND forced an early decode, and
-            # constants resolve through the uri-sorted dictionary (pruned
-            # point lookups) — so the edge fetch is a semi-join of SPO on
-            # long keys; the (usually small) result decodes at the end.
-            ids = None
-            for t in q.describe:
-                if t.startswith("?"):
-                    c = result.select(F.col(t[1:]).alias("rid")).distinct()
-                    if t[1:] in literal:  # term strings -> resolve back to ids
-                        c = c.join(
-                            self._decode_dict().select(
-                                F.col("uri").alias("rid"),
-                                F.col("id").alias("__rid"),
-                            ),
-                            "rid",
-                        ).select(F.col("__rid").alias("rid"))
-                else:
-                    c = (
-                        self._decode_dict()
-                        .filter(F.col("uri") == t)
-                        .select(F.col("id").alias("rid"))
-                    )
-                ids = c if ids is None else ids.unionByName(c)
-            edges = self.store.spo().join(
-                ids.distinct().withColumnRenamed("rid", "s"), "s", "left_semi"
-            ).select("s", "p", "o")
-            # SPO is a set by construction and the semi-join preserves
-            # that, so no extra distinct is needed before or after decode
-            if decode:
-                edges = self._decode_frame(edges, pvars={"p"}).select("s", "p", "o")
-            return edges
-        if q.aggregates:
-            # GROUP BY + aggregates with SQL-oracle (varchar) value
-            # semantics, one hash aggregate, partial+final combine for free.
-            # Scale-critical placement: only the aggregate VALUE vars are
-            # decoded before grouping (SUM/AVG/MIN/MAX read term strings);
-            # the GROUP BY keys stay encoded longs through the shuffle and
-            # decode on the (small) aggregated output — the reference's
-            # decode-outputs-last rule (QueryTester.java:189-223) applied
-            # to the aggregate boundary. HAVING runs after the key decode,
-            # so its string comparisons see terms either way. decode_cols
-            # skips vars a FILTER/BIND already decoded, so a value var
-            # doubling as a group key simply groups on its decoded form.
-            from parj_spark.query.sparql import aggregate_columns
-
-            if decode and result.columns:
-                value_vars = sorted(agg_value_vars(q.aggregates))
-                if value_vars:
-                    result = decode_cols(result, value_vars)
-            grouped = result.groupBy(*q.group_by) if q.group_by else result.groupBy()
-            result = grouped.agg(*aggregate_columns(q.aggregates))
-            literal.update(a.alias for a in q.aggregates)
-            if decode and q.group_by:
-                result = decode_cols(result, list(q.group_by))
-            for h in q.having:
-                result = result.filter(filter_to_column(h, F.col))
-            result = result.select(*((q.select or []) + [a.alias for a in q.aggregates]))
-        elif q.select:
-            result = result.select(*[c for c in q.select if c in result.columns])
-        else:
-            # SELECT *: blank-node anonymous vars join but never project
-            bn = [c for c in result.columns if c.startswith("__bn")]
-            if bn:
-                result = result.drop(*bn)
-        if q.distinct:
-            result = result.distinct()
-        if order_cols:
-            result = result.orderBy(*order_cols)
-        if q.offset is not None:
-            result = result.offset(q.offset)
-        if q.limit is not None:
-            result = result.limit(q.limit)
-        return result
+        return super()._sparql_query(q, decode)
 
     def count(self, patterns: list[Pattern] | str) -> int:
         """count(*) result counting (reference A1, SQLiteLocalExecutor.java:152)."""

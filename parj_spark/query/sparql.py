@@ -77,6 +77,16 @@ the FROM graphs, named-graph set = FROM NAMED exactly);
 blocks over caller-registered relations (``services={name: DataFrame}``)
 — a federation seam where the cross-dataset join is a plain Spark join.
 
+Execution: a parsed :class:`SparqlQuery` has one lowering,
+:meth:`parj_spark.query.bgp.GraphAccess._sparql_query`.
+:meth:`~parj_spark.query.bgp.BGPEngine.sparql` runs it over the encoded
+store (opt-ins spelled as ``ENGINE_FLAGS`` keys);
+:func:`execute_on_triples` / :func:`execute_on_quads` run it over a
+string (s, p, o[, g]) relation through :class:`TripleAccess`, after
+setting up the FROM / FROM NAMED dataset (opt-ins spelled as
+``ALLOW_FLAGS``). Both spellings map onto :func:`parse_sparql`'s one set of
+switches.
+
 Term canonicalization: the engine's dictionary stores *prefixed names*
 ("ub:Course_0_0_0", "rdf:type"), so pnames pass through verbatim and full
 IRIs in <angle brackets> are compacted against the query's PREFIX
@@ -90,11 +100,30 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field, replace
 
-from parj_spark.query.bgp import Path, Pattern
+from parj_spark.query.bgp import GraphAccess, Path, Pattern, _is_var
 
 _UNSUPPORTED = {
     "FILTER", "UNION", "GRAPH", "MINUS", "SERVICE", "BIND", "VALUES",
     "CONSTRUCT", "ASK", "DESCRIBE", "EXISTS", "GROUP", "HAVING", "OFFSET",
+}
+
+# parse_sparql's opt-in extension switches (all off = reference parity)
+ALLOW_FLAGS = (
+    "allow_var_predicates", "allow_filter", "allow_union", "allow_ask",
+    "allow_minus", "allow_paths", "allow_offset", "allow_aggregates",
+    "allow_values", "allow_construct", "allow_bind", "allow_subquery",
+    "allow_describe", "allow_graph", "allow_service",
+)
+# BGPEngine.sparql / explain_sparql spelling -> parse_sparql switch (the
+# encoded engine has no quad relation or service registry, so GRAPH and
+# SERVICE have no engine spelling)
+ENGINE_FLAGS = {
+    "var_predicates": "allow_var_predicates", "filters": "allow_filter",
+    "unions": "allow_union", "ask": "allow_ask", "minus": "allow_minus",
+    "paths": "allow_paths", "offset": "allow_offset",
+    "aggregates": "allow_aggregates", "values": "allow_values",
+    "construct": "allow_construct", "bind": "allow_bind",
+    "subquery": "allow_subquery", "describe": "allow_describe",
 }
 
 _TOKEN_RE = re.compile(
@@ -161,9 +190,11 @@ class SparqlQuery:
     # BGPs that must bind the SAME variable set (enforced at parse time so
     # the union is column-aligned).
     #
-    # Group-element NORMAL FORM (both evaluators, differentially fuzzed):
-    # the element lists below lose document order, so a group evaluates as
-    #   core BGP ⋈ UNIONs ⋈ subqueries ⋈ VALUES   (always-bound joins)
+    # Group-element NORMAL FORM (GraphAccess._sparql_query, the one
+    # lowering; differentially fuzzed): the element lists below lose
+    # document order, so a group evaluates as
+    #   core BGP ⋈ UNIONs ⋈ SERVICEs ⋈ subqueries ⋈ VALUES
+    #                                             (always-bound joins)
     #   ⟕ OPTIONALs                               (left joins, hoisted last)
     #   ▷ MINUS / EXISTS, then FILTER/BIND, then modifiers
     # — i.e. as if every OPTIONAL block were written at the end of its
@@ -825,43 +856,12 @@ def _EMPTY_MODS() -> dict:
 
 
 class _Parser:
-    def __init__(
-        self,
-        toks: list[str],
-        allow_var_predicates: bool = False,
-        allow_filter: bool = False,
-        allow_union: bool = False,
-        allow_ask: bool = False,
-        allow_minus: bool = False,
-        allow_paths: bool = False,
-        allow_offset: bool = False,
-        allow_aggregates: bool = False,
-        allow_values: bool = False,
-        allow_construct: bool = False,
-        allow_bind: bool = False,
-        allow_subquery: bool = False,
-        allow_describe: bool = False,
-        allow_graph: bool = False,
-        allow_service: bool = False,
-    ):
+    def __init__(self, toks: list[str], **flags: bool):
         self.toks = toks
         self.i = 0
         self.prefixes: dict[str, str] = {}
-        self.allow_var_predicates = allow_var_predicates
-        self.allow_filter = allow_filter
-        self.allow_union = allow_union
-        self.allow_ask = allow_ask
-        self.allow_minus = allow_minus
-        self.allow_paths = allow_paths
-        self.allow_offset = allow_offset
-        self.allow_aggregates = allow_aggregates
-        self.allow_values = allow_values
-        self.allow_construct = allow_construct
-        self.allow_bind = allow_bind
-        self.allow_subquery = allow_subquery
-        self.allow_describe = allow_describe
-        self.allow_graph = allow_graph
-        self.allow_service = allow_service
+        for name in ALLOW_FLAGS:
+            setattr(self, name, flags.get(name, False))
         self._bn = 0  # fresh-variable counter for [] blank nodes
 
     def peek(self) -> str | None:
@@ -2342,50 +2342,41 @@ class _Parser:
                     )
 
 
-def parse_sparql(
-    text: str,
-    allow_var_predicates: bool = False,
-    allow_filter: bool = False,
-    allow_union: bool = False,
-    allow_ask: bool = False,
-    allow_minus: bool = False,
-    allow_paths: bool = False,
-    allow_offset: bool = False,
-    allow_aggregates: bool = False,
-    allow_values: bool = False,
-    allow_construct: bool = False,
-    allow_bind: bool = False,
-    allow_subquery: bool = False,
-    allow_describe: bool = False,
-    allow_graph: bool = False,
-    allow_service: bool = False,
-) -> SparqlQuery:
-    """Parse a SPARQL BGP SELECT query string (see module docstring for the
-    accepted subset; everything the reference rejects, we reject by default —
-    ``allow_var_predicates=True`` opts in to the engine's OSP-backed
-    variable-predicate extension, ``allow_filter=True`` to FILTER
-    expressions compiled to native Column predicates, ``allow_union=True``
-    to equal-varset UNION groups, ``allow_ask=True`` to the ASK form,
-    ``allow_minus=True`` to MINUS anti-join blocks, ``allow_paths=True``
-    to property paths — ``p+`` plus the composite forms ``^p``, ``p1/p2``,
-    ``p1|p2``, ``p*``, ``p?`` with ``( )`` grouping — ``allow_offset=True``
-    to the OFFSET modifier, ``allow_aggregates=True`` to aggregate SELECT
-    items ``(COUNT(*) AS ?n)`` / SUM / AVG / MIN / MAX (+ COUNT DISTINCT)
-    with GROUP BY and HAVING, ``allow_values=True`` to VALUES inline
-    bindings, ``allow_construct=True`` to the CONSTRUCT form,
-    ``allow_bind=True`` to BIND computed columns, ``allow_subquery=True``
-    to nested ``{ SELECT ... }`` groups, ``allow_describe=True`` to the
-    DESCRIBE form, ``allow_graph=True`` to ``GRAPH <iri>/?var { ... }``
-    blocks over a quad relation (:func:`execute_on_quads`),
-    ``allow_service=True`` to ``SERVICE [SILENT] <name> { ... }`` blocks
-    over caller-registered relations;
-    ``allow_filter=True`` also enables FILTER [NOT] EXISTS blocks)."""
-    return _Parser(
-        _tokenize(text), allow_var_predicates, allow_filter, allow_union,
-        allow_ask, allow_minus, allow_paths, allow_offset, allow_aggregates,
-        allow_values, allow_construct, allow_bind, allow_subquery,
-        allow_describe, allow_graph, allow_service,
-    ).parse()
+def parse_sparql(text: str, **flags: bool) -> SparqlQuery:
+    """Parse a SPARQL query string (see module docstring for the accepted
+    subset; everything the reference rejects, we reject by default).
+    ``flags`` are the ``ALLOW_FLAGS`` opt-ins: ``allow_var_predicates``
+    (the engine's OSP-backed variable predicates), ``allow_filter``
+    (FILTER expressions compiled to native Column predicates, FILTER
+    [NOT] EXISTS blocks included), ``allow_union`` (equal-varset UNION
+    groups), ``allow_ask`` (the ASK form), ``allow_minus`` (MINUS
+    anti-join blocks), ``allow_paths`` (property paths — ``p+`` plus the
+    composite forms ``^p``, ``p1/p2``, ``p1|p2``, ``p*``, ``p?`` with
+    ``( )`` grouping), ``allow_offset`` (the OFFSET modifier),
+    ``allow_aggregates`` (aggregate SELECT items with GROUP BY and
+    HAVING), ``allow_values`` (VALUES inline bindings),
+    ``allow_construct`` (the CONSTRUCT form), ``allow_bind`` (BIND
+    computed columns), ``allow_subquery`` (nested ``{ SELECT ... }``
+    groups), ``allow_describe`` (the DESCRIBE form), ``allow_graph``
+    (``GRAPH <iri>/?var { ... }`` blocks and FROM / FROM NAMED over a quad
+    relation, :func:`execute_on_quads`) and ``allow_service`` (``SERVICE
+    [SILENT] <name> { ... }`` blocks over caller-registered relations)."""
+    for name in flags:
+        if name not in ALLOW_FLAGS:
+            raise TypeError(
+                f"parse_sparql() got an unexpected keyword argument {name!r}"
+            )
+    return _Parser(_tokenize(text), **flags).parse()
+
+
+def parse_engine_sparql(text: str, **flags: bool) -> SparqlQuery:
+    """:func:`parse_sparql` with the opt-ins spelled as
+    :meth:`~parj_spark.query.bgp.BGPEngine.sparql` takes them
+    (``ENGINE_FLAGS``)."""
+    for name in flags:
+        if name not in ENGINE_FLAGS:
+            raise TypeError(f"sparql() got an unexpected keyword argument {name!r}")
+    return parse_sparql(text, **{ENGINE_FLAGS[k]: v for k, v in flags.items()})
 
 
 def parse_update(text: str) -> list[UpdateOp]:
@@ -2411,28 +2402,158 @@ def parse_update(text: str) -> list[UpdateOp]:
     return _Parser(_tokenize(text)).parse_update_ops()
 
 
-def execute_on_triples(
-    triples,
-    text: str,
-    allow_filter: bool = False,
-    allow_union: bool = False,
-    allow_var_predicates: bool = False,
-    allow_ask: bool = False,
-    allow_minus: bool = False,
-    allow_paths: bool = False,
-    allow_offset: bool = False,
-    allow_aggregates: bool = False,
-    allow_values: bool = False,
-    allow_construct: bool = False,
-    allow_bind: bool = False,
-    allow_subquery: bool = False,
-    allow_describe: bool = False,
-    allow_graph: bool = False,
-    allow_service: bool = False,
-    services: "dict | None" = None,
-):
-    """Execute a SPARQL BGP SELECT directly over a (s, p, o) string-typed
-    triples DataFrame — no dictionary encoding or stats required.
+class TripleAccess(GraphAccess):
+    """A string-typed (s, p, o) relation as the graph of the shared SPARQL
+    lowering (:class:`~parj_spark.query.bgp.GraphAccess`): every term is
+    its own join key, so constants resolve to themselves and decoding is a
+    no-op — no dictionary, no stats, and no Spark job while a plan is
+    built (property-path closures aside). Join order: most-constant-bound
+    pattern first, then connected patterns — each scan is a filtered
+    projection, so Catalyst pushes the constant filters into the scan and
+    AQE picks the join strategy.
+
+    ``quads`` is the named-graph relation (s, p, o, g) for GRAPH patterns,
+    or None; ``services`` maps SERVICE names to registered (s, p, o)
+    relations."""
+
+    TERM_TYPE = "string"
+
+    def __init__(self, triples, quads=None, services: "dict | None" = None):
+        self.triples = triples
+        self.quads = quads
+        self.services = services or {}
+        self.spark = triples.sparkSession
+        self._closure_cache: dict = {}
+        self._graphs: dict = {}  # named graph -> its TripleAccess (paths)
+
+    def _named(self):
+        if self.quads is None:
+            raise ValueError(
+                "GRAPH pattern needs a quad relation with a 'g' column "
+                "(use execute_on_quads)"
+            )
+        return self.quads
+
+    def _graph(self, g: "str | None") -> "TripleAccess":
+        """The access a property path in graph context ``g`` walks: the
+        default graph, or one constant named graph (variable-graph paths
+        are rejected at parse time)."""
+        if g is None:
+            return self
+        if g not in self._graphs:
+            from pyspark.sql import functions as F
+
+            self._graphs[g] = TripleAccess(
+                self._named().filter(F.col("g") == g).drop("g")
+            )
+        return self._graphs[g]
+
+    def _scan(self, pat: Pattern):
+        # one (var term -> source column) slot per distinct var: a repeated
+        # var adds an equality filter instead of a duplicate column
+        from pyspark.sql import functions as F
+
+        p = pat.p
+        if isinstance(p, str) and not _is_var(p) and p.endswith("+"):
+            p = Path("plus", (Path("link", (p[:-1],)),))
+        if isinstance(p, Path):
+            # property path: the scan is the path's pair relation (s, o
+            # columns only; the predicate is consumed by the path)
+            consts = [t for t in (pat.s, pat.o) if not _is_var(t)]
+            df = self._graph(pat.g)._path_pairs(p, consts[0] if consts else None)
+            terms = [(pat.s, "s"), (pat.o, "o")]
+        else:
+            terms = [(pat.s, "s"), (pat.p, "p"), (pat.o, "o")]
+            if pat.g is None:
+                df = self.triples
+            else:
+                # GRAPH ranges over the *named* graphs: a variable graph
+                # must not bind the default graph's null label (a constant
+                # graph excludes nulls via the equality filter anyway)
+                df = self._named().filter(F.col("g").isNotNull())
+                terms.append((pat.g, "g"))
+        slots: dict[str, str] = {}
+        for term, col in terms:
+            if not _is_var(term):
+                df = df.filter(F.col(col) == term)
+            elif term in slots:
+                df = df.filter(F.col(slots[term]) == F.col(col))
+            else:
+                slots[term] = col
+        if not slots:  # fully bound: existence probe
+            return df.limit(1).select(F.lit(1).alias("__exists"))
+        return df.select(*[F.col(c).alias(v[1:]) for v, c in slots.items()])
+
+    def _bgp(self, patterns: list[Pattern]):
+        def n_consts(p: Pattern) -> int:
+            return sum(not _is_var(t) for t in (p.s, p.o))
+
+        remaining = sorted(patterns, key=lambda p: -n_consts(p))
+        ordered = [remaining.pop(0)]
+        bound = set(ordered[0].vars())
+        while remaining:
+            nxt = next((p for p in remaining if p.vars() & bound), remaining[0])
+            remaining.remove(nxt)
+            ordered.append(nxt)
+            bound |= nxt.vars()
+        out = None
+        for pat in ordered:
+            sc = self._scan(pat)
+            if out is None:
+                out = sc
+            else:
+                shared = sorted(set(out.columns) & set(sc.columns) - {"__exists"})
+                out = out.join(sc, on=shared) if shared else out.crossJoin(sc)
+        return out.drop("__exists") if "__exists" in out.columns else out
+
+    def _block(self, group, terms):
+        return self._bgp(group)
+
+    def _resolve(self, patterns):
+        return {}
+
+    def _term_ids(self, terms):
+        return {t: t for t in terms}
+
+    def _pred_id(self, term):
+        return term
+
+    def _check_var_spaces(self, patterns):
+        pass  # one term space: a var may join predicate and entity slots
+
+    def _edges_all(self):
+        return self.triples
+
+    def _decode_frame(self, df, pvars, only=None):
+        return df
+
+    def _encode(self, df, v, gated=True):
+        return df
+
+    def _with_term(self, df, v, pvars):
+        from pyspark.sql import functions as F
+
+        return df.withColumn(f"__lit_{v}", F.col(v))
+
+    def _const_frame(self, term, col):
+        return self.spark.createDataFrame([(term,)], f"{col} string")
+
+    def _described(self, ids):
+        # the input relation may repeat a triple; the result is a graph
+        return (
+            self.triples.join(ids, "s", "left_semi").select("s", "p", "o").distinct()
+        )
+
+
+def execute_on_triples(triples, text: str, services: "dict | None" = None, **flags):
+    """Execute a SPARQL query directly over a (s, p, o) string-typed
+    triples DataFrame — no dictionary encoding or stats required. ``flags``
+    are :func:`parse_sparql`'s ``allow_*`` opt-ins.
+
+    This is the parser's oracle-checkable execution path (used by the
+    driver-contract kg_sparql_* queries): the query runs through the same
+    lowering as :meth:`BGPEngine.sparql`, over a :class:`TripleAccess`.
+    ``SELECT *`` columns come out sorted by name.
 
     ``allow_service=True`` + ``services={name: DataFrame}`` enables
     ``SERVICE [SILENT] <name> { ... }`` blocks — a *federation seam*, not a
@@ -2442,13 +2563,6 @@ def execute_on_triples(
     strategy, exactly like any other join — no endpoint round-trips). An
     unregistered name errors; with SILENT the block contributes nothing,
     the spec's empty-solution failure semantics.
-
-    This is the parser's oracle-checkable execution path (used by the
-    driver-contract kg_sparql_* queries); :meth:`BGPEngine.sparql` is the
-    stats-driven path over the materialized permutation tables. Join order:
-    most-constant-bound pattern first, then connected patterns — each scan
-    is a predicate-filtered projection, so Catalyst pushes the constant
-    filters into the scan and AQE picks the join strategy.
 
     With ``allow_graph=True`` the input may be a *quad* relation carrying a
     fourth string column ``g`` (null = default graph; see
@@ -2460,30 +2574,13 @@ def execute_on_triples(
     """
     from pyspark.sql import functions as F
 
-    q = parse_sparql(
-        text,
-        allow_filter=allow_filter,
-        allow_union=allow_union,
-        allow_var_predicates=allow_var_predicates,
-        allow_ask=allow_ask,
-        allow_minus=allow_minus,
-        allow_paths=allow_paths,
-        allow_offset=allow_offset,
-        allow_aggregates=allow_aggregates,
-        allow_values=allow_values,
-        allow_construct=allow_construct,
-        allow_bind=allow_bind,
-        allow_subquery=allow_subquery,
-        allow_describe=allow_describe,
-        allow_graph=allow_graph,
-        allow_service=allow_service,
-    )
+    q = parse_sparql(text, **flags)
 
     # the quad interpretation (g column = graph label, default graph = null)
     # only applies under the opt-in: without allow_graph a stray 'g' column
     # is just data and patterns match every row, exactly as before the
     # extension existed
-    quads = triples if (allow_graph and "g" in triples.columns) else None
+    quads = triples if (flags.get("allow_graph") and "g" in triples.columns) else None
     if quads is not None:
         if q.from_graphs or q.from_named:
             # explicit dataset: default graph = set-merge of the FROM
@@ -2514,462 +2611,12 @@ def execute_on_triples(
             "(use execute_on_quads)"
         )
 
-    def _is_var(t) -> bool:
-        return isinstance(t, str) and t.startswith("?")
-
-    rel_cache: dict = {}
-
-    def _closure_of(edges):
-        """Distinct (s, o) closure of an edge relation — semi-naive delta
-        iteration, lineage cut per round (see BGPEngine._closure_edges for
-        the encoded-id twin)."""
-        edges = edges.distinct().localCheckpoint()
-        paths, frontier = edges, edges
-        for _ in range(64):
-            ext = (
-                frontier.withColumnRenamed("o", "m")
-                .join(edges.withColumnRenamed("s", "m"), "m")
-                .select("s", "o")
-            )
-            frontier = (
-                ext.join(paths, ["s", "o"], "left_anti").distinct().localCheckpoint()
-            )
-            if frontier.isEmpty():
-                return paths
-            paths = paths.union(frontier).localCheckpoint()
-        raise RuntimeError("property-path closure exceeded 64 hops")
-
-    def _nodes(rel, gkey):
-        # zero-length path domain: every term in subject or object position
-        # (of the pattern's graph context — default graph when gkey is None)
-        key = ("__nodes__", gkey)
-        if key not in rel_cache:
-            rel_cache[key] = (
-                rel.select(F.col("s").alias("n"))
-                .union(rel.select(F.col("o").alias("n")))
-                .distinct()
-                .localCheckpoint()
-            )
-        return rel_cache[key]
-
-    def _path_rel(path: Path, rel, gkey):
-        """(s, o) pair relation of a composite path (see BGPEngine._path_rel
-        for the encoded-id twin and the semantics notes). ``rel`` is the
-        (s, p, o) relation of the pattern's graph context — the default
-        graph, or one constant named graph (gkey keys the cache per graph);
-        variable-graph paths are rejected at parse time."""
-        key = (path, gkey)
-        if key in rel_cache:
-            return rel_cache[key]
-        if path.op == "link":
-            df = rel.filter(F.col("p") == path.parts[0]).select("s", "o")
-        elif path.op == "inv":
-            df = _path_rel(path.parts[0], rel, gkey).select(
-                F.col("o").alias("s"), F.col("s").alias("o")
-            )
-        elif path.op == "seq":
-            df = _path_rel(path.parts[0], rel, gkey)
-            for nxt in path.parts[1:]:
-                df = (
-                    df.withColumnRenamed("o", "m")
-                    .join(_path_rel(nxt, rel, gkey).withColumnRenamed("s", "m"), "m")
-                    .select("s", "o")
-                )
-        elif path.op == "alt":
-            df = _path_rel(path.parts[0], rel, gkey)
-            for nxt in path.parts[1:]:
-                df = df.unionByName(_path_rel(nxt, rel, gkey))
-        elif path.op == "negset":
-            # any single edge whose predicate is NOT in the listed set
-            df = rel.filter(~F.col("p").isin(list(path.parts))).select("s", "o")
-        elif path.op == "plus":
-            df = _closure_of(_path_rel(path.parts[0], rel, gkey))
-        else:  # star / opt
-            zero = _nodes(rel, gkey).select(
-                F.col("n").alias("s"), F.col("n").alias("o")
-            )
-            step = _path_rel(path.parts[0], rel, gkey)
-            if path.op == "star":
-                step = _closure_of(step)
-            df = step.unionByName(zero).distinct()
-        rel_cache[key] = df
-        return df
-
-    def scan(pat: Pattern, service_rel=None):
-        # one (var term -> source column) slot per distinct var: a repeated
-        # var adds an equality filter instead of a duplicate column.
-        # ``service_rel`` overrides the scanned relation for SERVICE-block
-        # patterns (always plain — paths/GRAPH are parse-rejected there).
-        p = pat.p
-        if isinstance(p, str) and not _is_var(p) and p.endswith("+"):
-            p = Path("plus", (Path("link", (p[:-1],)),))
-        if isinstance(p, Path):
-            # property path: the scan is the path's pair relation (s, o
-            # columns only; the predicate is consumed by the path). Inside a
-            # constant GRAPH block the relation is that one graph's edge set
-            # (variable-graph paths are rejected at parse time).
-            if pat.g is None:
-                rel, gkey = triples, None
-            else:
-                if quads is None:
-                    raise ValueError(
-                        "GRAPH pattern needs a quad relation with a 'g' "
-                        "column (use execute_on_quads)"
-                    )
-                rel, gkey = quads.filter(F.col("g") == pat.g).drop("g"), pat.g
-            consts = [t for t in (pat.s, pat.o) if not _is_var(t)]
-            if p.op in ("star", "opt") and consts:
-                # constant-anchored zero-length form: the identity pair is
-                # (c, c), gated on c occurring in the graph by a lazy
-                # limit(1) probe — never the whole node-domain distinct
-                # (see BGPEngine._scan for the encoded-id twin)
-                c = consts[0]
-                step = _path_rel(
-                    Path("plus", (p.parts[0],)) if p.op == "star" else p.parts[0],
-                    rel,
-                    gkey,
-                )
-                zero = (
-                    rel.filter((F.col("s") == c) | (F.col("o") == c))
-                    .limit(1)
-                    .select(F.lit(c).alias("s"), F.lit(c).alias("o"))
-                )
-                df = step.unionByName(zero).distinct()
-            else:
-                df = _path_rel(p, rel, gkey)
-            slots: dict[str, str] = {}
-            for term, col in ((pat.s, "s"), (pat.o, "o")):
-                if not _is_var(term):
-                    df = df.filter(F.col(col) == term)
-                elif term in slots:
-                    df = df.filter(F.col(slots[term]) == F.col(col))
-                else:
-                    slots[term] = col
-            cols = [F.col(c).alias(v[1:]) for v, c in slots.items()]
-            if not cols:
-                return df.limit(1).select(F.lit(1).alias("__exists"))
-            return df.select(*cols)
-        terms = [(pat.s, "s"), (pat.p, "p"), (pat.o, "o")]
-        if pat.g is not None:
-            if quads is None:
-                raise ValueError(
-                    "GRAPH pattern needs a quad relation with a 'g' column "
-                    "(use execute_on_quads)"
-                )
-            # GRAPH ranges over the *named* graphs: a variable graph must
-            # not bind the default graph's null label (a constant graph
-            # excludes nulls via the equality filter anyway)
-            df = quads.filter(F.col("g").isNotNull())
-            terms.append((pat.g, "g"))
-        else:
-            df = triples if service_rel is None else service_rel
-        slots: dict[str, str] = {}
-        for term, col in terms:
-            if not _is_var(term):
-                df = df.filter(F.col(col) == term)
-            elif term in slots:
-                df = df.filter(F.col(slots[term]) == F.col(col))
-            else:
-                slots[term] = col
-        cols = [F.col(c).alias(v[1:]) for v, c in slots.items()]
-        if not cols:  # fully bound: existence probe
-            cols = [F.lit(1).alias("__exists")]
-            df = df.limit(1)
-        return df.select(*cols)
-
-    def n_consts(p: Pattern) -> int:
-        return sum(not _is_var(t) for t in (p.s, p.o))
-
-    def join_bgp(pats, service_rel=None):
-        remaining = sorted(pats, key=lambda p: -n_consts(p))
-        ordered = [remaining.pop(0)]
-        bound = set(ordered[0].vars())
-        while remaining:
-            nxt = next((p for p in remaining if p.vars() & bound), remaining[0])
-            remaining.remove(nxt)
-            ordered.append(nxt)
-            bound |= nxt.vars()
-        out = None
-        for pat in ordered:
-            sc = scan(pat, service_rel)
-            if out is None:
-                out = sc
-            else:
-                shared = sorted(set(out.columns) & set(sc.columns) - {"__exists"})
-                out = out.join(sc, on=shared) if shared else out.crossJoin(sc)
-        if "__exists" in out.columns:
-            out = out.drop("__exists")
-        return out
-
-    def _lower(q: SparqlQuery):
-        """Recursive lowering of one (sub)query to a DataFrame."""
-        result = join_bgp(q.patterns) if q.patterns else None
-        for grp in q.unions:
-            # alternatives bind the same vars (parse-enforced) -> a plain
-            # column-aligned union, then an equi-join with the core BGP
-            udf_ = join_bgp(grp[0])
-            for alt in grp[1:]:
-                udf_ = udf_.unionByName(join_bgp(alt))
-            if result is None:
-                result = udf_
-            else:
-                shared = sorted(set(result.columns) & set(udf_.columns))
-                result = result.join(udf_, on=shared) if shared else result.crossJoin(udf_)
-        for silent, name, spats in q.services:
-            rel = (services or {}).get(name)
-            if rel is None:
-                if silent:
-                    # SERVICE SILENT failure = the single empty solution:
-                    # it joins as identity and leaves the block's variables
-                    # unbound (null), so projections still resolve
-                    svars = sorted(
-                        {
-                            v for p in spats for v in p.vars()
-                            if not v.startswith("__bn")
-                        }
-                    )
-                    nul = F.lit(None).cast("string")
-                    if result is None:
-                        result = triples.sparkSession.range(1).select(
-                            *[nul.alias(v) for v in svars]
-                        )
-                    else:
-                        for v in svars:
-                            if v not in result.columns:
-                                result = result.withColumn(v, nul)
-                    continue
-                raise ValueError(
-                    f"SERVICE {name!r} is not registered "
-                    "(pass services={name: DataFrame})"
-                )
-            sdf = join_bgp(spats, service_rel=rel.select("s", "p", "o"))
-            if result is None:
-                result = sdf
-            else:
-                shared = sorted(set(result.columns) & set(sdf.columns))
-                result = (
-                    result.join(sdf, on=shared)
-                    if shared
-                    else result.crossJoin(sdf)
-                )
-        for sub in q.subqueries:
-            # nested SELECT: evaluated independently (its own lowering,
-            # recursively), then joined with the enclosing group on the
-            # shared projected variables — SPARQL bottom-up semantics
-            sdf = _lower(sub)
-            if result is None:
-                result = sdf
-                continue
-            shared = sorted(set(result.columns) & set(sdf.columns))
-            result = result.join(sdf, on=shared) if shared else result.crossJoin(sdf)
-        for vars_, rows in q.values:
-            # VALUES inline bindings: rows group by their bound-variable
-            # mask (UNDEF binds nothing in its row); each mask group joins
-            # on its own shared vars and the branches union — every row
-            # lives in exactly one mask, so the union IS SPARQL's
-            # compatibility (multiset) join. This path compares term
-            # strings directly; the engine path resolves join keys to ids.
-            by_mask: dict = {}
-            for r in rows:
-                mask = tuple(v for v, t in zip(vars_, r) if t is not None)
-                by_mask.setdefault(mask, []).append(
-                    tuple(t for t in r if t is not None)
-                )
-            sess = triples.sparkSession
-            branches = []
-            for mask, mrows in sorted(by_mask.items()):
-                if mask:
-                    vdf = sess.createDataFrame(
-                        mrows, schema=", ".join(f"{v} string" for v in mask)
-                    )
-                elif result is not None:
-                    # all-UNDEF rows constrain nothing: k of them multiply
-                    # every solution k times (bag semantics)
-                    vdf = sess.range(len(mrows)).select(
-                        F.lit(1).alias("__dup")
-                    )
-                else:
-                    vdf = sess.createDataFrame(
-                        [(None,) * len(vars_)] * len(mrows),
-                        schema=", ".join(f"{v} string" for v in vars_),
-                    )
-                if result is None:
-                    br = vdf
-                else:
-                    shared = sorted(set(result.columns) & set(vdf.columns))
-                    br = (
-                        result.join(F.broadcast(vdf), on=shared)
-                        if shared
-                        else result.crossJoin(F.broadcast(vdf))
-                    )
-                if "__dup" in br.columns:
-                    br = br.drop("__dup")
-                for v in vars_:
-                    if v not in br.columns:
-                        br = br.withColumn(v, F.lit(None).cast("string"))
-                branches.append(br)
-            new = branches[0]
-            for b in branches[1:]:
-                new = new.unionByName(b)
-            result = new
-        for gi, group in enumerate(q.optional):
-            # SPARQL group semantics: the patterns of one OPTIONAL block join
-            # each other first; the assembled group left-joins the core, so the
-            # block matches as a whole or leaves all its vars unbound
-            gdf = None
-            for pat in group:
-                sc = scan(pat)
-                if gdf is None:
-                    gdf = sc
-                else:
-                    shared = sorted(set(gdf.columns) & set(sc.columns) - {"__exists"})
-                    gdf = gdf.join(sc, on=shared) if shared else gdf.crossJoin(sc)
-            if "__exists" in gdf.columns:
-                gdf = gdf.drop("__exists")
-            # block-scoped FILTERs pre-filter the block (LeftJoin(G, P, E)
-            # with E over P's vars — parse-enforced), so a row whose E
-            # fails leaves the block vars unbound rather than dropping
-            if gi < len(q.optional_filters):
-                for fexpr in q.optional_filters[gi]:
-                    gdf = gdf.filter(filter_to_column(fexpr, F.col))
-            if not gdf.columns:
-                continue  # fully-bound block binds nothing
-            shared = sorted(set(result.columns) & set(gdf.columns))
-            # no shared vars: constant-true left join (row-preserving even when
-            # the optional side is empty — crossJoin would annihilate the core)
-            result = (
-                result.join(gdf, on=shared, how="left")
-                if shared
-                else result.join(gdf, F.lit(True), "left")
-            )
-
-        for gi, group in enumerate(q.minus):
-            # SPARQL MINUS: drop core solutions whose shared-variable bindings
-            # have a match in the block — a left anti-join, the same plan shape
-            # as the reference-parity q06/q24 anti-joins. A block sharing no
-            # variable with the core removes nothing (SPARQL disjoint-domain
-            # rule), so it is skipped outright rather than anti-joining on
-            # nothing (which would annihilate the result). Block-scoped
-            # FILTERs pre-filter the block — exact per spec: a MINUS block
-            # never sees outer bindings.
-            mdf = join_bgp(group)
-            if "__exists" in mdf.columns:
-                mdf = mdf.drop("__exists")
-            if gi < len(q.minus_filters):
-                for fexpr in q.minus_filters[gi]:
-                    mdf = mdf.filter(filter_to_column(fexpr, F.col))
-            shared = sorted(set(result.columns) & set(mdf.columns))
-            if shared:
-                result = result.join(mdf, on=shared, how="left_anti")
-
-        for gi, (positive, group) in enumerate(q.exists):
-            # FILTER [NOT] EXISTS: correlated existence on the shared vars —
-            # semi-join (anti for NOT). Unlike MINUS, a no-shared-variable
-            # block is a GLOBAL gate: any solution keeps (EXISTS) or drops
-            # (NOT EXISTS) every core row, expressed as a constant-true
-            # semi/anti join against the block's first row. Block-scoped
-            # FILTERs pre-filter the block (exact for block-bound vars: the
-            # join equates shared vars, so substitution = pre-filter).
-            gdf = join_bgp(group)
-            if "__exists" in gdf.columns:
-                gdf = gdf.drop("__exists")
-            if gi < len(q.exists_filters):
-                for fexpr in q.exists_filters[gi]:
-                    gdf = gdf.filter(filter_to_column(fexpr, F.col))
-            shared = sorted(set(result.columns) & set(gdf.columns))
-            how = "left_semi" if positive else "left_anti"
-            if shared:
-                result = result.join(gdf, on=shared, how=how)
-            else:
-                result = result.join(gdf.limit(1), F.lit(True), how)
-
-        for expr, v in q.binds:
-            # BIND(expr AS ?v): a computed column on the solution set, in
-            # document order (later binds may reference earlier targets).
-            # Applied after ALL the group's joins — including OPTIONAL
-            # blocks, whose vars a bind/SELECT expression may reference
-            # (e.g. COALESCE over an optional binding) — matching the
-            # engine path's placement.
-            result = result.withColumn(v, bind_to_column(expr, F.col))
-        # FILTERs apply after OPTIONAL joins but before projection (their vars
-        # need not be selected); compiled to native Column predicates
-        for fexpr in q.filters:
-            result = result.filter(filter_to_column(fexpr, F.col))
-
-        if q.ask:
-            # ASK: one row, one boolean — any solution exists? limit(1) first so
-            # the plan is an existence probe (LocalLimit stops each task after
-            # the first solution), not a full join + count for a boolean.
-            return result.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
-
-        if q.construct is not None:
-            # CONSTRUCT: instantiate each template triple once per solution,
-            # union the instantiations and deduplicate — a SPARQL result graph
-            # is a set of triples
-            out = None
-            for tp in q.construct:
-                row = result.select(
-                    *(
-                        (F.col(t[1:]) if _is_var(t) else F.lit(t))
-                        .cast("string")  # a graph holds terms, not typed values
-                        .alias(c)
-                        for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
-                    )
-                )
-                out = row if out is None else out.unionByName(row)
-            return out.distinct()
-        if q.describe is not None:
-            # DESCRIBE: distinct outgoing edges (subject position) of the
-            # described resources — ?vars take their distinct solution
-            # values, plain terms are constants; one semi-join of the
-            # triples on the assembled resource set
-            res = None
-            for t in q.describe:
-                c = (
-                    result.select(F.col(t[1:]).alias("s")).distinct()
-                    if t.startswith("?")
-                    else triples.sparkSession.createDataFrame([(t,)], "s string")
-                )
-                res = c if res is None else res.unionByName(c)
-            return (
-                triples.join(res.distinct(), "s", "left_semi")
-                .select("s", "p", "o")
-                .distinct()  # the result is a graph (a set of triples)
-            )
-        if q.aggregates:
-            # GROUP BY + aggregates, then HAVING over the aliases — one hash
-            # aggregate (partial+final map-side combine for free)
-            grouped = result.groupBy(*q.group_by) if q.group_by else result.groupBy()
-            result = grouped.agg(*aggregate_columns(q.aggregates))
-            for h in q.having:
-                result = result.filter(filter_to_column(h, F.col))
-            result = result.select(*((q.select or []) + [a.alias for a in q.aggregates]))
-        else:
-            opt_flat = [p for g in q.optional for p in g]
-            union_flat = [p for grp in q.unions for alt in grp for p in alt]
-            out_vars = q.select or sorted(
-                v
-                for v in (
-                    {v for p in q.patterns + opt_flat + union_flat for v in p.vars()}
-                    | {v for vars_, _ in q.values for v in vars_}
-                    | {v for _, v in q.binds}
-                    | {v for sub in q.subqueries for v in query_projection(sub)}
-                )
-                # blank-node anonymous vars join but are never projected
-                if not v.startswith("__bn")
-            )
-            result = result.select(*out_vars)
-        if q.distinct:
-            result = result.distinct()
-        if q.order_by:
-            result = result.orderBy(*order_columns(q.order_by))
-        if q.offset is not None:
-            result = result.offset(q.offset)
-        if q.limit is not None:
-            result = result.limit(q.limit)
-        return result
-
-    return _lower(q)
+    df = TripleAccess(triples, quads, services)._sparql_query(q, decode=True)
+    if q.select is None and not (
+        q.aggregates or q.ask or q.construct is not None or q.describe is not None
+    ):
+        df = df.select(*sorted(df.columns))
+    return df
 
 
 def execute_on_quads(quads, text: str, **allow_flags):

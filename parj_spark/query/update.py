@@ -30,8 +30,10 @@ missing half, Spark-first, in two layers:
 Scale notes: the store path never rewrites or re-encodes the base graph.
 The insert existence guard reads only the predicate slices the inserts
 touch (p-partition pruning on the base layout and the delta tail); the
-WHERE group is planned by the regular statistics-driven BGPEngine over the
-live merge-on-read view.
+WHERE group is parsed once under the caller's ``allow_*`` flags and planned
+by the regular statistics-driven BGPEngine over the live merge-on-read
+view — the same SPARQL lowering :func:`apply_update_on_triples` reaches
+through ``execute_on_triples``.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from parj_spark.query.bgp import Pattern
 from parj_spark.query.sparql import (
     UpdateOp,
     execute_on_triples,
+    parse_sparql,
     parse_update,
 )
 
@@ -153,10 +156,11 @@ def apply_update(store, stream_dir: str, text: str, **flags):
     pay one anti-join against the (small) tombstone set, and
     :func:`~parj_spark.streaming.compact_stream` folds both delta kinds back
     into the sorted/bucketed layout. ``store`` may be a base ``GraphStore``
-    or an existing ``StreamedGraphStore`` over the same ``stream_dir``."""
+    or an existing ``StreamedGraphStore`` over the same ``stream_dir``.
+    ``flags`` are :func:`~parj_spark.query.sparql.parse_sparql`'s
+    ``allow_*`` opt-ins for the WHERE groups."""
     from parj_spark.construct.pipeline import GraphStore
     from parj_spark.query.bgp import BGPEngine
-    from parj_spark.query.sparql import parse_sparql
     from parj_spark.streaming import (
         StreamedGraphStore,
         append_epoch,
@@ -169,16 +173,6 @@ def apply_update(store, stream_dir: str, text: str, **flags):
     # base catalogs for append_epoch (which layers prior deltas itself — a
     # combined view here would double them in its union)
     base = GraphStore(spark, out_dir)
-    engine_flags = dict(
-        var_predicates=flags.get("allow_var_predicates", False),
-        filters=flags.get("allow_filter", False),
-        unions=flags.get("allow_union", False),
-        minus=flags.get("allow_minus", False),
-        paths=flags.get("allow_paths", False),
-        values=flags.get("allow_values", False),
-        bind=flags.get("allow_bind", False),
-        subquery=flags.get("allow_subquery", False),
-    )
     for op in parse_update(text):
         view = StreamedGraphStore(spark, out_dir, stream_dir=stream_dir)
         if op.where_text is None:
@@ -188,9 +182,8 @@ def apply_update(store, stream_dir: str, text: str, **flags):
         else:
             # gate the WHERE group under the caller's flags (parse_update
             # itself is permissive; extension gating happens here)
-            parse_sparql(op.where_text, **flags)
-            eng = BGPEngine(view)
-            sols = eng.sparql(op.where_text, **engine_flags).localCheckpoint()
+            q = parse_sparql(op.where_text, **flags)
+            sols = BGPEngine(view)._sparql_query(q, decode=True).localCheckpoint()
             dels = _instantiate(sols, op.delete_templates) if op.delete_templates else None
             ins = _instantiate(sols, op.insert_templates) if op.insert_templates else None
 

@@ -60,30 +60,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from parj_spark.query.sparql import ALLOW_FLAGS, ENGINE_FLAGS  # noqa: E402
+
 # every extension flag sparql() exposes; --strict turns them all off
-EXTENSIONS = dict(
-    var_predicates=True, filters=True, unions=True, ask=True, minus=True,
-    paths=True, offset=True, aggregates=True, values=True, construct=True,
-    bind=True, subquery=True, describe=True,
-)
+EXTENSIONS = dict.fromkeys(ENGINE_FLAGS, True)
 
 # allow-flag spelling of EXTENSIONS for the update path (parse/execute
 # layer kwargs; ask/construct/describe are query forms, not update ones)
-UPDATE_ALLOW = dict(
-    allow_var_predicates=True, allow_filter=True, allow_union=True,
-    allow_minus=True, allow_paths=True, allow_offset=True,
-    allow_aggregates=True, allow_values=True, allow_bind=True,
-    allow_subquery=True,
-)
+UPDATE_ALLOW = {
+    ENGINE_FLAGS[k]: True for k in EXTENSIONS if k not in ("ask", "construct", "describe")
+}
 
 # the full allow set for --nquads mode: every query form plus the GRAPH /
 # FROM named-graph surface (the whole mode is extension territory — the
 # reference is single-graph, so --strict and --nquads are incompatible)
-QUADS_ALLOW = dict(
-    UPDATE_ALLOW,
-    allow_ask=True, allow_construct=True, allow_describe=True,
-    allow_graph=True,
-)
+QUADS_ALLOW = dict.fromkeys((f for f in ALLOW_FLAGS if f != "allow_service"), True)
 
 
 class QuadsEngine:

@@ -209,6 +209,24 @@ def test_var_predicate_opt_in(engine):
     assert res.count() > 0 and set(res.columns) == {"x", "p"}
 
 
+def test_opt_in_names_per_entry_point():
+    """parse_sparql / execute_on_triples / apply_update take the allow_*
+    spelling, BGPEngine.sparql / explain_sparql the engine spelling (no
+    GRAPH or SERVICE); an unknown name raises TypeError naming it."""
+    from parj_spark.query.sparql import ALLOW_FLAGS, ENGINE_FLAGS, parse_engine_sparql
+
+    text = "SELECT ?x WHERE { ?x <u:p> ?y }"
+    assert set(ENGINE_FLAGS.values()) == set(ALLOW_FLAGS) - {"allow_graph", "allow_service"}
+    for name in ALLOW_FLAGS:
+        parse_sparql(text, **{name: True})
+    for name in ENGINE_FLAGS:
+        parse_engine_sparql(text, **{name: True})
+    with pytest.raises(TypeError, match="'allow_filters'"):
+        parse_sparql(text, allow_filters=True)
+    with pytest.raises(TypeError, match="'allow_filter'"):
+        parse_engine_sparql(text, allow_filter=True)
+
+
 def test_filter_rejected_by_default():
     with pytest.raises(ValueError, match="allow_filter=True"):
         parse_sparql(

@@ -1,12 +1,16 @@
 """Differential fuzzing of the SPARQL surface: randomized queries executed
-three independent ways must agree exactly —
+several ways must agree exactly —
 
   1. the stats-driven encoded engine over the BUCKETED layout (the default
      100 TB join path: exchange-free SMJ / size-gated broadcasts),
   2. the same engine forced onto the PARTITIONED parquet fallback
      (different physical plans, same logical semantics),
-  3. ``execute_on_triples`` — the naive string-relation evaluator the
-     driver-contract oracles already vouch for query-by-query.
+  3. ``execute_on_triples`` — the same SPARQL lowering over the string
+     triple relation (the string access: no dictionary, heuristic join
+     order), which the driver-contract oracles vouch for query-by-query,
+  4. for the base generator's shapes (BGP, FILTER =/!=/IN/BOUND, OPTIONAL,
+     UNION, DISTINCT, ORDER+LIMIT), a DuckDB SQL twin over the decoded
+     triples — the independent oracle, since 1-3 share one lowering.
 
 The hand-written contract queries pin ~90 fixed shapes; this fuzzer walks
 the combinatorial space BETWEEN them (pattern topology x constant placement
@@ -23,12 +27,13 @@ Hypothesis settings are derandomized so CI failures reproduce exactly.
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from parj_spark.query import BGPEngine
-from parj_spark.query.sparql import execute_on_triples
+from parj_spark.query.sparql import ENGINE_FLAGS, execute_on_triples
 
 VARS = ["a", "b", "c", "d"]
 ABSENT = "ub:Nowhere_404"  # never generated by the fixture ontology
@@ -59,13 +64,18 @@ def diff(spark, tiny_graph):
         p: (sorted(set(subs))[:12], sorted(set(objs))[:12])
         for p, (subs, objs) in by_pred.items()
     }
-    return {
+    duck = duckdb.connect()
+    duck.execute("CREATE TABLE t (s VARCHAR, p VARCHAR, o VARCHAR)")
+    duck.executemany("INSERT INTO t VALUES (?, ?, ?)", [tuple(r) for r in rows])
+    yield {
         "bucketed": BGPEngine(tiny_graph),  # auto: picks up the layout
         "partitioned": BGPEngine(tiny_graph, bucketed_prefix=None),
         "triples": triples,
+        "duck": duck,
         "preds": sorted(vocab),
         "vocab": vocab,
     }
+    duck.close()
 
 
 def _term_sparql(t: str) -> str:
@@ -81,12 +91,49 @@ def _filter_term(t: str) -> str:
     return '"' + t.replace("\\", "\\\\").replace('"', '\\"') + '"'
 
 
-def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
+def _sql_str(t: str) -> str:
+    return "'" + t.replace("'", "''") + "'"
+
+
+def _sql_bgp(pats: list) -> tuple[str, set]:
+    """DuckDB SELECT over ``t(s, p, o)`` for a BGP whose slots are "?var"
+    or ("c", term): one self-join alias per pattern, each var projected
+    from its first slot and equated with the later ones."""
+    binds: dict[str, str] = {}
+    conds = []
+    for i, (s, p, o) in enumerate(pats):
+        conds.append(f"t{i}.p = {_sql_str(p)}")
+        for term, col in ((s, "s"), (o, "o")):
+            ref = f"t{i}.{col}"
+            if isinstance(term, tuple):
+                conds.append(f"{ref} = {_sql_str(term[1])}")
+            elif term[1:] in binds:
+                conds.append(f"{ref} = {binds[term[1:]]}")
+            else:
+                binds[term[1:]] = ref
+    cols = ", ".join(f"{ref} AS {v}" for v, ref in binds.items())
+    froms = ", ".join(f"t AS t{i}" for i in range(len(pats)))
+    return f"SELECT {cols} FROM {froms} WHERE {' AND '.join(conds)}", set(binds)
+
+
+def _sql_edge(j: str, v: str, preds: list) -> str:
+    """Bag union of ``?j <p> ?v`` over ``preds`` as a (j, v) relation."""
+    return " UNION ALL ".join(
+        f"SELECT s AS {j}, o AS {v} FROM t WHERE p = {_sql_str(p)}" for p in preds
+    )
+
+
+def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict, str | None]:
     """Draw one SPARQL SELECT: 1-3 connected core patterns over graph
     vocabulary, then optional DISTINCT / FILTER / OPTIONAL / UNION /
-    ORDER+LIMIT. Returns (text, opt-in flags for the engine path)."""
+    ORDER+LIMIT. Returns (text, opt-in flags for the engine path, the
+    equivalent DuckDB SQL over ``t(s, p, o)`` — None when the FILTER form
+    drawn is a term test or numeric function, which has no SQL twin here).
+    The SQL follows the group-element normal form: core ⋈ UNION, then the
+    OPTIONAL left join, then FILTER, DISTINCT, ORDER BY + LIMIT."""
     used: list[str] = []
     pats: list[str] = []
+    core: list = []  # (s, p, o) with "?var" or ("c", term) slots
     flags = {"filters": False, "unions": False}
 
     def fresh() -> str | None:
@@ -110,7 +157,7 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
         if i > 0 and s_var:
             s = f"?{join_var}"
         elif draw(st.integers(0, 4)) == 0 and subs:
-            s = _term_sparql(draw(st.sampled_from(subs)))
+            s = ("c", draw(st.sampled_from(subs)))
         else:
             v = fresh()
             s = f"?{v}" if v else f"?{used[0]}"
@@ -119,18 +166,25 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
             o = f"?{join_var}"
         elif draw(st.integers(0, 2)) == 0 and objs:
             pool = objs + [ABSENT] if draw(st.integers(0, 5)) == 0 else objs
-            o = _term_sparql(draw(st.sampled_from(pool)))
+            o = ("c", draw(st.sampled_from(pool)))
         else:
             v = fresh()
             o = f"?{v}" if v else f"?{used[0]}"
-        if "?" not in s and "?" not in o:
+        s_text, o_text = (
+            _term_sparql(t[1]) if isinstance(t, tuple) else t for t in (s, o)
+        )
+        if "?" not in s_text and "?" not in o_text:
             # fully-bound existence probes change the projection story;
             # keep at least one var per pattern
             v = fresh() or used[0]
-            o = f"?{v}"
-        pats.append(f"{s} <{p}> {o} .")
+            o = o_text = f"?{v}"
+        core.append((s, p, o))
+        pats.append(f"{s_text} <{p}> {o_text} .")
 
     body = " ".join(pats)
+    sql_core, cols = _sql_bgp(core)
+    sql_from = f"({sql_core}) AS core"
+    opt_sql = None
 
     # OPTIONAL: one pattern hanging a fresh var off an existing one
     if draw(st.integers(0, 2)) == 0:
@@ -139,6 +193,7 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
         v = fresh()
         if v:
             body += f" OPTIONAL {{ ?{j} <{p}> ?{v} . }}"
+            opt_sql = ({j, v}, f"({_sql_edge(j, v, [p])}) AS opt")
 
     # UNION group sharing one var with the core
     if draw(st.integers(0, 3)) == 0 and len(preds) >= 2:
@@ -150,6 +205,19 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
                 f" {{ ?{j} <{p1}> ?{v} . }} UNION {{ ?{j} <{p2}> ?{v} . }}"
             )
             flags["unions"] = True
+            shared = sorted(cols & {j, v})
+            un = f"({_sql_edge(j, v, [p1, p2])}) AS un"
+            sql_from += (
+                f" JOIN {un} USING ({', '.join(shared)})" if shared else f" CROSS JOIN {un}"
+            )
+            cols |= {j, v}
+    if opt_sql is not None:
+        # OPTIONAL joins after the UNION (the normal form), on every var
+        # it shares with the core and the UNION
+        ovars, opt = opt_sql
+        sql_from += f" LEFT JOIN {opt} USING ({', '.join(sorted(cols & ovars))})"
+    where = ""
+    has_sql = True
 
     # FILTER over any in-scope var (OPTIONAL vars exercise error-is-false)
     if draw(st.integers(0, 1)) == 0:
@@ -161,19 +229,21 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
             pool += subs[:3] + objs[:3]
         pool = sorted(set(pool))
         form = draw(st.integers(0, 5))
-        if form == 0:
-            body += f" FILTER(?{fv} = {_filter_term(draw(st.sampled_from(pool)))})"
-        elif form == 1:
-            body += f" FILTER(?{fv} != {_filter_term(draw(st.sampled_from(pool)))})"
+        if form in (0, 1):
+            t = draw(st.sampled_from(pool))
+            op = "=" if form == 0 else "!="
+            body += f" FILTER(?{fv} {op} {_filter_term(t)})"
+            where = f" WHERE {fv} {'=' if form == 0 else '<>'} {_sql_str(t)}"
         elif form == 2:
             k = draw(st.integers(1, 3))
-            members = ", ".join(
-                _filter_term(draw(st.sampled_from(pool))) for _ in range(k)
-            )
-            body += f" FILTER(?{fv} IN ({members}))"
+            members = [draw(st.sampled_from(pool)) for _ in range(k)]
+            body += f" FILTER(?{fv} IN ({', '.join(map(_filter_term, members))}))"
+            where = f" WHERE {fv} IN ({', '.join(map(_sql_str, members))})"
         elif form == 3:
             body += f" FILTER(BOUND(?{fv}))"
+            where = f" WHERE {fv} IS NOT NULL"
         elif form == 4:
+            has_sql = False
             # term-kind tests, negated half the time (OPTIONAL vars hit
             # the unbound -> error -> false path even under !)
             tt = draw(st.sampled_from(
@@ -186,6 +256,7 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
             # URI-ish strings, so try_cast fails -> null -> error-is-false
             # drops the row, while STRLEN-wrapped operands go numeric —
             # both branches matter
+            has_sql = False
             fn = draw(st.sampled_from(["ABS", "CEIL", "FLOOR", "ROUND"]))
             arg = f"?{fv}" if draw(st.booleans()) else f"STRLEN(?{fv})"
             if draw(st.booleans()):
@@ -201,17 +272,24 @@ def _gen_query(draw, vocab: dict, preds: list) -> tuple[str, dict]:
     proj = " ".join(f"?{v}" for v in used)
     distinct = "DISTINCT " if draw(st.booleans()) else ""
     text = f"SELECT {distinct}{proj} WHERE {{ {body} }}"
+    sql = f"SELECT {distinct}{', '.join(used)} FROM {sql_from}{where}"
 
     # ORDER BY the full var tuple -> LIMIT is a deterministic multiset;
     # sometimes an expression condition leads, the tuple breaking its ties
     if draw(st.integers(0, 2)) == 0:
         direction = draw(st.sampled_from(["ASC", "DESC"]))
         order = " ".join(f"{direction}(?{v})" for v in used)
+        # Spark's null order: first ascending, last descending
+        nulls = "NULLS FIRST" if direction == "ASC" else "NULLS LAST"
+        keys = [f"{v} {direction} {nulls}" for v in used]
         if draw(st.integers(0, 2)) == 0:
             lead_v = draw(st.sampled_from(used))
             order = f"{direction}(STRLEN(?{lead_v})) {order}"
-        text += f" ORDER BY {order} LIMIT {draw(st.integers(1, 20))}"
-    return text, flags
+            keys.insert(0, f"length({lead_v}) {direction} {nulls}")
+        n = draw(st.integers(1, 20))
+        text += f" ORDER BY {order} LIMIT {n}"
+        sql = f"SELECT * FROM ({sql}) AS q ORDER BY {', '.join(keys)} LIMIT {n}"
+    return text, flags, sql if has_sql else None
 
 
 def _gen_query_ext(draw, vocab: dict, preds: list) -> tuple[str, dict]:
@@ -556,9 +634,7 @@ def _gen_query_combo(draw, vocab: dict, preds: list) -> tuple[str, dict]:
     return f"SELECT {distinct}{sel} WHERE {{ {body} }}", flags
 
 
-def _rows(df) -> list:
-    cols = sorted(df.columns)
-    out = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]
+def _sorted_rows(out: list) -> list:
     # type-safe total order: None first, then by string rendering (columns
     # are consistently typed within a run, so key ties imply value equality)
     return sorted(
@@ -566,23 +642,35 @@ def _rows(df) -> list:
     )
 
 
-# engine kwarg -> execute_on_triples kwarg (the two are singular/plural
-# inconsistent for the original pair; everything newer is allow_<same>)
-_NAIVE_FLAG = {"filters": "allow_filter", "unions": "allow_union"}
+def _rows(df) -> list:
+    cols = sorted(df.columns)
+    return _sorted_rows([tuple(r[c] for c in cols) for r in df.select(*cols).collect()])
 
 
-def _assert_agree(diff, text: str, flags: dict) -> None:
+def _duck_rows(con, sql: str) -> list:
+    cur = con.execute(sql)
+    names = [d[0] for d in cur.description]
+    order = sorted(range(len(names)), key=names.__getitem__)
+    return _sorted_rows([tuple(r[i] for i in order) for r in cur.fetchall()])
+
+
+def _assert_agree(diff, text: str, flags: dict, sql: str | None = None) -> None:
+    """Both engine layouts == the string access; with ``sql``, also ==
+    DuckDB over the same decoded triples (an evaluator that shares no code
+    with the engine)."""
     got_b = _rows(diff["bucketed"].sparql(text, **flags))
     got_p = _rows(diff["partitioned"].sparql(text, **flags))
     got_n = _rows(
         execute_on_triples(
             diff["triples"],
             text,
-            **{_NAIVE_FLAG.get(k, f"allow_{k}"): v for k, v in flags.items()},
+            **{ENGINE_FLAGS[k]: v for k, v in flags.items()},
         )
     )
     assert got_b == got_n, f"bucketed engine != naive path for: {text}"
     assert got_p == got_n, f"partitioned engine != naive path for: {text}"
+    if sql is not None:
+        assert _duck_rows(diff["duck"], sql) == got_n, f"DuckDB != engine for: {text}\n{sql}"
 
 
 @settings(
@@ -593,8 +681,8 @@ def _assert_agree(diff, text: str, flags: dict) -> None:
 )
 @given(data=st.data())
 def test_differential_random_queries(diff, data):
-    text, flags = _gen_query(data.draw, diff["vocab"], diff["preds"])
-    _assert_agree(diff, text, flags)
+    text, flags, sql = _gen_query(data.draw, diff["vocab"], diff["preds"])
+    _assert_agree(diff, text, flags, sql)
 
 
 @settings(
@@ -726,6 +814,32 @@ SEED_QUERIES = [
 ]
 
 
+# DuckDB twins of the base-shape SEED_QUERIES (by index), in the
+# group-element normal form: core ⋈ UNION, then OPTIONAL, then FILTER
+SEED_SQL = {
+    0: "SELECT a.s AS x, a.o AS d FROM t AS a, t AS b WHERE a.p = 'ub:memberOf' "
+    "AND b.p = 'ub:advisor' AND b.s = a.s AND a.o = 'ub:Department_0_0'",
+    1: "SELECT s AS x, o AS d FROM t WHERE p = 'ub:memberOf' AND o IN "
+    f"('ub:Department_0_0', 'ub:Department_0_1', '{ABSENT}')",
+    2: "SELECT a.s AS x, a.o AS d, e.o AS e FROM t AS a LEFT JOIN t AS e "
+    "ON e.p = 'ub:emailAddress' AND e.s = a.s "
+    "WHERE a.p = 'ub:memberOf' AND e.o <> 'nobody@example.org'",
+    3: "SELECT a.s AS x, a.o AS d, u.o AS w FROM t AS a JOIN t AS u "
+    "ON u.s = a.o AND u.p IN ('ub:subOrganizationOf', 'ub:name') "
+    "WHERE a.p = 'ub:memberOf' AND a.o = 'ub:Department_0_0'",
+    4: f"SELECT s AS x FROM t WHERE p = 'ub:memberOf' AND o = '{ABSENT}'",
+    5: "SELECT a, b, c FROM "
+    "(SELECT o AS a FROM t WHERE s = 'ub:Course_0_0_0' AND p = 'rdf:type') AS core "
+    "CROSS JOIN (SELECT s AS b, o AS c FROM t WHERE p IN ('rdf:type', 'ub:memberOf')) AS u "
+    "LEFT JOIN (SELECT s AS a, o AS b FROM t WHERE p = 'rdf:type') AS opt USING (a, b)",
+    6: "SELECT x, d, w FROM "
+    "(SELECT s AS x, o AS p FROM t WHERE p = 'ub:advisor') AS core "
+    "CROSS JOIN (SELECT s AS d, o AS w FROM t "
+    "WHERE p IN ('ub:subOrganizationOf', 'ub:name')) AS u "
+    "LEFT JOIN (SELECT s AS x, o AS d FROM t WHERE p = 'ub:memberOf') AS opt USING (x, d)",
+}
+
+
 @settings(
     max_examples=14,
     deadline=None,
@@ -740,4 +854,37 @@ def test_differential_combined_features(diff, data):
 
 @pytest.mark.parametrize("text,flags", SEED_QUERIES)
 def test_differential_seed_shapes(diff, text, flags):
-    _assert_agree(diff, text, flags)
+    _assert_agree(diff, text, flags, SEED_SQL.get(SEED_QUERIES.index((text, flags))))
+
+
+def test_string_access_builds_plans_without_jobs(diff, spark_jobs):
+    """Building an ``execute_on_triples`` plan submits no Spark job for a
+    BGP, a FILTER + OPTIONAL, a VALUES block with UNDEF and a GROUP BY
+    query: the string access resolves constants to themselves and decodes
+    nothing, so it never collects from or counts a relation."""
+    queries = [
+        (
+            "SELECT ?x ?u WHERE { ?x <ub:memberOf> ?d . "
+            "?d <ub:subOrganizationOf> ?u }",
+            {},
+        ),
+        (
+            "SELECT ?x ?d ?e WHERE { ?x <ub:memberOf> ?d . "
+            "OPTIONAL { ?x <ub:emailAddress> ?e } "
+            'FILTER(?d = "ub:Department_0_0") FILTER(?e != "nobody@example.org") }',
+            {"allow_filter": True},
+        ),
+        (
+            "SELECT ?a ?b WHERE { ?a <ub:memberOf> ?b . "
+            'VALUES ?b { "ub:Department_0_0" UNDEF } }',
+            {"allow_values": True},
+        ),
+        (
+            "SELECT ?d (COUNT(*) AS ?n) WHERE { ?x <ub:memberOf> ?d } GROUP BY ?d",
+            {"allow_aggregates": True},
+        ),
+    ]
+    for text, flags in queries:
+        with spark_jobs() as jobs:
+            execute_on_triples(diff["triples"], text, **flags)
+            assert jobs() == [], text
