@@ -168,6 +168,8 @@ class GraphAccess:
       resource constants and the outgoing edges of a resource set.
     - ``_edges_all()``: the (s, p, o) relation property paths walk, with
       terms of type ``TERM_TYPE``.
+    - ``_service(name, silent, patterns)``: a SERVICE block's solutions, or
+      None for a SILENT block that cannot be answered.
 
     :class:`BGPEngine` implements them over the encoded permutation tables
     (dictionary ids, stats-driven join order);
@@ -177,8 +179,23 @@ class GraphAccess:
 
     MAX_PATH_DEPTH = 64
     TERM_TYPE = "long"
-    # SERVICE name -> registered (s, p, o) string relation
-    services: dict = {}
+
+    def _project(self, df: DataFrame, select: list[str], decode: bool) -> DataFrame:
+        """``df`` projected to ``select``; a var that no solution binds
+        projects as an unbound (all-null) column, as SPARQL defines it."""
+        nul = F.lit(None).cast("string" if decode else self.TERM_TYPE)
+        return df.select(*[c if c in df.columns else nul.alias(c) for c in select])
+
+    def _service(self, name: str, silent: bool, patterns: list[Pattern]):
+        """The solutions of ``SERVICE [SILENT] <name> { patterns }``. This
+        graph registers no services: a SILENT block returns None (the
+        lowering binds it as the empty solution), any other raises."""
+        if not silent:
+            raise ValueError(
+                f"SERVICE {name!r} is not registered "
+                "(pass services={name: DataFrame})"
+            )
+        return None
 
     def _closure_edges(self, edges: DataFrame) -> DataFrame:
         """Distinct transitive closure of an (s, o) edge relation — the
@@ -724,27 +741,20 @@ class GraphAccess:
                 u = u.unionByName(self._bgp(alt))
             result = join(result, u)
         for silent, name, spats in q.services:
-            # SERVICE: the block's BGP over the caller-registered relation
-            # (a federation seam, not a network call); the cross-dataset
-            # join is a plain Spark join
-            rel = self.services.get(name)
-            if rel is not None:
-                from parj_spark.query.sparql import TripleAccess
-
-                result = join(result, TripleAccess(rel.select("s", "p", "o"))._bgp(spats))
+            # SERVICE: the block's solutions from the access (a federation
+            # seam, not a network call); the cross-dataset join is a plain
+            # Spark join
+            svc = self._service(name, silent, spats)
+            if svc is not None:
+                result = join(result, svc)
                 continue
-            if not silent:
-                raise ValueError(
-                    f"SERVICE {name!r} is not registered "
-                    "(pass services={name: DataFrame})"
-                )
             # SERVICE SILENT failure = the single empty solution: it joins
             # as identity and leaves the block's variables unbound (null),
             # so projections still resolve
             svars = sorted(
                 {v for p in spats for v in p.vars() if not v.startswith("__bn")}
             )
-            nul = F.lit(None).cast("string")
+            nul = F.lit(None).cast(self.TERM_TYPE)
             if result is None:
                 result = self.spark.range(1).select(*[nul.alias(v) for v in svars])
             for v in svars:
@@ -1034,7 +1044,7 @@ class GraphAccess:
                 result = result.filter(filter_to_column(h, F.col))
             result = result.select(*((q.select or []) + [a.alias for a in q.aggregates]))
         elif q.select:
-            result = result.select(*[c for c in q.select if c in result.columns])
+            result = self._project(result, q.select, decode)
         else:
             # SELECT *: blank-node anonymous vars join but never project
             bn = [c for c in result.columns if c.startswith("__bn")]
@@ -2117,7 +2127,7 @@ class BGPEngine(GraphAccess):
         ):
             from parj_spark.query.sparql import order_columns
 
-            return self.query(
+            result = self.query(
                 q.patterns,
                 select=q.select,
                 distinct=q.distinct,
@@ -2126,6 +2136,10 @@ class BGPEngine(GraphAccess):
                 order_by=order_columns(q.order_by) or None,
                 limit=q.limit,
             )
+            # query() drops a select var no pattern binds; SPARQL keeps it
+            if q.select and result.columns != q.select:
+                result = self._project(result, q.select, decode)
+            return result
         return super()._sparql_query(q, decode)
 
     def count(self, patterns: list[Pattern] | str) -> int:

@@ -2538,6 +2538,12 @@ class TripleAccess(GraphAccess):
     def _const_frame(self, term, col):
         return self.spark.createDataFrame([(term,)], f"{col} string")
 
+    def _service(self, name, silent, patterns):
+        rel = self.services.get(name)
+        if rel is None:
+            return super()._service(name, silent, patterns)
+        return TripleAccess(rel.select("s", "p", "o"))._bgp(patterns)
+
     def _described(self, ids):
         # the input relation may repeat a triple; the result is a graph
         return (

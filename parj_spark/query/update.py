@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from parj_spark.query.bgp import Pattern
 from parj_spark.query.sparql import (
+    ALLOW_FLAGS,
+    ENGINE_FLAGS,
     UpdateOp,
     execute_on_triples,
     parse_sparql,
@@ -158,7 +160,8 @@ def apply_update(store, stream_dir: str, text: str, **flags):
     into the sorted/bucketed layout. ``store`` may be a base ``GraphStore``
     or an existing ``StreamedGraphStore`` over the same ``stream_dir``.
     ``flags`` are :func:`~parj_spark.query.sparql.parse_sparql`'s
-    ``allow_*`` opt-ins for the WHERE groups."""
+    ``allow_*`` opt-ins for the WHERE groups; ``allow_graph`` and
+    ``allow_service`` are accepted but enable nothing here."""
     from parj_spark.construct.pipeline import GraphStore
     from parj_spark.query.bgp import BGPEngine
     from parj_spark.streaming import (
@@ -173,6 +176,11 @@ def apply_update(store, stream_dir: str, text: str, **flags):
     # base catalogs for append_epoch (which layers prior deltas itself — a
     # combined view here would double them in its union)
     base = GraphStore(spark, out_dir)
+    # the encoded engine has no quad relation or service registry: GRAPH
+    # and SERVICE stay rejected in a WHERE group whatever the caller allows
+    # (unknown names still reach parse_sparql, which raises TypeError)
+    no_engine = set(ALLOW_FLAGS) - set(ENGINE_FLAGS.values())
+    where_flags = {k: v for k, v in flags.items() if k not in no_engine}
     for op in parse_update(text):
         view = StreamedGraphStore(spark, out_dir, stream_dir=stream_dir)
         if op.where_text is None:
@@ -182,7 +190,7 @@ def apply_update(store, stream_dir: str, text: str, **flags):
         else:
             # gate the WHERE group under the caller's flags (parse_update
             # itself is permissive; extension gating happens here)
-            q = parse_sparql(op.where_text, **flags)
+            q = parse_sparql(op.where_text, **where_flags)
             sols = BGPEngine(view)._sparql_query(q, decode=True).localCheckpoint()
             dels = _instantiate(sols, op.delete_templates) if op.delete_templates else None
             ins = _instantiate(sols, op.insert_templates) if op.insert_templates else None

@@ -8,8 +8,9 @@ for every kgbench read template (department 1, entity index 1) and every
 are built; no query runs.
 
 Two checkouts compare byte-for-byte: expression ids (``#123``) are
-renumbered per plan in order of first appearance, and the graph and
-working directories are replaced by ``<graph>`` / ``<cwd>``.
+renumbered per plan in order of first appearance, the graph and working
+directories are replaced by ``<graph>`` / ``<cwd>``, and the bucketed
+table prefix (a hash of the graph directory) by ``kg_<graph>``.
 
 Usage, from the root of the checkout whose code should be planned:
     python scripts/dump_sparql_plans.py OUT.txt [--work DIR]
@@ -30,6 +31,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
 
 def _normalize(plan: str, graph_dir: str) -> str:
     plan = plan.replace(graph_dir, "<graph>").replace(ROOT, "<cwd>")
+    plan = re.sub(r"\bkg_[0-9a-f]{10}_", "kg_<graph>_", plan)
     ids: dict[str, str] = {}
     return re.sub(r"#\d+", lambda m: ids.setdefault(m.group(), f"#{len(ids)}"), plan)
 

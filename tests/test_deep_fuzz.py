@@ -34,26 +34,26 @@ DEEP = settings(
 @DEEP
 @given(data=st.data())
 def test_deep_base(diff, data):
-    text, flags = _gen_query(data.draw, diff["vocab"], diff["preds"])
-    _assert_agree(diff, text, flags)
+    text, flags, sql = _gen_query(data.draw, diff["vocab"], diff["preds"])
+    _assert_agree(diff, text, flags, sql)
 
 
 @DEEP
 @given(data=st.data())
 def test_deep_ext(diff, data):
-    text, flags = _gen_query_ext(data.draw, diff["vocab"], diff["preds"])
-    _assert_agree(diff, text, flags)
+    text, flags, sql = _gen_query_ext(data.draw, diff["vocab"], diff["preds"])
+    _assert_agree(diff, text, flags, sql)
 
 
 @DEEP
 @given(data=st.data())
 def test_deep_ext2(diff, data):
-    text, flags = _gen_query_ext2(data.draw, diff["vocab"], diff["preds"])
-    _assert_agree(diff, text, flags)
+    text, flags, sql = _gen_query_ext2(data.draw, diff["vocab"], diff["preds"])
+    _assert_agree(diff, text, flags, sql)
 
 
 @DEEP
 @given(data=st.data())
 def test_deep_combo(diff, data):
-    text, flags = _gen_query_combo(data.draw, diff["vocab"], diff["preds"])
-    _assert_agree(diff, text, flags)
+    text, flags, sql = _gen_query_combo(data.draw, diff["vocab"], diff["preds"])
+    _assert_agree(diff, text, flags, sql)

@@ -227,6 +227,37 @@ def test_opt_in_names_per_entry_point():
         parse_engine_sparql(text, allow_filter=True)
 
 
+def test_select_var_no_solution_binds_is_an_unbound_column(engine, tiny_graph):
+    """A SELECT var that no solution binds (the parser rejects one no
+    pattern mentions, so the query is built by hand) projects as an
+    all-null column, in SELECT order, on the encoded engine's plain-BGP
+    path, its shared lowering and the string access alike."""
+    from dataclasses import replace
+
+    from parj_spark.query.sparql import TripleAccess
+
+    triples = tiny_graph.decoded_triples().select(
+        F.col("s_uri").alias("s"), F.col("p_uri").alias("p"), F.col("o_uri").alias("o")
+    )
+    cases = [  # (text, the engine's decode settings)
+        ("SELECT ?x ?d WHERE { ?x <ub:memberOf> ?d }", (True, False)),  # plain BGP
+        ('SELECT ?x ?d WHERE { ?x <ub:memberOf> ?d FILTER(?d != "u:none") }', (True,)),
+    ]
+    for text, decodes in cases:
+        q = replace(parse_sparql(text, allow_filter=True), select=["x", "nope", "d"])
+        for decode in decodes:
+            null_type = "string" if decode else "bigint"
+            got = engine._sparql_query(q, decode=decode)
+            assert got.columns == ["x", "nope", "d"], text
+            assert dict(got.dtypes)["nope"] == null_type, text
+            assert got.filter(F.col("nope").isNotNull()).count() == 0, text
+            assert got.count() == 48, text
+        got = TripleAccess(triples)._sparql_query(q, decode=True)
+        assert got.columns == ["x", "nope", "d"], text
+        assert got.filter(F.col("nope").isNotNull()).count() == 0, text
+        assert got.count() == 48, text
+
+
 def test_filter_rejected_by_default():
     with pytest.raises(ValueError, match="allow_filter=True"):
         parse_sparql(

@@ -191,6 +191,29 @@ def test_store_update_tombstones_and_reinsert(spark, tiny_graph, tmp_path):
     assert _rows(_decoded(live2)) == base_rows
 
 
+def test_store_update_where_rejects_graph_and_service(tiny_graph, tmp_path):
+    """The encoded engine answering store WHERE groups has no quad relation
+    or service registry: allow_graph / allow_service are accepted but a
+    GRAPH or SERVICE block still fails at parse, before any epoch is
+    written; an unknown flag name raises TypeError."""
+    stream_dir = str(tmp_path / "stream")
+    flags = dict(allow_graph=True, allow_service=True)
+    for where in (
+        "GRAPH <ub:g> { ?s ub:advisor ?o }",
+        "?s ub:advisor ?o . SERVICE SILENT <urn:svc:x> { ?o ub:name ?n }",
+        "?s ub:advisor ?o . SERVICE <urn:svc:x> { ?o ub:name ?n }",
+    ):
+        text = PRO + f"DELETE {{ ?s ub:advisor ?o }} WHERE {{ {where} }}"
+        with pytest.raises(ValueError, match="to opt in"):
+            apply_update(tiny_graph, stream_dir, text, **flags)
+    assert not os.path.exists(stream_dir)
+    with pytest.raises(TypeError, match="'allow_filters'"):
+        apply_update(
+            tiny_graph, stream_dir,
+            PRO + "DELETE WHERE { ?s ub:nowhere ?o }", allow_filters=True,
+        )
+
+
 def test_store_update_insert_is_existence_guarded(spark, tiny_graph, tmp_path):
     """Inserting triples that already exist writes NO epoch (an RDF graph
     is a set; duplicate rows would double BGP solution counts)."""
