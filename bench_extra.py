@@ -26,34 +26,11 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
 from parj_spark.session import get_spark  # noqa: E402
 from parj_spark import contract  # noqa: E402
+from bench import BENCH_EXTRA  # noqa: E402
 
-
-def _with_planted_dups(emb):
-    from pyspark.sql import functions as F
-
-    dup = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-    )
-    return emb.select("vec_id", "embedding", "label").union(dup)
-
-
-# mirrors bench.py's BENCH_EXTRA + the heavy HEADLINE entries, by name
+# bench.py's BENCH_EXTRA + the heavy HEADLINE entries, by name
 QUERIES = {
-    "dedup_jaccard_3gram": lambda spark, d: contract.dedup.ngram_jaccard_pairs(
-        contract._t(spark, d, "documents"), shingle_n=3, threshold=0.2, max_df=200
-    ),
-    "dedup_minhash_3sh": lambda spark, d: contract.dedup.minhash_lsh_pairs(
-        contract._t(spark, d, "documents"), n_hashes=8, bands=4, shingle_n=3,
-        jaccard_threshold=0.4, max_bucket=200
-    ),
-    "sim_lsh_neardup": lambda spark, d: contract.similarity.cosine_lsh_neardup_pairs(
-        _with_planted_dups(contract._t(spark, d, "embeddings")),
-        threshold=0.9, n_planes=8, n_bands=8, max_bucket=10_000
-    ),
-    "sim_semantic_dedup": lambda spark, d: contract.similarity.semantic_dedup(
-        _with_planted_dups(contract._t(spark, d, "embeddings")),
-        threshold=0.9, n_centroids=32
-    ),
+    **BENCH_EXTRA,
     "dedup_substring": lambda spark, d: contract.dedup_substring(spark, d),
     "dedup_simhash": lambda spark, d: contract.dedup_simhash(spark, d),
     "dedup_exact": lambda spark, d: contract.dedup_exact(spark, d),

@@ -190,10 +190,11 @@ def cosine_lsh_neardup_pairs(
     stacked = _spread(emb.select(id_col, vec_col)).mapInPandas(
         assign, f"{id_col} long, band int, bucket long"
     )
-    # the vector RIDES the bucket rows, so candidate generation needs no
-    # join against the corpus at all — joins from a Generate output have no
-    # usable size estimate and the planner was measured broadcasting the
-    # 30M-row candidate side
+    # the sign stage emits ids only; the vector is attached back to the
+    # (id, band, bucket) rows by an equi-join on the id (``cands`` below),
+    # which moves corpus x n_bands vector bytes through an exchange.
+    # Emitting the vector from the sign stage instead would delete that
+    # join (ROADMAP open item 4).
     pre = emb.select(
         F.col(id_col).alias("__pid"), F.col(vec_col).alias("__pvec")
     )

@@ -9,19 +9,26 @@ DP-chosen order and forces SQLite's NLJ over sorted permutation arrays
 - scan the predicate partition of the right sort order per pattern
   (SPO when subject-bound/unbound, POS when object-bound — the reference's
   access-path choice, DagCreator.java:94-122, becomes "which table to read");
-- seed the join order with a greedy most-selective-first, connected-pattern
-  ordering driven by the per-predicate stats table (the reference's
-  histogram/sampling DP, SURVEY.md §4.1 — we keep the greedy seed and let
-  Catalyst CBO + AQE do the rest at runtime);
+- order the joins by a left-deep DP over the T3 pair cardinalities (the
+  reference's DPSubLinear, SURVEY.md §4.1) for BGPs of up to
+  ``BGPEngine.MAX_DP_PATTERNS`` patterns, else greedily most-selective-
+  first over connected patterns;
 - broadcast small pattern scans and the dictionary decode (J4:
   QueryTester.java:189-223's decode join, placed after all joins).
 
+One planning step (``BGPEngine._plan_joins``) makes every join decision —
+access path, join keys, strategy; the join composer applies it and
+``BGPEngine.explain`` prints it.
+
 Predicate variables — which the reference rejects outright
-(DagCreator.java:170-171) — are supported here as an extension: a var-p
-pattern reads the OSP table when its object is bound (global o-sort gives
-parquet range pruning) and the SPO table otherwise. Predicate ids live in
-their own dense space (the properties catalog, not the term dictionary), so
-a variable may not appear in both predicate and subject/object position.
+(DagCreator.java:170-171) — are supported here as an extension. On the
+bucketed layout a var-p pattern reads SPO_b / POS_b with no partition
+filter (the bucket spec is table-wide, so its joins stay bucket-aligned);
+without the layout it reads the OSP table when its object is bound
+(global o-sort gives parquet range pruning) and the SPO table otherwise.
+Predicate ids live in their own dense space (the properties catalog, not
+the term dictionary), so a variable may not appear in both predicate and
+subject/object position.
 
 SPARQL is lowered once, like the reference's one DagCreator → SQL path:
 :class:`GraphAccess` holds the only algebra lowering (UNION, OPTIONAL,
@@ -143,6 +150,52 @@ def parse_bgp(text: str) -> list[Pattern]:
                 raise ValueError(f"bad pattern line: {chunk!r}")
             pats.append(Pattern(*parts))
     return pats
+
+
+def _scan_columns(pat: Pattern) -> dict[str, str]:
+    """{var: table column} of ``pat``'s scan, in s, p, o order — the
+    columns the scan outputs (``?x p ?x`` gives one). Empty for a
+    fully-bound pattern, whose scan is the existence probe ``__exists``."""
+    cols: dict[str, str] = {}
+    for col, t in (("s", pat.s), ("p", pat.p), ("o", pat.o)):
+        if _is_var(t):
+            cols.setdefault(t[1:], col)
+    return cols
+
+
+@dataclass(frozen=True)
+class Access:
+    """Which relation ``BGPEngine._scan`` reads for one pattern.
+
+    ``kind``: "table" (the predicate's partition of permutation ``table``),
+    "var_table" (a variable predicate: all of ``table``), "path" (a
+    property-path relation) or "absent" (a constant or predicate missing
+    from the catalogs: the pattern matches nothing). ``bucket_var``: the
+    variable bound to the bucket column of the table read, or None (no
+    bucket layout behind the scan, or the bucket column is constant)."""
+
+    kind: str
+    table: str | None = None
+    bucket_var: str | None = None
+
+
+@dataclass(frozen=True)
+class JoinStep:
+    """One step of a left-deep join plan (``BGPEngine._plan_joins``).
+
+    ``hint``: the table the join prefers ("spo" when the subject var joins,
+    "pos" when the object var does). ``keys``: the columns shared with the
+    running result (empty: a cross join). ``strategy``: "seed" (the first
+    scan), "aligned" (bucketed sort-merge join, no exchange), "broadcast"
+    (hint on the scan), "broadcast_seed" (hint on the seed side),
+    "shuffle" (no hint), or "cross" (no keys, no hint)."""
+
+    pattern: Pattern
+    hint: str | None
+    access: Access
+    est: float
+    keys: tuple[str, ...]
+    strategy: str
 
 
 class GraphAccess:
@@ -1071,7 +1124,9 @@ class BGPEngine(GraphAccess):
     first-column-to-first-column joins then run as bucketed sort-merge
     joins with no shuffle exchange (the 100 TB join path). Pass an explicit
     prefix for an ad-hoc layout, or None to force the p-partitioned
-    parquet path (the pre-round-4 default, kept for A/B benching).
+    parquet path (the pre-round-4 default, kept for A/B benching). None is
+    also what ``"auto"`` yields on a ``StreamedGraphStore`` with pending
+    deltas: the merge-on-read view has no bucketed layout.
     ``broadcast_rows``: scans estimated below this broadcast (set 0 to
     force shuffle joins, e.g. to observe the bucketed plan).
     """
@@ -1106,7 +1161,7 @@ class BGPEngine(GraphAccess):
         self._stats = {r["p"]: r.asDict() for r in store.stats().collect()}
         self._dict = store.dict()
         self._dict_rows: int | None = None  # lazy: counted on first decode
-        self._total_n: float | None = None  # lazy: total triple count
+        self._total_n = float(sum(st["n"] for st in self._stats.values()))
         # lazy catalog-wide uniform-estimate sums for variable-predicate
         # patterns (computed once, O(catalog); see _catalog_sums)
         self._uniform_sums: tuple[float, float, float] | None = None
@@ -1225,10 +1280,12 @@ class BGPEngine(GraphAccess):
             return F.broadcast(self._dict)
         return self._dict
 
-    def _table(self, orientation: str) -> DataFrame:
+    def _table(self, name: str) -> DataFrame:
+        """Permutation table ``name`` ("spo", "pos"; "osp" only without the
+        bucketed layout)."""
         if self.bucketed_prefix:
-            return self.spark.table(f"{self.bucketed_prefix}_{orientation}_b")
-        return self.store.spo() if orientation == "spo" else self.store.pos()
+            return self.spark.table(f"{self.bucketed_prefix}_{name}_b")
+        return getattr(self.store, name)()
 
     # --- term resolution and the other GraphAccess primitives -----------
     def _resolve_terms(self, patterns: list[Pattern]) -> dict[str, int]:
@@ -1377,8 +1434,6 @@ class BGPEngine(GraphAccess):
             # Python loop over the catalog (quadratic-ish on pathological
             # catalogs when called per candidate, VERDICT r3 nit)
             if _is_var(pat.s) and _is_var(pat.o):
-                if self._total_n is None:
-                    self._total_n = float(sum(st["n"] for st in self._stats.values()))
                 return self._total_n
             # a constant bound: answered from the once-per-engine catalog
             # sums + per-pid corrections, O(query predicates) per call
@@ -1387,8 +1442,6 @@ class BGPEngine(GraphAccess):
             if pat.p.op == "negset":
                 # everything-but-the-listed-predicates: total minus the
                 # excluded edge sets
-                if self._total_n is None:
-                    self._total_n = float(sum(st["n"] for st in self._stats.values()))
                 listed = sum(
                     float(self._stats.get(self._props.get(x), {}).get("n", 0))
                     for x in pat.p.parts
@@ -1432,125 +1485,81 @@ class BGPEngine(GraphAccess):
             n *= sel
         return n
 
-    def _scan(
-        self, pat: Pattern, terms: dict[str, int], orient_hint: str | None = None
-    ) -> DataFrame | None:
-        """One filtered permutation-table scan, columns renamed to var names.
+    def _access(
+        self, pat: Pattern, terms: dict[str, int], hint: str | None
+    ) -> Access:
+        """The relation :meth:`_scan` reads for ``pat``, decided without
+        building it. The table is the reference's J2 access-path choice
+        (DagCreator.java:94-122): a constant binding wins, then ``hint``
+        (the column the enclosing join touches — reading its sort order
+        gives the bucketed/sorted join path), then SPO.
 
-        ``orient_hint``: which column the enclosing join touches ("spo" if
-        the subject var joins, "pos" if the object var joins) — reading the
-        matching sort order gives the bucketed/sorted join path (reference
-        J2 access-path choice, DagCreator.java:94-122)."""
+        A variable predicate (extension beyond the reference) reads the
+        permutation table with NO partition filter: on the bucketed layout
+        the table-wide bucket spec survives the missing p filter, so an
+        o-bound scan keeps bucket+rowgroup pruning on POS_b and its joins
+        ride the exchange-free SMJ path like any other pattern (reference
+        analog: the inverse permutation is a first-class index,
+        parj.c:1713-1718); without the layout, an o-bound scan reads the
+        OSP o-range parquet, else SPO. Path relations have no layout
+        behind them, so no bucket var."""
+        s_bound, o_bound = not _is_var(pat.s), not _is_var(pat.o)
+        if (s_bound and pat.s not in terms) or (o_bound and pat.o not in terms):
+            return Access("absent")
+        if isinstance(pat.p, Path):
+            return Access("path")
+        if not _is_var(pat.p) and pat.p.endswith("+"):
+            return Access("path" if pat.p[:-1] in self._props else "absent")
+        if _is_var(pat.p) and not self.bucketed_prefix:
+            return Access("var_table", "osp" if o_bound else "spo")
+        if not _is_var(pat.p) and pat.p not in self._props:
+            return Access("absent")
+        if s_bound or o_bound:
+            table = "spo" if s_bound else "pos"
+        else:
+            table = hint or "spo"
+        key = pat.s if table == "spo" else pat.o
+        return Access(
+            "var_table" if _is_var(pat.p) else "table",
+            table,
+            key[1:] if self.bucketed_prefix and _is_var(key) else None,
+        )
+
+    def _scan(
+        self, pat: Pattern, terms: dict[str, int], access: Access
+    ) -> DataFrame | None:
+        """One filtered scan of ``access``'s relation, columns renamed to
+        var names (:func:`_scan_columns`); None when the access is absent."""
         if pat.g is not None:
             raise ValueError(
                 "GRAPH patterns need a quad relation (use execute_on_quads)"
             )
-        s_const = None if _is_var(pat.s) else terms.get(pat.s)
-        o_const = None if _is_var(pat.o) else terms.get(pat.o)
-        if (not _is_var(pat.s) and s_const is None) or (
-            not _is_var(pat.o) and o_const is None
-        ):
-            return None  # constant not in dictionary -> empty result
-        if _is_var(pat.p):
-            # variable predicate (extension beyond the reference): on the
-            # bucketed layout, read the permutation table with NO partition
-            # filter — the table-wide bucket spec survives the missing p
-            # filter, so an o-bound scan keeps bucket+rowgroup pruning on
-            # POS_b and a var-predicate join rides the exchange-free SMJ
-            # path like any other pattern (VERDICT r4 missing #3; reference
-            # analog: the inverse permutation is a first-class index,
-            # parj.c:1713-1718). Orientation replayed by _scan_bucket_var.
-            # Fallback without the layout: OSP o-range parquet when the
-            # object is bound, else SPO.
-            if self.bucketed_prefix:
-                if o_const is not None and s_const is None:
-                    orientation = "pos"
-                elif s_const is not None:
-                    orientation = "spo"
-                else:
-                    orientation = orient_hint or "spo"
-                df = self._table(orientation)
-            else:
-                df = self.store.osp() if o_const is not None else self.store.spo()
-        elif isinstance(pat.p, Path):
+        if access.kind == "absent":
+            return None
+        s_const = None if _is_var(pat.s) else terms[pat.s]
+        o_const = None if _is_var(pat.o) else terms[pat.o]
+        if isinstance(pat.p, Path):
             # composite property path (extension): the scan is the path's
-            # evaluated pair relation; constant/variable handling below
-            # applies to it unchanged
+            # evaluated pair relation
             anchor = s_const if s_const is not None else o_const
             df = self._path_pairs(pat.p, anchor)
-        elif pat.p.endswith("+"):
-            # property path p+ (extension beyond the reference): the scan
-            # is the transitive closure of the predicate's edge set; the
-            # constant/variable handling below applies to it unchanged
-            if pat.p[:-1] not in self._props:
-                return None
+        elif access.kind == "path":
+            # p+ (extension beyond the reference): the predicate's closure
             df = self._path_rel(Path("plus", (Path("link", (pat.p[:-1],)),)))
         else:
-            pid = self._props.get(pat.p)
-            if pid is None:
-                return None
-            # access-path choice: constant binding wins, then the join hint
-            if o_const is not None and s_const is None:
-                orientation = "pos"
-            elif s_const is not None:
-                orientation = "spo"
-            else:
-                orientation = orient_hint or "spo"
-            df = self._table(orientation).filter(F.col("p") == pid)
+            df = self._table(access.table)
+            if access.kind == "table":
+                df = df.filter(F.col("p") == self._props[pat.p])
         if s_const is not None:
             df = df.filter(F.col("s") == s_const)
         if o_const is not None:
             df = df.filter(F.col("o") == o_const)
-        cols = []
-        if _is_var(pat.s):
-            cols.append(F.col("s").alias(pat.s[1:]))
-        if _is_var(pat.p):
-            cols.append(F.col("p").alias(pat.p[1:]))
-        if _is_var(pat.o):
-            cols.append(F.col("o").alias(pat.o[1:]))
-        if _is_var(pat.s) and _is_var(pat.o) and pat.s == pat.o:
+        if _is_var(pat.s) and pat.s == pat.o:
             df = df.filter(F.col("s") == F.col("o"))
-            cols = [F.col("s").alias(pat.s[1:])]
-            if _is_var(pat.p):
-                cols.append(F.col("p").alias(pat.p[1:]))
+        cols = _scan_columns(pat)
         if not cols:  # fully-bound pattern: existence filter
-            cols = [F.lit(1).alias("__exists")]
-            df = df.limit(1)
-        return df.select(*cols)
-
-    def _scan_bucket_var(
-        self, pat: Pattern, terms: dict[str, int], orient_hint: str | None
-    ) -> str | None:
-        """The variable bound to the bucket column of the table
-        :meth:`_scan` will read for ``pat`` — replaying its access-path
-        choice — or None when the scan has no bucket layout behind it
-        (variable predicates, path closures, non-bucketed engine) or the
-        bucket column is constant-bound. Used by the join composer to spot
-        bucket-aligned joins (reference: every PARJ join column is the
-        first sorted column of its chosen orientation, SURVEY.md §4.1).
-        Variable-predicate patterns participate — they scan the bucketed
-        tables partition-unfiltered (see _scan), so their s/o joins are
-        bucket-aligned too; only path closures (derived relations with no
-        layout behind them) are excluded."""
-        if not self.bucketed_prefix:
-            return None
-        if isinstance(pat.p, Path) or (
-            not _is_var(pat.p) and pat.p.endswith("+")
-        ):
-            return None
-        s_const = None if _is_var(pat.s) else terms.get(pat.s)
-        o_const = None if _is_var(pat.o) else terms.get(pat.o)
-        if o_const is not None and s_const is None:
-            orientation = "pos"
-        elif s_const is not None:
-            orientation = "spo"
-        else:
-            orientation = orient_hint or "spo"
-        if orientation == "spo" and s_const is None and _is_var(pat.s):
-            return pat.s[1:]
-        if orientation == "pos" and o_const is None and _is_var(pat.o):
-            return pat.o[1:]
-        return None
+            return df.limit(1).select(F.lit(1).alias("__exists"))
+        return df.select(*[F.col(c).alias(v) for v, c in cols.items()])
 
     def _anchors(
         self, patterns: list[Pattern], terms: dict[str, int] | None
@@ -1630,9 +1639,13 @@ class BGPEngine(GraphAccess):
         greedy most-selective-first order (which matches DP on chain/star/
         triangle shapes but can lock into a bad prefix on 6+ pattern BGPs)."""
         self._hydrate(patterns)
-        if 2 < len(patterns) <= self.MAX_DP_PATTERNS and self._join_stats:
+        if self._uses_dp(patterns):
             return self._order_dp(patterns, terms)
         return self._order_greedy(patterns, terms)
+
+    def _uses_dp(self, patterns: list[Pattern]) -> bool:
+        """Whether :meth:`_order` runs the DP (after hydrating ``patterns``)."""
+        return 2 < len(patterns) <= self.MAX_DP_PATTERNS and bool(self._join_stats)
 
     # cost discount for a join whose key the left side is already
     # partitioned/sorted on (bucketed SMJ, no exchange/sort) — the repo
@@ -1792,67 +1805,73 @@ class BGPEngine(GraphAccess):
             order_by=order_by, limit=limit,
         )
 
+    def _plan_joins(
+        self, ordered: list[Pattern], terms: dict[str, int]
+    ) -> list[JoinStep]:
+        """The join plan of a pre-ordered pattern list, one :class:`JoinStep`
+        per pattern: every decision :meth:`_compose_joins` applies and
+        :meth:`explain` prints is made here, once. No scan is built (a path
+        scan runs its fixpoint jobs when built).
+
+        Tracks the variable on which the running result is still clustered
+        BY THE BUCKET LAYOUT (the seed's bucket column, preserved through
+        broadcast and same-key bucketed joins). A join whose single key is
+        this var against a scan bucketed on the same var needs neither
+        shuffle nor hash-relation build — bucketed SMJ beats even a small
+        broadcast there (measured: the 5-pattern star at 8.35M triples runs
+        2x faster pure-SMJ than broadcast, BENCH/BASELINE.md bgp_large
+        addendum), so an aligned join gets no broadcast hint. Otherwise a
+        scan estimated under ``broadcast_rows`` broadcasts; else, at the
+        first join, a seed under it broadcasts (the streamed scan keeps its
+        bucket clustering); else the join shuffles."""
+        steps: list[JoinStep] = []
+        cols: set[str] = set()
+        aligned_var: str | None = None
+        for pat in ordered:
+            scan_cols = _scan_columns(pat)
+            keys = tuple(sorted(v for v in scan_cols if v in cols))
+            joined = {scan_cols[v] for v in keys}
+            hint = "spo" if "s" in joined else "pos" if "o" in joined else None
+            access = self._access(pat, terms, hint)
+            est = self._estimate(pat, terms)
+            if not steps:
+                strategy, aligned_var = "seed", access.bucket_var
+            elif keys == (aligned_var,) and access.bucket_var == aligned_var:
+                strategy = "aligned"
+            elif 0 < self.broadcast_rows >= est:
+                strategy = "broadcast"  # the result keeps its clustering
+            elif len(steps) == 1 and 0 < self.broadcast_rows >= steps[0].est:
+                strategy, aligned_var = "broadcast_seed", access.bucket_var
+            else:
+                strategy, aligned_var = ("shuffle" if keys else "cross"), None
+            if steps and not keys:
+                aligned_var = None  # a cross join keeps no clustering
+            steps.append(JoinStep(pat, hint, access, est, keys, strategy))
+            cols.update(scan_cols)
+        return steps
+
     def _compose_joins(
         self, ordered: list[Pattern], terms: dict[str, int]
     ) -> DataFrame | None:
-        """Join a pre-ordered pattern list into one relation; None when any
-        pattern's constant/predicate is absent from the catalogs (the empty
-        relation — callers decide whether that kills the query or just an
-        OPTIONAL block).
-
-        Join-side strategy per step: tracks the variable on which the
-        running result is still clustered BY THE BUCKET LAYOUT (first
-        scan's bucket column, preserved through broadcast and same-key
-        bucketed joins). A join whose single key is this var against a
-        scan bucketed on the same var needs neither shuffle nor
-        hash-relation build — bucketed SMJ beats even a small broadcast
-        there (measured: the 5-pattern star at 8.35M triples runs 2x
-        faster pure-SMJ than broadcast, BENCH/BASELINE.md bgp_large
-        addendum), so the broadcast hint is skipped for aligned joins.
-        Used by both the core BGP and each OPTIONAL group."""
+        """Join a pre-ordered pattern list into one relation by the plan of
+        :meth:`_plan_joins`; None when any pattern's constant/predicate is
+        absent from the catalogs (the empty relation — callers decide
+        whether that kills the query or just an OPTIONAL block). Used by
+        both the core BGP and each OPTIONAL group."""
         result: DataFrame | None = None
-        aligned_var: str | None = None
-        seed_est: float | None = None
-        for pat in ordered:
-            hint = None
-            if result is not None:
-                s_var = pat.s[1:] if _is_var(pat.s) else None
-                o_var = pat.o[1:] if _is_var(pat.o) else None
-                if s_var and s_var in result.columns:
-                    hint = "spo"
-                elif o_var and o_var in result.columns:
-                    hint = "pos"
-            scan = self._scan(pat, terms, orient_hint=hint)
+        for step in self._plan_joins(ordered, terms):
+            scan = self._scan(step.pattern, terms, step.access)
             if scan is None:
                 return None
-            bucket_var = self._scan_bucket_var(pat, terms, hint)
-            if result is None:
+            if step.strategy == "seed":
                 result = scan
-                aligned_var = bucket_var
-                seed_est = self._estimate(pat, terms)
                 continue
-            shared = sorted(set(result.columns) & set(scan.columns) - {"__exists"})
-            aligned = (
-                aligned_var is not None
-                and shared == [aligned_var]
-                and bucket_var == aligned_var
-            )
-            lhs = result
-            if not aligned:
-                if 0 < self.broadcast_rows >= self._estimate(pat, terms):
-                    # broadcast the scan; result keeps its clustering
-                    scan = F.broadcast(scan)
-                elif seed_est is not None and 0 < self.broadcast_rows >= seed_est:
-                    # small seed joining a big scan: broadcast the seed side;
-                    # the streamed (scan) side's bucket clustering survives
-                    lhs = F.broadcast(result)
-                    aligned_var = bucket_var
-                else:
-                    aligned_var = None  # shuffle join: layout clustering gone
-            seed_est = None  # the seed hint decision is for the first join only
-            result = lhs.join(scan, on=shared) if shared else lhs.crossJoin(scan)
-            if not shared:
-                aligned_var = None  # cross join loses any clustering guarantee
+            if step.strategy == "broadcast":
+                scan = F.broadcast(scan)
+            elif step.strategy == "broadcast_seed":
+                result = F.broadcast(result)
+            keys = list(step.keys)
+            result = result.join(scan, on=keys) if keys else result.crossJoin(scan)
         return result
 
     def _plan_and_execute(
@@ -1898,26 +1917,25 @@ class BGPEngine(GraphAccess):
         return result
 
     def explain(self, patterns: list[Pattern] | str) -> str:
-        """Driver-side plan report: replay the planner's decisions for a BGP
-        without executing it — the analog of the reference printing its
+        """Driver-side plan report: the join plan :meth:`_plan_joins` makes
+        for a BGP — the one :meth:`_compose_joins` applies — without
+        building or executing it; the analog of the reference printing its
         decomposed join DAG before running (DagCreator.java:55-154 logs the
-        chosen tree). One line per pattern in chosen join order: access
-        path (which permutation table / path closure), estimated
-        cardinality, join keys, and the join strategy the estimates imply
-        (broadcast below the gate; bucketed sort-merge with no exchange
-        when the join key is the layout's bucket column; shuffle otherwise).
+        chosen tree). One line per pattern in join order: access path
+        (which permutation table / path closure), estimated cardinality,
+        join keys, and the join strategy (broadcast below the gate, on the
+        scan or on a small seed; bucketed sort-merge with no exchange when
+        the join key is the layout's bucket column; shuffle otherwise).
 
-        Estimates come from the same T1/T2/T3/histogram stats the real
-        planner uses, so this is what WILL run — for the executed physical
-        plan, call ``.explain("formatted")`` on the query's DataFrame."""
+        For the executed physical plan, call ``.explain("formatted")`` on
+        the query's DataFrame."""
         if isinstance(patterns, str):
             patterns = parse_bgp(patterns)
         terms = self._resolve_terms(patterns)
-        self._hydrate(patterns)
         ordered = self._order(patterns, terms)
         method = (
             "DP (left-deep subset lattice, T3-costed)"
-            if 2 < len(patterns) <= self.MAX_DP_PATTERNS and self._join_stats
+            if self._uses_dp(patterns)
             else "greedy (most-selective-first)"
         )
         layout = (
@@ -1926,89 +1944,37 @@ class BGPEngine(GraphAccess):
             if self.bucketed_prefix
             else "p-partitioned parquet permutations"
         )
-        lines = [
-            f"layout: {layout}",
-            f"join order: {method}",
-        ]
-        bound_cols: set[str] = set()
-        aligned_var: str | None = None  # mirrors query()'s tracking
-        for i, pat in enumerate(ordered):
-            s_var = pat.s[1:] if _is_var(pat.s) else None
-            o_var = pat.o[1:] if _is_var(pat.o) else None
-            s_const = None if s_var else terms.get(pat.s)
-            o_const = None if o_var else terms.get(pat.o)
-            # replay _scan's access-path choice, including the join hint
-            hint = None
-            if i > 0 and not isinstance(pat.p, Path):
-                if s_var and s_var in bound_cols:
-                    hint = "spo"
-                elif o_var and o_var in bound_cols:
-                    hint = "pos"
-            if _is_var(pat.p):
-                if self.bucketed_prefix:
-                    if o_const is not None and s_const is None:
-                        orientation = "pos"
-                    elif s_const is not None:
-                        orientation = "spo"
-                    else:
-                        orientation = hint or "spo"
-                    access = (
-                        f"{orientation.upper()} bucketed, all p-partitions "
-                        "(var predicate)"
-                    )
-                else:
-                    access = (
-                        "OSP (var predicate)"
-                        if o_const is not None
-                        else "SPO (var predicate)"
-                    )
-            elif isinstance(pat.p, Path) or (
-                isinstance(pat.p, str) and pat.p.endswith("+") and pat.p[:-1] in self._props
-            ):
+        lines = [f"layout: {layout}", f"join order: {method}"]
+        for i, step in enumerate(self._plan_joins(ordered, terms), 1):
+            pat, acc = step.pattern, step.access
+            if acc.kind == "path":
                 access = "path closure (semi-naive fixpoint relation)"
+            elif acc.kind == "absent":
+                access = "absent from the catalogs (matches nothing)"
+            elif acc.kind == "var_table":
+                where = " bucketed, all p-partitions" if self.bucketed_prefix else ""
+                access = f"{acc.table.upper()}{where} (var predicate)"
             else:
-                if o_const is not None and s_const is None:
-                    orientation = "pos"
-                elif s_const is not None:
-                    orientation = "spo"
-                else:
-                    orientation = hint or "spo"
-                consts = [
-                    c for c, v in (("s", s_const), ("o", o_const)) if v is not None
-                ]
-                access = orientation.upper() + (
-                    f", {'+'.join(consts)} bound" if consts else ""
+                bound = "+".join(
+                    c for c, t in (("s", pat.s), ("o", pat.o)) if not _is_var(t)
                 )
-            est = self._estimate(pat, terms)
-            shared = sorted({v for v in (s_var, o_var) if v} & bound_cols)
-            # _scan_bucket_var itself returns None for path closures
-            bucket_var = self._scan_bucket_var(pat, terms, hint)
-            aligned = (
-                i > 0
-                and aligned_var is not None
-                and shared == [aligned_var]
-                and bucket_var == aligned_var
-            )
-            if i == 0:
-                strat = "seed scan"
-                aligned_var = bucket_var
-            elif not shared:
-                strat = "CARTESIAN (no shared vars)"
-                aligned_var = None
-            elif aligned:
-                strat = f"bucketed sort-merge join on ({shared[0]}), no exchange"
-            elif 0 < self.broadcast_rows >= est:
-                strat = f"broadcast hash join on ({', '.join(shared)})"
-            else:
-                strat = f"shuffle join on ({', '.join(shared)})"
-                aligned_var = None
+                access = acc.table.upper() + (f", {bound} bound" if bound else "")
+            on = f"on ({', '.join(step.keys)})"
+            strat = {
+                "seed": "seed scan",
+                "cross": "CARTESIAN (no shared vars)",
+                "aligned": f"bucketed sort-merge join {on}, no exchange",
+                "broadcast": f"broadcast hash join {on}",
+                "broadcast_seed": f"broadcast hash join {on}, seed side broadcast",
+                "shuffle": f"shuffle join {on}",
+            }[step.strategy]
+            if step.strategy.startswith("broadcast") and not step.keys:
+                side = "seed" if step.strategy == "broadcast_seed" else "scan"
+                strat = f"CARTESIAN (no shared vars), {side} side broadcast"
             lines.append(
-                f"  [{i + 1}] {pat.s} {pat.p} {pat.o}  "
-                f"-> {access}; est {est:,.0f} rows; {strat}"
+                f"  [{i}] {pat.s} {pat.p} {pat.o}  "
+                f"-> {access}; est {step.est:,.0f} rows; {strat}"
             )
-            bound_cols |= {v for v in (s_var, o_var) if v}
-            if _is_var(pat.p):
-                bound_cols.add(pat.p[1:])
         return "\n".join(lines)
 
     def _decode_frame(
@@ -2072,7 +2038,7 @@ class BGPEngine(GraphAccess):
                 for v, term in const_binds
             )
         if getattr(q, "filters", None):
-            # replay the FILTER decode-placement decision (r5 lowering):
+            # report the FILTER decode placement (r5 lowering):
             # id-lowerable filters prune the encoded solution set before any
             # dictionary join; the rest decode only the vars they reference
             from parj_spark.query.sparql import filter_vars
