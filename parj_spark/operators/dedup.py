@@ -273,7 +273,7 @@ def ngram_jaccard_pairs(
         F.col("a.sz").alias("sz_a"),
         F.col("b.sz").alias("sz_b"),
     ).filter(ratio_ok)
-    if df.count() >= 50_000:
+    if df.limit(50_000).count() >= 50_000:
         # large-corpus regime: explicit pair-key repartition (4x
         # parallelism, scale-adaptive) before the aggregation. The groupBy
         # reuses this partitioning — still exactly ONE exchange — but the
@@ -286,8 +286,8 @@ def ngram_jaccard_pairs(
         # shingle, and posting lists are hash-spread by shingle, so a
         # pair's duplicates land in different tasks anyway. Below the
         # gate, the partial-agg plan wins (128 near-empty reduce tasks
-        # cost ~1s of pure task launch at local scale) — the one cheap
-        # count() action decides.
+        # cost ~1s of pure task launch at local scale). A bounded probe
+        # decides: it reads at most 50k input rows, never the whole corpus.
         pairs_flat = pairs_flat.repartition(
             df.sparkSession.sparkContext.defaultParallelism * 4,
             "id_a",

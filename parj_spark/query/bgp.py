@@ -207,13 +207,18 @@ class GraphAccess:
     modifiers) and :meth:`_path_rel` evaluates property paths. Both reach
     the graph only through these primitives, which a subclass supplies:
 
-    - ``_bgp(patterns)``: the joined solutions of a pattern list;
-      ``_block(group, terms)`` an OPTIONAL block's, or None when it can
-      match nothing; ``_check_var_spaces(patterns)`` rejects what the
-      graph cannot join.
-    - ``_resolve(patterns)``: the constants of an OPTIONAL block, ready
-      for ``_block``; ``_term_ids(terms)`` / ``_pred_id(term)``: constant
-      terms (predicates) as the graph's join keys.
+    - ``_resolve(patterns)``: the constants of every pattern of a query,
+      as join keys, plus whatever planning state the graph loads for them
+      — called once per (sub)query, over all of its groups;
+      ``_term_ids(terms)`` / ``_pred_id(term)``: constant terms
+      (predicates) as the graph's join keys.
+    - ``_bgp(patterns, terms)``: the joined solutions of one group's
+      pattern list (the core BGP, a UNION alternative, a MINUS / EXISTS
+      block), with ``terms`` from ``_resolve``; a group that can match
+      nothing gives the empty relation over its vars. ``_block(group,
+      terms)``: an OPTIONAL block's, as the join leaves them (no
+      projection), or None when it can match nothing.
+      ``_check_var_spaces(patterns)`` rejects what the graph cannot join.
     - ``_decode_frame(df, pvars, only)``: named columns as term strings;
       ``_encode(df, v, gated)``: a term-string column as a join key;
       ``_with_term(df, v, pvars)``: ``v``'s term string as ``__lit_<v>``.
@@ -414,11 +419,8 @@ class GraphAccess:
         _filter_group_frame."""
         for gi, group in enumerate(opt_groups):
             gdf = self._block(group, terms)
-            # None = a group pattern with an unknown constant matches nothing
-            dead = gdf is None
-            group_vars = sorted({v for p in group for v in p.vars()})
-            if dead:
-                for v in group_vars:
+            if gdf is None:  # a constant absent from the graph: no match
+                for v in sorted({v for p in group for v in p.vars()}):
                     if v not in result.columns:
                         result = result.withColumn(v, F.lit(None).cast("long"))
                 continue
@@ -775,7 +777,21 @@ class GraphAccess:
         opt_pats = [p for g in q.optional for p in g]
         if opt_pats:
             self._check_var_spaces(list(q.patterns) + opt_pats)
-        result = self._bgp(q.patterns) if q.patterns else None
+        all_pats = (
+            list(q.patterns)
+            + opt_pats
+            + [p for grp in q.unions for alt in grp for p in alt]
+        )
+        pvars = {v for p in all_pats for v in [p.pred_var()] if v}
+        # every group's constants resolve in one pass (one dictionary
+        # lookup and one stats load per query, like the reference's
+        # IdFetcher before its one plan), before any group is planned
+        terms = self._resolve(
+            all_pats
+            + [p for g in q.minus for p in g]
+            + [p for _, g in q.exists for p in g]
+        )
+        result = self._bgp(q.patterns, terms) if q.patterns else None
         for v, term in const_binds:
             result = result.withColumn(v, F.lit(term))
             literal.add(v)
@@ -789,9 +805,9 @@ class GraphAccess:
         for grp in q.unions:
             # alternatives bind the same vars (parse-enforced) -> a plain
             # column-aligned union, then an equi-join with the core BGP
-            u = self._bgp(grp[0])
+            u = self._bgp(grp[0], terms)
             for alt in grp[1:]:
-                u = u.unionByName(self._bgp(alt))
+                u = u.unionByName(self._bgp(alt, terms))
             result = join(result, u)
         for silent, name, spats in q.services:
             # SERVICE: the block's solutions from the access (a federation
@@ -813,12 +829,6 @@ class GraphAccess:
             for v in svars:
                 if v not in result.columns:
                     result = result.withColumn(v, nul)
-        all_pats = (
-            list(q.patterns)
-            + opt_pats
-            + [p for grp in q.unions for alt in grp for p in alt]
-        )
-        pvars = {v for p in all_pats for v in [p.pred_var()] if v}
         for sub in q.subqueries:
             # nested SELECT: its own lowering (recursively). The subquery
             # surfaces decoded term strings (its own contract), but the
@@ -895,14 +905,13 @@ class GraphAccess:
         if q.optional:
             # OPTIONAL left-joins the fully-composed binding set (core ⋈
             # UNION ⋈ SERVICE ⋈ subquery ⋈ VALUES) in typical document
-            # order. The core join neither resolved this block's constants
-            # nor hydrated its predicates' stats, so _resolve does both.
+            # order
             if result is None:
                 raise ValueError("OPTIONAL without a core BGP is not supported")
             result = self._apply_optional_groups(
                 result,
                 [list(g) for g in q.optional],
-                self._resolve(opt_pats),
+                terms,
                 literal=literal,
                 pvars=pvars,
                 opt_filters=q.optional_filters,
@@ -912,7 +921,7 @@ class GraphAccess:
             """A MINUS / EXISTS block's ENCODED frame, pre-filtered by its
             scoped FILTERs (exact per spec: a MINUS block never sees outer
             bindings; for EXISTS the join equates the shared vars)."""
-            gdf = self._bgp(group)
+            gdf = self._bgp(group, terms)
             if gfs:
                 gdf = self._filter_group_frame(gdf, gfs, group, pvars)
             return gdf
@@ -1001,32 +1010,15 @@ class GraphAccess:
         for fexpr in str_filters:
             result = result.filter(filter_to_column(fexpr, F.col))
         # the remaining OUTPUT columns decode AFTER the filters have pruned
-        # — and only the columns the query actually surfaces (projection +
-        # ORDER BY keys + CONSTRUCT template vars): a var that is joined on
-        # but never output never pays a dictionary join at all.
-        # ASK/DESCRIBE/aggregates handle their own (late or no) decode.
-        if (
-            result is not None
-            and result.columns
-            and (
-                q.construct is not None
-                or (
-                    decode and not q.ask and q.describe is None
-                    and not q.aggregates
-                )
-            )
-        ):
-            if q.construct is not None:
-                need = {
-                    t[1:]
-                    for tp in q.construct
-                    for t in (tp.s, tp.p, tp.o)
-                    if _is_var(t)
-                }
-            elif q.select:
-                need = set(q.select) | order_vars(q.order_by)
-            else:
-                need = {c for c in result.columns if not c.startswith("__bn")}
+        # — and only the columns the query actually surfaces: a var that is
+        # joined on but never output never pays a dictionary join at all.
+        # CONSTRUCT decodes its template vars here, the SELECT form its
+        # projection below; ASK/DESCRIBE/aggregates handle their own (late
+        # or no) decode.
+        if q.construct is not None and result.columns:
+            need = {
+                t[1:] for tp in q.construct for t in (tp.s, tp.p, tp.o) if _is_var(t)
+            }
             result = decode_cols(result, sorted(need))
         if q.ask:
             # ASK: one row, one boolean — any solution exists? limit(1)
@@ -1096,15 +1088,34 @@ class GraphAccess:
             for h in q.having:
                 result = result.filter(filter_to_column(h, F.col))
             result = result.select(*((q.select or []) + [a.alias for a in q.aggregates]))
-        elif q.select:
-            result = self._project(result, q.select, decode)
+            if q.distinct:
+                result = result.distinct()
         else:
-            # SELECT *: blank-node anonymous vars join but never project
-            bn = [c for c in result.columns if c.startswith("__bn")]
-            if bn:
-                result = result.drop(*bn)
-        if q.distinct:
-            result = result.distinct()
+            # SELECT (SELECT *: every var but the blank-node anonymous ones,
+            # which join but never project). SPARQL orders, projects, then
+            # applies DISTINCT; the projected keys decode last, after
+            # DISTINCT, in select order.
+            out = q.select or [c for c in result.columns if not c.startswith("__bn")]
+            bound = [v for v in out if v in result.columns]
+            hidden = sorted(order_vars(q.order_by) - set(out))
+            if order_cols and hidden:
+                # an ORDER BY key outside the projection: sort the decoded
+                # solutions, then project — Spark keeps the order through
+                # Project, OFFSET and LIMIT
+                if q.distinct:
+                    raise ValueError(
+                        f"ORDER BY on {hidden}, outside the DISTINCT "
+                        "projection, is not supported"
+                    )
+                if decode:
+                    result = decode_cols(result, bound + hidden)
+                result = result.orderBy(*order_cols)
+                order_cols = None
+            result = self._project(result, out, decode)
+            if q.distinct:
+                result = result.distinct()
+            if decode:
+                result = decode_cols(result, bound)
         if order_cols:
             result = result.orderBy(*order_cols)
         if q.offset is not None:
@@ -1305,16 +1316,29 @@ class BGPEngine(GraphAccess):
         return self._props.get(term)
 
     def _resolve(self, patterns: list[Pattern]) -> dict[str, int]:
+        """Hydrate the stats of ``patterns``'s predicates and resolve their
+        constant terms: one stats load and one dictionary lookup for every
+        group of a query."""
         self._hydrate(patterns)
         return self._resolve_terms(patterns)
 
-    def _bgp(self, patterns: list[Pattern]) -> DataFrame:
-        return self.query(patterns, select=None, decode=False)
+    def _bgp(self, patterns: list[Pattern], terms: dict[str, int]) -> DataFrame:
+        """One group's solutions, ENCODED: the patterns ordered by
+        :meth:`_order` and joined by :meth:`_compose_joins`, projected to
+        their vars in sorted order (blank-node anonymous vars join, never
+        project). A constant or predicate absent from the catalogs gives
+        the empty relation over those vars."""
+        self._check_var_spaces(patterns)
+        out = sorted({v for p in patterns for v in p.vars() if not v.startswith("__bn")})
+        result = self._block(patterns, terms)
+        if result is None:
+            result = self.spark.createDataFrame(
+                [], ", ".join(f"{v} long" for v in out) or "x long"
+            )
+        return result.select(*out)
 
-    def _block(self, group: list[Pattern], terms: dict) -> DataFrame | None:
-        return self._compose_joins(
-            self._order(group, terms) if len(group) > 1 else list(group), terms
-        )
+    def _block(self, group: list[Pattern], terms: dict[str, int]) -> DataFrame | None:
+        return self._compose_joins(self._order(group, terms), terms)
 
     def _check_var_spaces(self, patterns: list[Pattern]) -> set[str]:
         """Reject a variable used in both predicate and subject/object
@@ -1779,14 +1803,20 @@ class BGPEngine(GraphAccess):
         order_by: list[str] | None = None,
         limit: int | None = None,
     ) -> DataFrame:
-        """Answer a BGP. ``optional`` joins LEFT OUTER (SPARQL OPTIONAL —
-        the reference carries the opcode but never constructs it,
-        Node.java:43 / SURVEY.md §2.3 J5). A flat pattern list or string is
-        ONE optional block; a list of lists is one block per inner list —
-        each block's patterns join each other first, then the assembled
-        block left-joins the core, so a block matches as a whole or leaves
-        all its vars unbound (SPARQL group semantics). ``order_by``/
-        ``limit`` complete the O1/O2 surface."""
+        """Answer a BGP: the programmatic form of ``SELECT`` over
+        ``patterns``, lowered by the one SPARQL lowering
+        (:meth:`GraphAccess._sparql_query`). ``optional`` joins LEFT OUTER
+        (SPARQL OPTIONAL — the reference carries the opcode but never
+        constructs it, Node.java:43 / SURVEY.md §2.3 J5). A flat pattern
+        list or string is ONE optional block; a list of lists is one block
+        per inner list — each block's patterns join each other first, then
+        the assembled block left-joins the core, so a block matches as a
+        whole or leaves all its vars unbound (SPARQL group semantics).
+        ``select`` vars that no pattern binds are dropped; no ``select``
+        means every bound var, sorted. ``order_by`` (var names, ``"-v"``
+        descending) / ``limit`` complete the O1/O2 surface."""
+        from parj_spark.query.sparql import SparqlQuery
+
         if isinstance(patterns, str):
             patterns = parse_bgp(patterns)
         if isinstance(optional, str):
@@ -1797,13 +1827,17 @@ class BGPEngine(GraphAccess):
             opt_groups = [list(optional)]  # flat list = one block
         else:
             opt_groups = [list(g) for g in optional]
-        opt_patterns = [p for g in opt_groups for p in g]
-        pvars = self._check_var_spaces(list(patterns) + opt_patterns)
-        return self._plan_and_execute(
-            patterns, opt_groups, opt_patterns, pvars,
-            select=select, distinct=distinct, decode=decode,
-            order_by=order_by, limit=limit,
+        bound = {
+            v
+            for p in [*patterns, *(p for g in opt_groups for p in g)]
+            for v in p.vars()
+            if not v.startswith("__bn")
+        }
+        select = [v for v in select or () if v in bound] or sorted(bound)
+        q = SparqlQuery(
+            select, distinct, list(patterns), opt_groups, list(order_by or ()), limit
         )
+        return self._sparql_query(q, decode)
 
     def _plan_joins(
         self, ordered: list[Pattern], terms: dict[str, int]
@@ -1874,48 +1908,6 @@ class BGPEngine(GraphAccess):
             result = result.join(scan, on=keys) if keys else result.crossJoin(scan)
         return result
 
-    def _plan_and_execute(
-        self, patterns, opt_groups, opt_patterns, pvars,
-        select, distinct, decode, order_by, limit,
-    ) -> DataFrame:
-        """query()'s planning + execution tail, after input normalization
-        and the predicate/entity variable-space check."""
-        terms = self._resolve_terms(list(patterns) + opt_patterns)
-        # core + optional predicates, one hydration pass
-        self._hydrate(list(patterns) + opt_patterns)
-        ordered = self._order(patterns, terms)
-
-        result = self._compose_joins(ordered, terms)
-        if result is None:
-            # unknown predicate/constant: empty result with right columns
-            all_vars = sorted({v for p in patterns for v in p.vars()})
-            result = self.spark.createDataFrame(
-                [], "".join(f"{v} long," for v in all_vars).rstrip(",") or "x long"
-            )
-        if "__exists" in result.columns:
-            result = result.drop("__exists")
-
-        result = self._apply_optional_groups(result, opt_groups, terms)
-
-        all_pats = list(patterns) + opt_patterns
-        out_vars = select or sorted(
-            # blank-node anonymous vars (SPARQL [] sugar) join, never project
-            {v for p in all_pats for v in p.vars() if not v.startswith("__bn")}
-        )
-        # a select var not bound by any pattern is dropped (consistently for
-        # decode=True and decode=False) rather than failing at decode time
-        out_vars = [c for c in out_vars if c in result.columns]
-        result = result.select(*out_vars)
-        if distinct:
-            result = result.distinct()
-        if decode and result.columns:
-            result = self._decode_frame(result, pvars).select(*out_vars)
-        if order_by:
-            result = result.orderBy(*order_by)
-        if limit is not None:
-            result = result.limit(limit)
-        return result
-
     def explain(self, patterns: list[Pattern] | str) -> str:
         """Driver-side plan report: the join plan :meth:`_plan_joins` makes
         for a BGP — the one :meth:`_compose_joins` applies — without
@@ -1931,7 +1923,7 @@ class BGPEngine(GraphAccess):
         the query's DataFrame."""
         if isinstance(patterns, str):
             patterns = parse_bgp(patterns)
-        terms = self._resolve_terms(patterns)
+        terms = self._resolve(patterns)
         ordered = self._order(patterns, terms)
         method = (
             "DP (left-deep subset lattice, T3-costed)"
@@ -2001,9 +1993,8 @@ class BGPEngine(GraphAccess):
 
         ``flags`` opt in to the parser's extensions under the engine's
         spelling (``filters=True``, ``unions=True``, ``paths=True``, ...;
-        see ``ENGINE_FLAGS`` in :mod:`parj_spark.query.sparql`). A plain
-        BGP (+ OPTIONAL + modifiers) lowers straight to :meth:`query`;
-        everything else goes through the shared lowering
+        see ``ENGINE_FLAGS`` in :mod:`parj_spark.query.sparql`). Every
+        query, a plain BGP included, goes through the one lowering
         (:meth:`GraphAccess._sparql_query`) over the encoded permutation
         tables: UNION alternatives plan as their own BGPs, id-lowerable
         FILTERs (=/!=/IN/BOUND over constant terms) prune on ENCODED ids
@@ -2079,34 +2070,6 @@ class BGPEngine(GraphAccess):
                     )
             report += "\nfilter lowering:\n" + "\n".join(lines)
         return report
-
-    def _sparql_query(self, q, decode: bool) -> DataFrame:
-        """A plain BGP (+ OPTIONAL blocks + modifiers) lowers straight to
-        :meth:`query`, which decodes after DISTINCT; everything else takes
-        the shared lowering."""
-        if (
-            not q.filters and not any(q.optional_filters) and not q.unions
-            and not q.ask and not q.minus
-            and not q.exists and q.offset is None and not q.aggregates
-            and not q.values and q.construct is None and not q.binds
-            and not q.subqueries and q.describe is None and not q.services
-        ):
-            from parj_spark.query.sparql import order_columns
-
-            result = self.query(
-                q.patterns,
-                select=q.select,
-                distinct=q.distinct,
-                decode=decode,
-                optional=q.optional or None,
-                order_by=order_columns(q.order_by) or None,
-                limit=q.limit,
-            )
-            # query() drops a select var no pattern binds; SPARQL keeps it
-            if q.select and result.columns != q.select:
-                result = self._project(result, q.select, decode)
-            return result
-        return super()._sparql_query(q, decode)
 
     def count(self, patterns: list[Pattern] | str) -> int:
         """count(*) result counting (reference A1, SQLiteLocalExecutor.java:152)."""

@@ -2484,7 +2484,7 @@ class TripleAccess(GraphAccess):
             return df.limit(1).select(F.lit(1).alias("__exists"))
         return df.select(*[F.col(c).alias(v[1:]) for v, c in slots.items()])
 
-    def _bgp(self, patterns: list[Pattern]):
+    def _bgp(self, patterns: list[Pattern], terms):
         def n_consts(p: Pattern) -> int:
             return sum(not _is_var(t) for t in (p.s, p.o))
 
@@ -2507,7 +2507,7 @@ class TripleAccess(GraphAccess):
         return out.drop("__exists") if "__exists" in out.columns else out
 
     def _block(self, group, terms):
-        return self._bgp(group)
+        return self._bgp(group, terms)
 
     def _resolve(self, patterns):
         return {}
@@ -2542,7 +2542,7 @@ class TripleAccess(GraphAccess):
         rel = self.services.get(name)
         if rel is None:
             return super()._service(name, silent, patterns)
-        return TripleAccess(rel.select("s", "p", "o"))._bgp(patterns)
+        return TripleAccess(rel.select("s", "p", "o"))._bgp(patterns, {})
 
     def _described(self, ids):
         # the input relation may repeat a triple; the result is a graph

@@ -4,8 +4,10 @@ Builds the 8-department fixture graph (``gen_corpus(n_depts=8, seed=42)``,
 the test suite's ``tiny_graph``), opens a ``BGPEngine`` on it and writes,
 for every kgbench read template (department 1, entity index 1) and every
 ``SEED_QUERIES`` entry of ``tests/test_sparql_differential.py``, the
-``optimizedPlan()`` text of ``engine.sparql(text, **flags)``. Only plans
-are built; no query runs.
+``optimizedPlan()`` text of ``engine.sparql(text, **flags)``; then the plan
+of the programmatic entry ``engine.query(..., decode=False)`` on
+``bench.py``'s ``BGP_QUERIES["bgp_chain_member"]``, as ``bench.py``'s plan
+audit builds it. Only plans are built; no query runs.
 
 Two checkouts compare byte-for-byte: expression ids (``#123``) are
 renumbered per plan in order of first appearance, the graph and working
@@ -45,7 +47,7 @@ def main() -> None:
     from kgbench.inputs import READ_TEMPLATES, read_request
     from parj_spark.construct.pipeline import run_pipeline
     from parj_spark.fixtures import gen_corpus
-    from parj_spark.query import BGPEngine
+    from parj_spark.query import BGPEngine, parse_bgp
     from parj_spark.session import get_spark
     from test_sparql_differential import SEED_QUERIES
 
@@ -53,6 +55,10 @@ def main() -> None:
     graph_dir = os.path.join(work, "graph")
     shutil.rmtree(graph_dir, ignore_errors=True)
     spark = get_spark(app="dump_sparql_plans", cpus=4, shuffle_partitions=4)
+    # bench.py defaults the driver memory for its own runs at import time;
+    # imported after the session starts, that default does not apply here
+    from bench import BGP_QUERIES
+
     docs, _ = gen_corpus(spark, n_depts=8, seed=42)
     engine = BGPEngine(run_pipeline(spark, docs.cache(), graph_dir, resume=False))
 
@@ -62,10 +68,15 @@ def main() -> None:
         queries.append((f"kgbench {t}", r.sparql, dict(r.flags)))
     for i, (text, flags) in enumerate(SEED_QUERIES):
         queries.append((f"seed {i}", text, flags))
+    queries.append(("query() bgp_chain_member", BGP_QUERIES["bgp_chain_member"], None))
 
     with open(args.out, "w") as fh:
         for name, text, flags in queries:
-            df = engine.sparql(text, **flags)
+            if flags is None:  # the programmatic entry, as bench.py calls it
+                df = engine.query(parse_bgp(text), decode=False)
+                flags = {"decode": False}
+            else:
+                df = engine.sparql(text, **flags)
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             fh.write(f"=== {name}\n{text}\nflags: {sorted(flags.items())}\n")
             fh.write(_normalize(plan, graph_dir) + "\n")

@@ -548,3 +548,70 @@ def test_optional_scoped_filter_nonlowerable_decodes_temp_only(spark, tiny_graph
     plan = _plan(df)
     assert plan.count("dict_stage") == 3, plan
     assert df.count() > 0
+
+
+def _dict_join_above_aggregate(df) -> bool:
+    """Whether a join with the dictionary sits above the optimized plan's
+    Aggregate and no dictionary scan (an ``uri`` column) sits below it."""
+    def find(node, above):
+        if node.nodeName() == "Aggregate":
+            return above, node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i), above + [node])
+            if hit:
+                return hit
+        return None
+
+    above, agg = find(df._jdf.queryExecution().optimizedPlan(), [])
+    return (
+        any(n.nodeName() == "Join" and "uri#" in n.treeString() for n in above)
+        and "uri#" not in agg.treeString()
+    )
+
+
+def test_one_entry_path(spark, tiny_graph):
+    """SPARQL strings and query() reach the encoded graph through the one
+    lowering, GraphAccess._sparql_query: BGPEngine keeps no second
+    evaluator, DISTINCT runs on encoded keys below the output decode on
+    both entries, and resolving a query's constants costs one dictionary
+    lookup and one stats load, however many groups carry constants."""
+    assert "_sparql_query" not in vars(BGPEngine)
+    assert not hasattr(BGPEngine, "_plan_and_execute")
+
+    eng = BGPEngine(tiny_graph)
+    via_sparql = eng.sparql("PREFIX ub:<ub:> SELECT DISTINCT ?d WHERE { ?x ub:memberOf ?d }")
+    via_query = eng.query("?x ub:memberOf ?d", select=["d"], distinct=True)
+    for df in (via_sparql, via_query):
+        assert _dict_join_above_aggregate(df), _plan(df)
+    assert sorted(via_sparql.collect()) == sorted(via_query.collect())
+
+    probes = [
+        ("SELECT ?s ?g WHERE { ?s ub:memberOf <ub:Department_1_1> . "
+         "OPTIONAL { ?s ub:undergraduateDegreeFrom ?g . ?g rdf:type ub:University } }",
+         {}),
+        ("SELECT ?x ?w WHERE { ?x ub:memberOf <ub:Department_1_1> . "
+         "{ ?x ub:undergraduateDegreeFrom <ub:University_0> . ?x ub:name ?w } "
+         "UNION { ?x ub:worksFor <ub:Department_1_1> . ?x ub:emailAddress ?w } }",
+         {"unions": True}),
+    ]
+    for text, flags in probes:
+        eng = BGPEngine(tiny_graph)
+        lookups, loads = [], []
+        term_ids, hydrate = eng._term_ids, eng._hydrate
+
+        def counted_term_ids(terms):
+            lookups.append(set(terms))
+            return term_ids(terms)
+
+        def counted_hydrate(patterns):
+            before = set(eng._hydrated_pids)
+            hydrate(patterns)
+            if eng._hydrated_pids != before:  # this call loaded stats rows
+                loads.append(len(patterns))
+
+        eng._term_ids, eng._hydrate = counted_term_ids, counted_hydrate
+        df = eng.sparql("PREFIX rdf:<rdf:> PREFIX ub:<ub:> " + text, **flags)
+        assert len(lookups) == 1 and len(lookups[0]) >= 2, lookups
+        assert len(loads) == 1, loads
+        assert df.count() > 0

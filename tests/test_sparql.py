@@ -99,6 +99,19 @@ def test_sparql_distinct_order_limit(engine):
     assert len(rows) == 4 and rows == sorted(rows, reverse=True)
 
 
+def test_order_by_unprojected_var(engine):
+    """SPARQL orders before it projects: ORDER BY a var outside the
+    SELECT list sorts the solutions, then drops the key. The rows equal the
+    same query with the key selected; under DISTINCT such a key is
+    rejected with a ValueError."""
+    where = "WHERE { ?x ub:memberOf ?d . ?x ub:name ?n } ORDER BY ?n LIMIT 3"
+    got = [r["x"] for r in engine.sparql(PREFIXES + "SELECT ?x " + where).collect()]
+    keyed = engine.sparql(PREFIXES + "SELECT ?x ?n " + where).collect()
+    assert len(got) == 3 and got == [r["x"] for r in keyed]
+    with pytest.raises(ValueError, match="DISTINCT"):
+        engine.sparql(PREFIXES + "SELECT DISTINCT ?x " + where)
+
+
 def test_sparql_optional(engine):
     """OPTIONAL lowers to the engine's left-outer path: students keep rows
     with unbound (null) emails."""
