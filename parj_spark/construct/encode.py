@@ -8,8 +8,10 @@ dense integer IDs (reference uses uint32; we use LongType for headroom).
 Dense deterministic IDs are assigned by sort + zipWithIndex — a distributed
 total-order assignment (range-partitioned sort, one pass), NOT a
 single-partition row_number window. At true 10^12 scale even this global
-sort is a bottleneck; the documented alternative is xxhash64 content IDs
-(deterministic, no shuffle, sacrifices density) — kept as `hash_ids=True`.
+sort is a bottleneck; xxhash64 content IDs (deterministic, no shuffle,
+sacrifices density) are the documented alternative (SURVEY.md §7.3), not
+implemented here: dense ids are the one id scheme, and the streaming
+extension reserves the negative range for stream-introduced terms.
 """
 
 from __future__ import annotations
@@ -127,25 +129,18 @@ def _dense_ids(terms: DataFrame, col: str, local_below: int = 1_000_000) -> Data
     )
 
 
-def build_dictionary(triples_uri: DataFrame, hash_ids: bool = False) -> DataFrame:
+def build_dictionary(triples_uri: DataFrame) -> DataFrame:
     """Term dictionary (id, uri) over all subjects + objects (incl. literals).
 
-    Output is range-partitioned + sorted by uri in BOTH modes (for the dense
-    path `_dense_ids` already produces that order and the offset broadcast
-    join preserves it), so the checkpointed parquet carries disjoint per-file
-    uri ranges — per-query constant-term lookups (`uri IN (...)`) prune to a
-    few row groups via parquet min/max instead of scanning the dictionary.
+    Output is range-partitioned + sorted by uri (`_dense_ids` already
+    produces that order and the offset broadcast join preserves it), so the
+    checkpointed parquet carries disjoint per-file uri ranges — per-query
+    constant-term lookups (`uri IN (...)`) prune to a few row groups via
+    parquet min/max instead of scanning the dictionary.
     """
     terms = triples_uri.select(F.col("s_uri").alias("uri")).union(
         triples_uri.select(F.col("o_uri").alias("uri"))
     )
-    if hash_ids:
-        return (
-            terms.distinct()
-            .select(F.xxhash64("uri").alias("id"), "uri")
-            .repartitionByRange(F.col("uri"))
-            .sortWithinPartitions("uri")
-        )
     # cheap pre-gate for the driver-local id assignment: distinct terms are
     # bounded by 2x the triple count (a metadata-only job on checkpointed
     # parquet), so a corpus-scale dictionary skips the gate probe — which

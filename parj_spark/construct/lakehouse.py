@@ -51,8 +51,8 @@ def write_sorted_table(
     """Write one sorted, partitioned table through the format seam.
 
     ``df`` arrives already repartitioned for the intended file layout (the
-    caller owns the shuffle strategy — salted p-partitions, range
-    partitioning, bucket-aligned, ...); this seam applies the within-
+    caller owns the shuffle strategy — range partitioning, hash
+    partitioning on a key, ...); this seam applies the within-
     partition sort, the partition columns, and the format.
 
     ``dest`` is a filesystem path for parquet, a catalog identifier for

@@ -8,10 +8,11 @@ sorted within files, so parquet row-group min/max stats give the same
 (parj.c:1479-1505), and sort-merge joins over co-sorted data get the
 sequential-adjacent access pattern of its leapfrog-ish NLJ (SURVEY.md §2.10).
 
-Skew: hot predicates (rdf:type) are salted — `salt = xxhash64(sort_key) % B`
-joins the repartition key so one predicate's data spreads over B parallel
-writers/readers; this is the reference's `secondShard` hot-key defuser
-(parj.c:988-1014, SURVEY.md §2.1 S6) done the Spark way.
+Skew: the bucketed layout spreads every predicate, hot ones (rdf:type)
+included, over ``n_buckets`` files per predicate partition (bucketed by the
+first sort column), so one predicate's data has up to ``n_buckets``
+parallel writers/readers; this is the reference's `secondShard` hot-key
+defuser (parj.c:988-1014, SURVEY.md §2.1 S6) done the Spark way.
 
 Stats table = reference's stat vtab mode 0/1 (parj.c:311-364): per-predicate
 counts + distincts for the query planner's join ordering.
@@ -24,7 +25,6 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 8
 DEFAULT_JOIN_BUCKETS = 32
 # bucketed-layout commit marker + metadata (bucket count, table prefix) —
 # written after BOTH bucketed tables land, so readers never register a
@@ -35,10 +35,10 @@ BUCKETED_META = "_BUCKETED_META.json"
 def write_bucketed_tables(
     triples_enc: DataFrame,
     prefix: str,
+    path_root: str,
     n_buckets: int = DEFAULT_JOIN_BUCKETS,
-    path_root: str | None = None,
 ) -> tuple[str, str]:
-    """Materialize bucketed managed tables for shuffle-free BGP self-joins.
+    """Materialize bucketed tables for shuffle-free BGP self-joins.
 
     PARJ's access-path rule makes every join column the *first* (sorted)
     column of the chosen orientation (SURVEY.md §4.1), so bucketing SPO by
@@ -55,12 +55,11 @@ def write_bucketed_tables(
     instead of row-filtering the whole corpus — one layout now carries both
     core physical properties (predicate pruning AND shuffle-free SMJ).
 
-    ``path_root``: when given, the tables are EXTERNAL with data under
-    ``<path_root>/{spo,pos}`` plus a ``_BUCKETED_META.json`` commit marker —
-    the layout then travels with the graph directory and any later session
-    re-registers it via :func:`register_bucketed_tables` (catalog metadata is
-    per-session; the data is not). Without it the tables are managed
-    (warehouse-dir) — the pre-round-4 behavior kept for ad-hoc layouts.
+    The tables are EXTERNAL, with data under ``<path_root>/{spo,pos}`` plus
+    a ``_BUCKETED_META.json`` commit marker: the layout travels with the
+    graph directory and any later session re-registers it via
+    :func:`register_bucketed_tables` (catalog metadata is per-session; the
+    data is not).
 
     Returns the two table names (``<prefix>_spo_b``, ``<prefix>_pos_b``).
     """
@@ -69,12 +68,9 @@ def write_bucketed_tables(
 
     spark = triples_enc.sparkSession
     spo_name, pos_name = f"{prefix}_spo_b", f"{prefix}_pos_b"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for name in (spo_name, pos_name):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    if path_root:
-        shutil.rmtree(path_root, ignore_errors=True)
+    shutil.rmtree(path_root, ignore_errors=True)
 
     def _write(bucket_col: str, sort_cols: list[str], name: str, sub: str):
         # repartition on the bucket column with numPartitions = n_buckets:
@@ -82,16 +78,15 @@ def write_bucketed_tables(
         # pmod(murmur3) formula, so each write task holds exactly one bucket
         # id -> one file per (p-partition, bucket) instead of tasks x
         # buckets small files (the 100 TB write shape).
-        w = (
+        (
             triples_enc.repartition(n_buckets, F.col(bucket_col))
             .write.mode("overwrite")
             .partitionBy("p")
             .bucketBy(n_buckets, bucket_col)
             .sortBy(*sort_cols)
+            .option("path", os.path.join(path_root, sub))
+            .saveAsTable(name)
         )
-        if path_root:
-            w = w.option("path", os.path.join(path_root, sub))
-        w.saveAsTable(name)
 
     # the two permutation writes are independent jobs over the same input —
     # run them concurrently so the second's stages back-fill the first's
@@ -105,9 +100,8 @@ def write_bucketed_tables(
         ]
         for f in fs:
             f.result()
-    if path_root:
-        with open(os.path.join(path_root, BUCKETED_META), "w") as f:
-            json.dump({"prefix": prefix, "n_buckets": n_buckets}, f)
+    with open(os.path.join(path_root, BUCKETED_META), "w") as f:
+        json.dump({"prefix": prefix, "n_buckets": n_buckets}, f)
     return spo_name, pos_name
 
 
@@ -152,25 +146,6 @@ def register_bucketed_tables(spark, path_root: str) -> str | None:
     return prefix
 
 
-def _write_permutation(
-    triples: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    salt_buckets: int,
-) -> None:
-    from parj_spark.construct.lakehouse import write_sorted_table
-
-    salted = triples.withColumn(
-        "salt", F.pmod(F.xxhash64(sort_cols[0]), F.lit(salt_buckets)).cast("int")
-    )
-    write_sorted_table(
-        salted.repartition("p", "salt"),
-        path,
-        partition_by=("p",),
-        sort_within=tuple(sort_cols),
-    )
-
-
 def bucket_prefix_for(out_dir: str) -> str:
     """Deterministic, session-independent table prefix for a graph dir —
     the same directory always maps to the same catalog names, so re-opening
@@ -180,26 +155,33 @@ def bucket_prefix_for(out_dir: str) -> str:
     return "kg_" + hashlib.md5(os.path.abspath(out_dir).encode()).hexdigest()[:10]
 
 
+def predicate_stats(triples_enc: DataFrame) -> DataFrame:
+    """The T1 statistics of an (s, p, o) relation: per predicate its triple
+    count, approximate subject/object distinct counts and subject/object id
+    ranges (the ``stats`` table)."""
+    return triples_enc.groupBy("p").agg(
+        F.count("*").alias("n"),
+        F.approx_count_distinct("s").alias("ndv_s"),
+        F.approx_count_distinct("o").alias("ndv_o"),
+        F.min("s").alias("min_s"),
+        F.max("s").alias("max_s"),
+        F.min("o").alias("min_o"),
+        F.max("o").alias("max_o"),
+    )
+
+
 def write_graph(
     triples_enc: DataFrame,
     out_dir: str,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    bucketed: bool = True,
     n_buckets: int = DEFAULT_JOIN_BUCKETS,
     bucket_prefix: str | None = None,
 ) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
+    from parj_spark.construct.lakehouse import write_sorted_table
+
     triples_enc = triples_enc.cache()
     triples_enc.count()  # materialize once; all writers read the cache
-
-    def w_spo():
-        _write_permutation(triples_enc, os.path.join(out_dir, "spo"), ["s", "o"], salt_buckets)
-
-    def w_pos():
-        _write_permutation(triples_enc, os.path.join(out_dir, "pos"), ["o", "s"], salt_buckets)
-
-    from parj_spark.construct.lakehouse import write_sorted_table
 
     def w_osp():
         # OSP: object-first global order for variable-predicate access paths
@@ -210,17 +192,10 @@ def write_graph(
         )
 
     def w_stats():
-        stats = triples_enc.groupBy("p").agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct("s").alias("ndv_s"),
-            F.approx_count_distinct("o").alias("ndv_o"),
-            F.min("s").alias("min_s"),
-            F.max("s").alias("max_s"),
-            F.min("o").alias("min_o"),
-            F.max("o").alias("max_o"),
-        )
         write_sorted_table(
-            stats, os.path.join(out_dir, "stats"), single_file=True
+            predicate_stats(triples_enc),
+            os.path.join(out_dir, "stats"),
+            single_file=True,
         )
 
     # dict/properties need no second copy here: the pipeline's stage
@@ -240,8 +215,8 @@ def write_graph(
         write_bucketed_tables(
             triples_enc,
             bucket_prefix or bucket_prefix_for(out_dir),
+            os.path.join(out_dir, "bucketed"),
             n_buckets=n_buckets,
-            path_root=os.path.join(out_dir, "bucketed"),
         )
 
     # the writers are independent Spark jobs over the cached triples —
@@ -251,15 +226,9 @@ def write_graph(
     # Write amplification is 3x, matching the reference's three in-memory
     # permutations (parj.c:89-104): the s-bucketed SPO and o-bucketed POS
     # tables ARE the spo/pos layout (p-hive-partitioned, sorted within
-    # buckets, hot predicates spread over n_buckets files), so no separate
-    # salted copies are written — GraphStore.spo()/pos() read the bucketed
-    # files as plain parquet when the plain dirs are absent. At 100 TB the
-    # difference between writing the corpus 3x and 5x is the load budget.
-    writers = [w_osp, w_stats]
-    if bucketed:
-        writers.append(w_bucketed)
-    else:
-        writers += [w_spo, w_pos]
+    # buckets, hot predicates spread over n_buckets files), and
+    # GraphStore.spo()/pos() read their files as plain parquet.
+    writers = [w_osp, w_stats, w_bucketed]
     with ThreadPoolExecutor(max_workers=len(writers)) as pool:
         futures = [pool.submit(f) for f in writers]
         for fut in futures:

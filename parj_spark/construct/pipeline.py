@@ -41,24 +41,15 @@ class GraphStore:
             return None
         return self._read(name)
 
-    def _permutation(self, plain: str, bucketed_sub: str) -> DataFrame:
-        """Read a permutation relation from whichever on-disk copy exists.
-
-        Default graphs keep exactly one copy per sort order — the bucketed
-        tables' parquet files (p-hive-partitioned, sorted within buckets) —
-        read here as plain parquet, which preserves partition pruning and
-        row-group min/max pruning without needing the catalog registration.
-        Graphs written with ``bucketed=False`` (and pre-round-4 dirs) carry
-        the salted plain layout instead."""
-        if os.path.exists(os.path.join(self.out_dir, plain)):
-            return self._read(plain)
-        return self._read(os.path.join("bucketed", bucketed_sub))
-
+    # A graph keeps one copy per sort order: the bucketed tables' parquet
+    # files (p-hive-partitioned, sorted within buckets), read here as plain
+    # parquet, which keeps partition and row-group min/max pruning without
+    # needing the catalog registration.
     def spo(self) -> DataFrame:
-        return self._permutation("spo", "spo")
+        return self._read("bucketed/spo")
 
     def pos(self) -> DataFrame:
-        return self._permutation("pos", "pos")
+        return self._read("bucketed/pos")
 
     def osp(self) -> DataFrame:
         return self._read("osp")
@@ -96,10 +87,10 @@ class GraphStore:
     def bucketed_prefix(self) -> str | None:
         """Table prefix of this graph's bucketed layout, registering the
         external tables into the current session's catalog on first use;
-        None when the graph was materialized without one (pre-round-4 dirs
-        or ``bucketed=False``). The engine treats this as the default join
-        path — the layout is built at load like the reference's permutation
-        indexes (parj.c:1972-2189), not an opt-in extra."""
+        None when the directory holds no committed layout. The engine
+        treats this as the default join path — the layout is built at load
+        like the reference's permutation indexes (parj.c:1972-2189), not an
+        opt-in extra."""
         return mat.register_bucketed_tables(
             self.spark, os.path.join(self.out_dir, "bucketed")
         )
@@ -201,11 +192,8 @@ def run_pipeline(
     docs: DataFrame,
     out_dir: str,
     resume: bool = True,
-    salt_buckets: int = mat.DEFAULT_SALT_BUCKETS,
-    hash_ids: bool = False,
     compute_links: bool = False,
     analyze: bool = True,
-    bucketed: bool = True,
     n_buckets: int = mat.DEFAULT_JOIN_BUCKETS,
     entail: bool | dict = False,
     sameas: str | None = None,
@@ -285,10 +273,8 @@ def run_pipeline(
         lambda: encode.assemble_triples(mentions, canon),
     )
     return materialize_triples(
-        spark, triples_uri, out_dir, resume=resume, salt_buckets=salt_buckets,
-        hash_ids=hash_ids, analyze=analyze, bucketed=bucketed,
-        n_buckets=n_buckets, entail=entail, sameas=sameas,
-        validate=validate,
+        spark, triples_uri, out_dir, resume=resume, analyze=analyze,
+        n_buckets=n_buckets, entail=entail, sameas=sameas, validate=validate,
     )
 
 
@@ -297,10 +283,7 @@ def materialize_triples(
     triples_uri: DataFrame,
     out_dir: str,
     resume: bool = True,
-    salt_buckets: int = mat.DEFAULT_SALT_BUCKETS,
-    hash_ids: bool = False,
     analyze: bool = True,
-    bucketed: bool = True,
     n_buckets: int = mat.DEFAULT_JOIN_BUCKETS,
     entail: bool | dict = False,
     sameas: str | dict | None = None,
@@ -418,7 +401,7 @@ def materialize_triples(
             out_dir,
             "dict_stage",
             resume,
-            lambda: encode.build_dictionary(triples_uri, hash_ids=hash_ids),
+            lambda: encode.build_dictionary(triples_uri),
         )
         f_props = pool.submit(
             _run_stage,
@@ -434,10 +417,7 @@ def materialize_triples(
     if not (resume and lineage.path_exists(marker, spark)):
         t0 = time.time()
         triples_enc = encode.encode_triples(triples_uri, dict_df, props_df)
-        mat.write_graph(
-            triples_enc, out_dir, salt_buckets,
-            bucketed=bucketed, n_buckets=n_buckets,
-        )
+        mat.write_graph(triples_enc, out_dir, n_buckets=n_buckets)
         store = GraphStore(spark, out_dir)
         lineage.record_stage(
             out_dir, "materialize", None, store.spo().count(), time.time() - t0,

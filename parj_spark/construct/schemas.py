@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 
 _CATALOG = "id bigint, uri string"
 _PERMUTATION = "s bigint, o bigint, p bigint"  # p: hive partition column
-_SALTED = "s bigint, o bigint, salt int, p bigint"
 _DELTA = "s bigint, p bigint, o bigint, epoch int"
 
 SCHEMAS: dict[str, str] = {
@@ -34,9 +33,6 @@ SCHEMAS: dict[str, str] = {
     "properties_stage": _CATALOG,
     "bucketed/spo": _PERMUTATION,
     "bucketed/pos": _PERMUTATION,
-    # the salted plain layout of graphs written with bucketed=False
-    "spo": _SALTED,
-    "pos": _SALTED,
     "osp": "s bigint, p bigint, o bigint",
     "stats": (
         "p bigint, n bigint, ndv_s bigint, ndv_o bigint, "

@@ -207,11 +207,11 @@ class GraphAccess:
     modifiers) and :meth:`_path_rel` evaluates property paths. Both reach
     the graph only through these primitives, which a subclass supplies:
 
-    - ``_resolve(patterns)``: the constants of every pattern of a query,
-      as join keys, plus whatever planning state the graph loads for them
-      — called once per (sub)query, over all of its groups;
-      ``_term_ids(terms)`` / ``_pred_id(term)``: constant terms
-      (predicates) as the graph's join keys.
+    - ``_resolve(patterns, consts)``: the constants of every pattern of a
+      query and the FILTER constant terms ``consts``, as join keys, plus
+      whatever planning state the graph loads for them — called once per
+      (sub)query, over all of its groups; ``_pred_id(term)``: a constant
+      predicate as the graph's join key.
     - ``_bgp(patterns, terms)``: the joined solutions of one group's
       pattern list (the core BGP, a UNION alternative, a MINUS / EXISTS
       block), with ``terms`` from ``_resolve``; a group that can match
@@ -428,7 +428,7 @@ class GraphAccess:
                 gdf = gdf.drop("__exists")
             if opt_filters and gi < len(opt_filters) and opt_filters[gi]:
                 gdf = self._filter_group_frame(
-                    gdf, opt_filters[gi], group, pvars
+                    gdf, opt_filters[gi], group, pvars, terms
                 )
             if not gdf.columns:
                 continue  # fully-bound block binds nothing
@@ -455,31 +455,27 @@ class GraphAccess:
         gfs: list,
         group: list[Pattern],
         pvars: "frozenset[str] | set[str]",
+        terms: dict,
     ) -> DataFrame:
         """Apply block-scoped FILTERs to an OPTIONAL / MINUS / EXISTS
         group's ENCODED frame.
 
         Same two-tier lowering as the top-level FILTER path: id-lowerable
         forms (=/!=/IN/BOUND over vars and constant terms) prune on join
-        keys after a pruned driver-side constant lookup; the rest decode
-        ONLY the referenced vars into throwaway ``__lit_*`` columns so the
-        block's join keys stay encoded for the join that follows."""
+        keys, their constants looked up in the query's resolved ``terms``;
+        the rest decode ONLY the referenced vars into throwaway ``__lit_*``
+        columns so the block's join keys stay encoded for the join that
+        follows."""
         from parj_spark.query.sparql import filter_to_column, filter_vars
 
         gpv = {v for p in group for v in [p.pred_var()] if v} | set(pvars)
         cols = set(gdf.columns)
-        lowerable, rest, ent_consts = [], [], set()
+        rest = []
         for fexpr in gfs:
-            plan = self._filter_id_plan(fexpr, cols, set(), gpv)
-            if plan is None:
+            if self._filter_id_plan(fexpr, cols, set(), gpv) is None:
                 rest.append(fexpr)
             else:
-                lowerable.append(fexpr)
-                ent_consts |= plan[0]
-        if lowerable:
-            ent_ids = self._term_ids(ent_consts)
-            for fexpr in lowerable:
-                gdf = gdf.filter(self._filter_id_column(fexpr, ent_ids, gpv))
+                gdf = gdf.filter(self._filter_id_column(fexpr, terms, gpv))
         if rest:
             refs = sorted({v for fexpr in rest for v in filter_vars(fexpr)} & cols)
             for v in refs:
@@ -555,6 +551,33 @@ class GraphAccess:
                 pred |= c[1]
             return ent, pred
         return None
+
+    @staticmethod
+    def _filter_terms(e, pvars: set[str]) -> set[str]:
+        """The constant entity terms FILTER expression ``e`` may compare
+        against on ids: the literal operands of its =/!= comparisons and IN
+        lists over non-predicate vars. A superset of what
+        :meth:`_filter_id_plan` resolves, known before the query's joins
+        decide which expressions lower, so they join the query's one
+        ``_resolve`` lookup."""
+        from parj_spark.query import sparql as S
+
+        if isinstance(e, S.Comparison):
+            ops = (e.lhs, e.rhs)
+            if e.op not in ("=", "!=") or not all(isinstance(t, tuple) for t in ops):
+                return set()
+            if any(t[0] == "var" and t[1] in pvars for t in ops):
+                return set()
+            return {t[1] for t in ops if t[0] == "lit"}
+        if isinstance(e, S.InList):
+            if e.arg[0] != "var" or e.arg[1] in pvars:
+                return set()
+            return {v[1] for v in e.values if v[0] == "lit"}
+        if isinstance(e, S.Not):
+            return GraphAccess._filter_terms(e.expr, pvars)
+        if isinstance(e, (S.And, S.Or)):
+            return {t for p in e.parts for t in GraphAccess._filter_terms(p, pvars)}
+        return set()
 
     def _filter_id_column(self, e, ent_ids: dict, pvars: set[str]):
         """Compile an id-lowerable FILTER expression (see _filter_id_plan)
@@ -783,13 +806,20 @@ class GraphAccess:
             + [p for grp in q.unions for alt in grp for p in alt]
         )
         pvars = {v for p in all_pats for v in [p.pred_var()] if v}
-        # every group's constants resolve in one pass (one dictionary
-        # lookup and one stats load per query, like the reference's
-        # IdFetcher before its one plan), before any group is planned
+        # every group's constants, and every FILTER's constant operands,
+        # resolve in one pass (one dictionary lookup and one stats load per
+        # query, like the reference's IdFetcher before its one plan), before
+        # any group is planned
+        scoped = q.optional_filters + q.minus_filters + q.exists_filters
         terms = self._resolve(
             all_pats
             + [p for g in q.minus for p in g]
-            + [p for _, g in q.exists for p in g]
+            + [p for _, g in q.exists for p in g],
+            {
+                t
+                for fexpr in [*q.filters, *(f for fs in scoped for f in fs or ())]
+                for t in self._filter_terms(fexpr, pvars)
+            },
         )
         result = self._bgp(q.patterns, terms) if q.patterns else None
         for v, term in const_binds:
@@ -923,7 +953,7 @@ class GraphAccess:
             bindings; for EXISTS the join equates the shared vars)."""
             gdf = self._bgp(group, terms)
             if gfs:
-                gdf = self._filter_group_frame(gdf, gfs, group, pvars)
+                gdf = self._filter_group_frame(gdf, gfs, group, pvars, terms)
             return gdf
 
         def probe_side(gdf, group, shared):
@@ -972,27 +1002,21 @@ class GraphAccess:
             return out
 
         # split FILTERs: id-lowerable ones (=/!=/IN/BOUND over vars and
-        # constant terms) prune the ENCODED solution set — constants
-        # resolve to join keys driver-side in one pruned point-lookup
-        # job — and the rest evaluate on decoded strings after decoding
-        # ONLY the vars they reference.
+        # constant terms) prune the ENCODED solution set — their constants
+        # came with the query's one `_resolve` lookup — and the rest
+        # evaluate on decoded strings after decoding ONLY the vars they
+        # reference.
         str_filters = list(q.filters)
         if q.filters and result is not None:
-            lowerable, rest, ent_consts = [], [], set()
             rcols = set(result.columns)
+            str_filters = []
             for fexpr in q.filters:
-                plan = self._filter_id_plan(fexpr, rcols, literal, pvars)
-                if plan is None:
-                    rest.append(fexpr)
+                if self._filter_id_plan(fexpr, rcols, literal, pvars) is None:
+                    str_filters.append(fexpr)
                 else:
-                    lowerable.append(fexpr)
-                    ent_consts |= plan[0]
-            ent_ids = self._term_ids(ent_consts)
-            for fexpr in lowerable:
-                result = result.filter(
-                    self._filter_id_column(fexpr, ent_ids, pvars)
-                )
-            str_filters = rest
+                    result = result.filter(
+                        self._filter_id_column(fexpr, terms, pvars)
+                    )
         pre_vars = {v for fe in str_filters for v in filter_vars(fe)}
         for expr, _ in q.binds:
             pre_vars |= bind_vars(expr)
@@ -1299,9 +1323,9 @@ class BGPEngine(GraphAccess):
         return getattr(self.store, name)()
 
     # --- term resolution and the other GraphAccess primitives -----------
-    def _resolve_terms(self, patterns: list[Pattern]) -> dict[str, int]:
+    def _resolve_terms(self, patterns: list[Pattern], consts=()) -> dict[str, int]:
         return self._term_ids(
-            {t for p in patterns for t in (p.s, p.o) if not _is_var(t)}
+            {t for p in patterns for t in (p.s, p.o) if not _is_var(t)} | set(consts)
         )
 
     def _term_ids(self, terms) -> dict[str, int]:
@@ -1315,12 +1339,12 @@ class BGPEngine(GraphAccess):
     def _pred_id(self, term: str) -> int | None:
         return self._props.get(term)
 
-    def _resolve(self, patterns: list[Pattern]) -> dict[str, int]:
+    def _resolve(self, patterns: list[Pattern], consts=()) -> dict[str, int]:
         """Hydrate the stats of ``patterns``'s predicates and resolve their
-        constant terms: one stats load and one dictionary lookup for every
-        group of a query."""
+        constant terms plus the entity terms ``consts``: one stats load and
+        one dictionary lookup for every group of a query."""
         self._hydrate(patterns)
-        return self._resolve_terms(patterns)
+        return self._resolve_terms(patterns, consts)
 
     def _bgp(self, patterns: list[Pattern], terms: dict[str, int]) -> DataFrame:
         """One group's solutions, ENCODED: the patterns ordered by

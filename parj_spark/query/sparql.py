@@ -2509,11 +2509,8 @@ class TripleAccess(GraphAccess):
     def _block(self, group, terms):
         return self._bgp(group, terms)
 
-    def _resolve(self, patterns):
-        return {}
-
-    def _term_ids(self, terms):
-        return {t: t for t in terms}
+    def _resolve(self, patterns, consts=()):
+        return {t: t for t in consts}
 
     def _pred_id(self, term):
         return term

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parj_spark.construct import extract
+from parj_spark.construct.materialize import predicate_stats
 from parj_spark.construct.pipeline import GraphStore
 from parj_spark.construct.schemas import read_table
 from parj_spark.fixtures.generator import DOCS_SCHEMA
@@ -355,11 +356,15 @@ def incremental_graph_append(
     is excluded so a re-delivered epoch rewrites its delta instead of
     anti-joining it away (idempotence under foreachBatch retries).
 
-    ``store`` is the GraphStore of the base graph — its ids must be the
-    default dense non-negative kind: streamed ids are reserved *negative*
-    xxhash64 values, which can collide with ``hash_ids=True`` base graphs
-    (raw xxhash64 spans the full signed int64 range), so those are rejected.
-    Use :func:`combined_triples` to query base + appended together.
+    ``store`` is the GraphStore of the base graph. Its dictionary holds the
+    dense non-negative construct ids plus, once :func:`compact_stream` has
+    folded earlier deltas in, those deltas' reserved negative ids. A new
+    term's negative id can therefore collide only with another
+    stream-introduced term whose ``_neg_id`` hash is equal — the same risk
+    two terms of one epoch already carry — so ingest restarts against a
+    compacted store unchanged
+    (test_incremental_append_restarts_after_compaction). Use
+    :func:`combined_triples` to query base + appended together.
 
     ``entail=True`` (or a vocab dict, as in ``materialize_triples``)
     extends RDFS entailment to the streamed epochs: the BASE graph's TBox
@@ -405,13 +410,6 @@ def incremental_graph_append(
             vocab.get("domain_pred", reason.RDFS_DOMAIN),
             vocab.get("range_pred", reason.RDFS_RANGE),
         ]
-    min_id = dict_df.agg(F.min("id")).first()[0]
-    if min_id is not None and min_id < 0:
-        raise ValueError(
-            "incremental_graph_append requires a dense-id base graph "
-            "(dict ids >= 0): hash_ids=True graphs use the full signed "
-            "int64 range and can collide with reserved negative stream ids"
-        )
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         mentions = extract.extract_mentions(batch_df)
@@ -452,7 +450,7 @@ def compact_stream(store, stream_dir: str):
     layout and refresh the optimizer statistics, then truncate the deltas.
 
     Why: :func:`combined_triples` unions raw epoch parquet — unsorted,
-    un-p-partitioned, salt-less, and invisible to the T1/T2/T3 stats — so
+    un-p-partitioned, un-bucketed, and invisible to the T1/T2/T3 stats — so
     every query over an appended graph scans an unpruned tail and plans it
     with stale statistics. At scale the deltas dominate over time; the
     reference side-steps this by being batch-only (SURVEY.md §2.8), so the
@@ -465,7 +463,7 @@ def compact_stream(store, stream_dir: str):
 
       1. write new dict/properties catalogs (uri-range-sorted, keeping the
          row-group-pruning layout) and the full permutation layout
-         (spo/pos/osp/stats + bucketed tables) into ``_compact_tmp/``;
+         (osp/stats + the bucketed spo/pos tables) into ``_compact_tmp/``;
       2. mark ``_COMPACT_READY``, then swap directories into place
          (idempotent per-dir: a crash mid-swap resumes by re-running
          compact_stream — the marker routes straight back to the swap);
@@ -530,21 +528,13 @@ def compact_stream(store, stream_dir: str):
         mat.write_graph(
             combined_triples(store, stream_dir),
             tmp,
-            bucketed=True,
             bucket_prefix=f"{mat.bucket_prefix_for(out)}_{gen}",
         )
         with open(ready, "w") as f:
             f.write("")
 
-    # 2. swap (idempotent: already-moved names are gone from tmp). Plain
-    # spo/pos are always cleared even when tmp carries none: the compacted
-    # layout keeps a single copy per sort order inside bucketed/, and a
-    # legacy salted dir left behind would shadow it in GraphStore.spo().
-    for name in ("spo", "pos"):
-        if not os.path.exists(os.path.join(tmp, name)):
-            shutil.rmtree(os.path.join(out, name), ignore_errors=True)
-    for name in ("dict_stage", "properties_stage", "spo", "pos", "osp",
-                 "stats", "bucketed"):
+    # 2. swap (idempotent: already-moved names are gone from tmp)
+    for name in ("dict_stage", "properties_stage", "osp", "stats", "bucketed"):
         src = os.path.join(tmp, name)
         if os.path.exists(src):
             shutil.rmtree(os.path.join(out, name), ignore_errors=True)
@@ -642,19 +632,7 @@ class StreamedGraphStore(GraphStore):
         base = super().stats()
         if not os.path.exists(os.path.join(self.stream_dir, "triples")):
             return base
-        tail = (
-            read_table(self.spark, self.stream_dir, "triples")
-            .groupBy("p")
-            .agg(
-                F.count("*").alias("n"),
-                F.approx_count_distinct("s").alias("ndv_s"),
-                F.approx_count_distinct("o").alias("ndv_o"),
-                F.min("s").alias("min_s"),
-                F.max("s").alias("max_s"),
-                F.min("o").alias("min_o"),
-                F.max("o").alias("max_o"),
-            )
-        )
+        tail = predicate_stats(read_table(self.spark, self.stream_dir, "triples"))
         return (
             base.unionByName(tail)
             .groupBy("p")
@@ -756,8 +734,6 @@ def delta_ratio(store, stream_dir: str) -> float:
     if n_delta == 0:
         return 0.0
     base_dir = os.path.join(store.out_dir, "bucketed", "spo")
-    if not os.path.isdir(base_dir):
-        base_dir = os.path.join(store.out_dir, "spo")
     n_base = sum(c["rows"] for c in lineage.partition_counters(base_dir))
     return n_delta / n_base if n_base else float("inf")
 
@@ -788,7 +764,7 @@ def maybe_compact(store, stream_dir: str, max_ratio: float = 0.10):
     out decode joins with duplicate (id, uri) rows. Out-of-band compaction
     is the lakehouse pattern this mirrors; the incremental ingest query
     restarts cleanly against the compacted store
-    (test_compact_after_incremental_append_end_to_end)."""
+    (test_incremental_append_restarts_after_compaction)."""
     ready = os.path.join(store.out_dir, COMPACT_TMP, COMPACT_READY)
     if os.path.exists(ready) or delta_ratio(store, stream_dir) > max_ratio:
         new_store = compact_stream(store, stream_dir)

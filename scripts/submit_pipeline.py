@@ -32,17 +32,12 @@ def main() -> None:
     ap.add_argument("--gen-depts", type=int, help="generate synthetic corpus instead")
     ap.add_argument("--resume", action="store_true", default=True)
     ap.add_argument("--no-resume", dest="resume", action="store_false")
-    ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument(
         "--join-buckets", type=int, default=None,
         help="bucket count for the bucketed permutation tables; size to "
         "~cluster cores at deploy scale (sandbox default 32, a 1000-executor "
         "run wants O(executor cores), e.g. 2048 — buckets bound the scan/"
         "join parallelism of every shuffle-free BGP join)",
-    )
-    ap.add_argument(
-        "--no-bucketed", dest="bucketed", action="store_false", default=True,
-        help="skip the bucketed layout (p-partitioned parquet only)",
     )
     ap.add_argument(
         "--sameas", default=None, metavar="PRED",
@@ -95,8 +90,6 @@ def main() -> None:
 
     store = run_pipeline(
         spark, docs, args.output, resume=args.resume,
-        salt_buckets=args.salt_buckets,
-        bucketed=args.bucketed,
         n_buckets=args.join_buckets or _mat.DEFAULT_JOIN_BUCKETS,
         entail=entail,
         sameas=args.sameas,

@@ -8,9 +8,11 @@ from parj_spark.query import BGPEngine, Pattern
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark, tiny_graph):
+def bucketed(spark, tiny_graph, tmp_path_factory):
     enc = tiny_graph.spo().select("s", "p", "o")
-    return materialize.write_bucketed_tables(enc, "t1", n_buckets=4)
+    return materialize.write_bucketed_tables(
+        enc, "t1", str(tmp_path_factory.mktemp("t1")), n_buckets=4
+    )
 
 
 def _plan(df) -> str:

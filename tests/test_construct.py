@@ -288,7 +288,7 @@ def test_materialize_sameas_stage(spark, tmp_path):
     df = spark.createDataFrame(rows, ["s_uri", "p_uri", "o_uri"])
     store = materialize_triples(
         spark, df, str(tmp_path / "g"), resume=False, analyze=False,
-        bucketed=False, sameas="owl:sameAs", entail=True,
+        sameas="owl:sameAs", entail=True,
     )
     d = store.dict()
     p = store.properties()

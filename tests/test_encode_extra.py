@@ -1,32 +1,7 @@
-"""Extra encoding-path tests: hash-id alternative and dictionary scale notes."""
+"""Extra encoding-path tests: the dense-id assignment and its size gate."""
 
 
 from parj_spark.construct import encode
-
-
-def test_hash_ids_deterministic_and_unique(spark, tiny_graph):
-    triples = tiny_graph.triples_uri()
-    d1 = encode.build_dictionary(triples, hash_ids=True)
-    d2 = encode.build_dictionary(triples, hash_ids=True)
-    n = d1.count()
-    assert d1.select("id").distinct().count() == n  # no collisions at this scale
-    # deterministic across builds
-    assert d1.exceptAll(d2).count() == 0 and d2.exceptAll(d1).count() == 0
-    # encode path works with hash ids too
-    props = encode.build_properties(triples)
-    enc = encode.encode_triples(triples, d1, props)
-    assert enc.count() == triples.count()
-
-
-def test_hash_ids_dictionary_is_lazy(spark, tiny_graph, tmp_path, spark_jobs):
-    """The hash-id dictionary needs no size gate: building it submits no
-    Spark job until its result is written."""
-    triples = tiny_graph.triples_uri()
-    with spark_jobs() as jobs:
-        d = encode.build_dictionary(triples, hash_ids=True)
-        assert jobs() == []
-        d.write.parquet(str(tmp_path / "dict"))
-        assert jobs()
 
 
 def test_dense_ids_order_follows_sort(spark):

@@ -575,7 +575,8 @@ def test_one_entry_path(spark, tiny_graph):
     lowering, GraphAccess._sparql_query: BGPEngine keeps no second
     evaluator, DISTINCT runs on encoded keys below the output decode on
     both entries, and resolving a query's constants costs one dictionary
-    lookup and one stats load, however many groups carry constants."""
+    lookup and one stats load, however many groups or FILTERs carry
+    constants."""
     assert "_sparql_query" not in vars(BGPEngine)
     assert not hasattr(BGPEngine, "_plan_and_execute")
 
@@ -594,6 +595,16 @@ def test_one_entry_path(spark, tiny_graph):
          "{ ?x ub:undergraduateDegreeFrom <ub:University_0> . ?x ub:name ?w } "
          "UNION { ?x ub:worksFor <ub:Department_1_1> . ?x ub:emailAddress ?w } }",
          {"unions": True}),
+        # differential seed 1: the IN list's terms are looked up with the
+        # patterns' constants, not by a second lookup for the FILTER
+        ('SELECT ?x ?d WHERE { ?x <ub:memberOf> ?d . '
+         'FILTER(?d IN ("ub:Department_0_0", "ub:Department_0_1", '
+         '"ub:Nowhere_404")) }',
+         {"filters": True}),
+        # and an OPTIONAL block's scoped FILTER constant the same way
+        ("SELECT ?a ?x WHERE { ?a ub:memberOf <ub:Department_0_0> . "
+         "OPTIONAL { ?a ub:takesCourse ?x FILTER(?x != <ub:Course_0_0_0>) } }",
+         {"filters": True}),
     ]
     for text, flags in probes:
         eng = BGPEngine(tiny_graph)

@@ -282,7 +282,7 @@ def test_tbox_from_store_roundtrip(spark, tmp_path):
     )
     store = materialize_triples(
         spark, df, str(tmp_path / "g"), resume=False, analyze=False,
-        bucketed=False, entail=True,
+        entail=True,
     )
     want = collect_tbox(spark.createDataFrame(sorted(GRAPH), ["s", "p", "o"]))
     got = tbox_from_store(store)

@@ -7,7 +7,7 @@ job."""
 
 import os
 
-from parj_spark.construct.pipeline import materialize_triples, run_pipeline
+from parj_spark.construct.pipeline import run_pipeline
 from parj_spark.construct.schemas import SCHEMAS, read_table
 from parj_spark.query.update import apply_update
 from parj_spark.streaming import compact_stream
@@ -61,14 +61,6 @@ def test_declared_schemas_match_written_files(spark, tiny_corpus, tmp_path, spar
     store = run_pipeline(spark, docs, out, resume=False)
     assert _check_declared(spark, out) == GRAPH_TABLES
     _assert_opens_without_jobs(store, spark_jobs)
-
-    # the salted plain layout of bucketed=False graphs
-    plain = str(tmp_path / "plain")
-    materialize_triples(
-        spark, store.triples_uri(), plain, resume=False, bucketed=False,
-        analyze=False,
-    )
-    assert {"spo", "pos"} <= _check_declared(spark, plain)
 
     # every delta kind, including a predicate the base graph lacks
     apply_update(

@@ -197,29 +197,6 @@ def test_append_epoch_new_predicate_kept(spark, tiny_graph, tmp_path):
     assert appended.filter(F.col("p") == new_pid[0]["id"]).count() == 2
 
 
-def test_incremental_append_rejects_hash_id_base(spark, tiny_corpus, tmp_path):
-    """hash_ids=True base graphs use the full signed int64 id range, which
-    can collide with the stream's reserved negative ids -> rejected."""
-    import pytest
-
-    from parj_spark.construct import run_pipeline
-
-    docs, _ = tiny_corpus
-    store = run_pipeline(
-        spark, docs, str(tmp_path / "hash_graph"), resume=False,
-        hash_ids=True, analyze=False,
-    )
-    in_dir = str(tmp_path / "in")
-    docs.write.mode("overwrite").parquet(in_dir)
-    with pytest.raises(ValueError, match="dense-id"):
-        streaming.incremental_graph_append(
-            streaming.read_docs_stream(spark, in_dir),
-            store,
-            str(tmp_path / "stream"),
-            str(tmp_path / "ck"),
-        )
-
-
 def test_incremental_graph_append(spark, tiny_graph, tmp_path):
     """End-to-end streamed ingest: new docs (a department the base graph has
     never seen) extract, canonicalize, encode and append epoch-wise; the
@@ -461,6 +438,45 @@ def test_streamed_store_live_queries(spark, tiny_corpus, tmp_path):
     assert [tuple(r) for r in chain2] == [tuple(r) for r in chain]
 
 
+def test_incremental_append_restarts_after_compaction(spark, tmp_path):
+    """Ingest restarts against a compacted graph: compaction folds a
+    streamed term into the base dictionary with its reserved negative id,
+    and a fresh incremental_graph_append over the compacted store appends
+    the next departments' triples without re-emitting the folded term."""
+    from parj_spark.construct import run_pipeline
+    from parj_spark.fixtures import gen_corpus
+
+    # the generator's facts are a pure function of the dept id: depts 0-1
+    # build the base, depts 2-3 are new to it
+    all_docs, _ = gen_corpus(spark, n_depts=4, seed=99)
+    out = str(tmp_path / "graph")
+    stream_dir = str(tmp_path / "stream")
+    store = run_pipeline(
+        spark, all_docs.filter(F.col("doc_id") < "doc_0000002"), out,
+        resume=False, analyze=False,
+    )
+    known = store.dict().first()["uri"]
+    t = spark.createDataFrame(
+        [("ub:Restart_New", "ub:memberOf", known)],
+        "s_uri string, p_uri string, o_uri string",
+    )
+    streaming.append_epoch(t, store.dict(), store.properties(), stream_dir, 0)
+    fresh = streaming.compact_stream(store, stream_dir)
+    folded = fresh.dict().filter(F.col("uri") == "ub:Restart_New").collect()
+    assert len(folded) == 1 and folded[0]["id"] < 0
+
+    in_dir = str(tmp_path / "in")
+    all_docs.filter(F.col("doc_id") >= "doc_0000002").write.parquet(in_dir)
+    q = streaming.incremental_graph_append(
+        streaming.read_docs_stream(spark, in_dir, max_files=1),
+        fresh, stream_dir, str(tmp_path / "ck"),
+    ).start()
+    q.awaitTermination(180)
+    assert spark.read.parquet(f"{stream_dir}/triples").count() > 0
+    cdict = streaming.combined_dict(fresh, stream_dir)
+    assert cdict.groupBy("uri").count().filter(F.col("count") > 1).count() == 0
+
+
 def test_maybe_compact_policy(spark, tiny_corpus, tmp_path):
     """The compaction POLICY: deltas below max_ratio stay merge-on-read (the
     check itself is footer-only — no Spark jobs); crossing the ratio folds
@@ -615,8 +631,7 @@ def _entailed_base_graph(spark, tmp_path):
 
     docs, _ = gen_corpus(spark, n_depts=2, seed=7)
     raw_dir = str(tmp_path / "raw")
-    g1 = run_pipeline(spark, docs, raw_dir, resume=False, analyze=False,
-                      bucketed=False)
+    g1 = run_pipeline(spark, docs, raw_dir, resume=False, analyze=False)
     schema = [
         ("ub:worksFor", "rdfs:subPropertyOf", "ub:memberOf"),
         ("ub:GraduateStudent", "rdfs:subClassOf", "ub:Student"),
@@ -629,8 +644,7 @@ def _entailed_base_graph(spark, tmp_path):
     )
     out = str(tmp_path / "entailed_base")
     store = materialize_triples(
-        spark, base_uri, out, resume=False, analyze=False, bucketed=False,
-        entail=True,
+        spark, base_uri, out, resume=False, analyze=False, entail=True,
     )
     shutil.copytree(
         os.path.join(raw_dir, "canon_map"), os.path.join(out, "canon_map")
@@ -678,7 +692,7 @@ def test_incremental_append_entailment_exact(spark, tmp_path):
     # oracle: batch closure over (base_uri ∪ schema ∪ delta_uri)
     batch_delta = run_pipeline(
         spark, new_docs, str(tmp_path / "batch_delta"), resume=False,
-        analyze=False, bucketed=False,
+        analyze=False,
     ).triples_uri().select("s_uri", "p_uri", "o_uri")
     base_raw = spark.read.parquet(
         os.path.join(str(tmp_path / "raw"), "triples_uri")

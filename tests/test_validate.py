@@ -136,7 +136,7 @@ def test_pipeline_violations_stage(spark, tmp_path):
     t = spark.createDataFrame(rows, ["s_uri", "p_uri", "o_uri"])
     out = str(tmp_path / "g")
     store = materialize_triples(
-        spark, t, out, resume=True, analyze=False, bucketed=False,
+        spark, t, out, resume=True, analyze=False,
         validate={"func_preds": ["urn:hasHead"], "uri_prefix": "urn:e:"},
     )
     rep = spark.read.parquet(out + "/violations")
