@@ -77,6 +77,24 @@ def _local_components(spark, pdf, node_type) -> tuple[DataFrame, int]:
     return labels, rounds
 
 
+def _propagate(
+    sym: DataFrame, labels: DataFrame, bcast: bool, n_parts: int
+) -> DataFrame:
+    """One min-label round of :func:`connected_components`: every node
+    takes the least label over its edges. The self-loops in ``sym`` carry
+    each node's own label through the join, so the group-min alone is the
+    full min(own, neighbors) update. The result is pinned to ``n_parts``
+    hash partitions by node, the layout the next round joins on."""
+    side = F.broadcast(labels) if bcast else labels
+    return (
+        sym.join(side, sym.dst == side.node)
+        .select(sym.src.alias("node"), "component")
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+        .repartition(n_parts, "node")
+    )
+
+
 # default edge-count gate for the driver-local solver; callers that already
 # know the edge count pass collect_below=0 past it to skip the probe read.
 # 250k (not the broadcast loop's 1M label gate): the local path's cost is
@@ -121,10 +139,15 @@ def connected_components(
 
     Shuffle discipline (the part that matters at 10^12 docs): the symmetric
     edge relation carries a self-loop per node and — in shuffle-join mode —
-    is hash-partitioned by the join key ``dst`` ONCE and cached, so every
-    iteration shuffles only the (changing, strictly smaller) labels side
-    plus the group-min; the edge set, the largest relation in the loop,
-    never moves again. The self-loops make the group-min see each node's
+    is hash-partitioned by the join key ``dst`` ONCE and cached, and the
+    labels stay hash-partitioned by ``node`` into as many partitions, so
+    the per-iteration join needs no exchange and a plain round shuffles
+    only the group-min; the edge set, the largest relation in the loop,
+    never moves again. Both cached frames end in ``repartition(n, key)``
+    with an explicit ``n``: the session lets AQE coalesce cached plans, and
+    a cached frame keeps its hash partitioning only in that form
+    (``tests/test_cc_property.py`` checks the executed plan). The
+    self-loops make the group-min see each node's
     own label, replacing the previous per-iteration ``labels.union(prop)``
     (measured at 3.6M labels / 2.2M edges: 29s -> 10s warm, and the win
     grows with the edge/label ratio).
@@ -160,10 +183,17 @@ def connected_components(
         ).first()
         return row[0], row[1]
 
+    # the loop's cached frames are hash-partitioned by their join key:
+    # AQE may coalesce a cached frame's shuffle partitions, and the cache
+    # then keeps no partitioning guarantee unless the frame ends in a
+    # repartition with an explicit count (free here: Spark drops it when
+    # the child is already partitioned that way)
+    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("component"))
+        .repartition(n_parts, "node")
         .persist()
     )
     sig_prev, n_nodes = signature(labels)  # also materializes the cache
@@ -183,24 +213,22 @@ def connected_components(
     )
     if not bcast:
         # shuffle mode: pre-hash the edge relation by the join key ONCE so
-        # the per-iteration join reuses the cached partitioning and only
-        # the labels side is exchanged; in broadcast mode the join never
-        # shuffles sym, so the upfront exchange would be pure waste
-        sym = sym.repartition("dst")
+        # the per-iteration join reuses the cached partitioning and the
+        # edge set never moves again; in broadcast mode the join never
+        # shuffles sym, so the upfront exchange would be pure waste. Without
+        # the explicit count every iteration would re-shuffle the edge set
+        sym = sym.repartition(n_parts, "dst")
     sym = sym.persist()
+    if not bcast:
+        # a cached plan AQE may re-partition reports its hash partitioning
+        # only once it is materialized: fill the cache now, or the first
+        # round would shuffle the edge set a second time
+        sym.count()
 
     it = 0
     converged = False
     for it in range(1, max_iter + 1):
-        side = F.broadcast(labels) if bcast else labels
-        # self-loops in sym carry each node's own label through the join,
-        # so the group-min alone is the full min(own, neighbors) update
-        cand = (
-            sym.join(side, sym.dst == side.node)
-            .select(sym.src.alias("node"), "component")
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
+        cand = _propagate(sym, labels, bcast, n_parts)
         if it > shortcut_after:
             # pointer doubling: component values are themselves node labels,
             # so composing the mapping with itself (component -> its own
@@ -209,6 +237,8 @@ def connected_components(
             # round, so it only switches on once plain propagation has
             # overrun the typical coref diameter.
             cand = cand.persist()
+            if not bcast:
+                cand.count()  # partitioned by node only once materialized
             b = F.broadcast(cand) if bcast else cand
             cand2 = (
                 cand.alias("a")

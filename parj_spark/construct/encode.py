@@ -129,7 +129,9 @@ def _dense_ids(terms: DataFrame, col: str, local_below: int = 1_000_000) -> Data
     )
 
 
-def build_dictionary(triples_uri: DataFrame) -> DataFrame:
+def build_dictionary(
+    triples_uri: DataFrame, n_triples: int | None = None
+) -> DataFrame:
     """Term dictionary (id, uri) over all subjects + objects (incl. literals).
 
     Output is range-partitioned + sorted by uri (`_dense_ids` already
@@ -142,11 +144,15 @@ def build_dictionary(triples_uri: DataFrame) -> DataFrame:
         triples_uri.select(F.col("o_uri").alias("uri"))
     )
     # cheap pre-gate for the driver-local id assignment: distinct terms are
-    # bounded by 2x the triple count (a metadata-only job on checkpointed
-    # parquet), so a corpus-scale dictionary skips the gate probe — which
-    # would otherwise collect and discard a gate-sized prefix — and goes
-    # straight to the distributed rank
-    n_bound = 2 * triples_uri.count()
+    # bounded by 2x the triple count, so a corpus-scale dictionary skips the
+    # gate probe — which would otherwise collect and discard a gate-sized
+    # prefix — and goes straight to the distributed rank. ``n_triples`` is
+    # the count the stage that wrote the triples observed; only without it
+    # (a resumed stage) is it counted here, a metadata-only job on
+    # checkpointed parquet
+    if n_triples is None:
+        n_triples = triples_uri.count()
+    n_bound = 2 * n_triples
     local_below = 1_000_000 if n_bound <= 1_000_000 else 0
     return (
         _dense_ids(terms, "uri", local_below=local_below)

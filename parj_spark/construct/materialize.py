@@ -9,10 +9,16 @@ sorted within files, so parquet row-group min/max stats give the same
 sequential-adjacent access pattern of its leapfrog-ish NLJ (SURVEY.md §2.10).
 
 Skew: the bucketed layout spreads every predicate, hot ones (rdf:type)
-included, over ``n_buckets`` files per predicate partition (bucketed by the
-first sort column), so one predicate's data has up to ``n_buckets``
-parallel writers/readers; this is the reference's `secondShard` hot-key
-defuser (parj.c:988-1014, SURVEY.md §2.1 S6) done the Spark way.
+included, over one file per bucket in each predicate partition (bucketed by
+the first sort column), so one predicate's data has up to one parallel
+writer/reader per bucket; this is the reference's `secondShard` hot-key
+defuser (parj.c:988-1014, SURVEY.md §2.1 S6) done the Spark way. The
+bucket count is sized to the graph like the reference sizes its indexes
+to the data it loads (loadMemoryData, parj.c:1972-2189): one bucket per
+``ROWS_PER_BUCKET`` triples, capped at ``n_buckets``
+(``DEFAULT_JOIN_BUCKETS``), so a graph of more than 3.1M triples gets the
+full 32 buckets and a 6.6k-triple graph one bucket instead of 32 files per
+predicate.
 
 Stats table = reference's stat vtab mode 0/1 (parj.c:311-364): per-predicate
 counts + distincts for the query planner's join ordering.
@@ -25,7 +31,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the cap on the bucket count: write_graph gives a graph
+# min(n_buckets, ceil(rows / ROWS_PER_BUCKET)) buckets
 DEFAULT_JOIN_BUCKETS = 32
+# triples per bucket: below 31 * ROWS_PER_BUCKET = 3.1M triples a graph gets
+# fewer than 32 buckets; bench.py's bgp_large (~8.3M triples) keeps 32
+ROWS_PER_BUCKET = 100_000
 # bucketed-layout commit marker + metadata (bucket count, table prefix) —
 # written after BOTH bucketed tables land, so readers never register a
 # half-written layout
@@ -175,13 +186,17 @@ def write_graph(
     out_dir: str,
     n_buckets: int = DEFAULT_JOIN_BUCKETS,
     bucket_prefix: str | None = None,
-) -> None:
+) -> int:
+    """Write the osp, stats and bucketed spo/pos tables of ``triples_enc``
+    under ``out_dir``; returns the triple count. ``n_buckets`` caps the
+    bucket count, which is one per ``ROWS_PER_BUCKET`` triples."""
     from concurrent.futures import ThreadPoolExecutor
 
     from parj_spark.construct.lakehouse import write_sorted_table
 
     triples_enc = triples_enc.cache()
-    triples_enc.count()  # materialize once; all writers read the cache
+    rows = triples_enc.count()  # materialize once; all writers read the cache
+    n_buckets = max(1, min(n_buckets, -(-rows // ROWS_PER_BUCKET)))
 
     def w_osp():
         # OSP: object-first global order for variable-predicate access paths
@@ -234,6 +249,7 @@ def write_graph(
         for fut in futures:
             fut.result()
     triples_enc.unpersist()
+    return rows
 
 
 def analyze_graph(
@@ -244,42 +260,13 @@ def analyze_graph(
     """Optimizer-statistics pass, separate from the load per the reference's
     own phase split (QueryTester.java: histograms.json is built on demand by
     SPARQLAnalyzer, not during load). Writes the T2 class histogram, the T3
-    pairwise join cardinalities and the equi-depth selectivity histograms;
+    pairwise join cardinalities, the class-restricted T3 (only when the
+    graph has rdf:type) and the equi-depth selectivity histograms, all from
+    one key histogram (:func:`parj_spark.construct.stats.write_stats_tables`);
     the query engine degrades gracefully (uniform estimates) when absent.
     """
-    from concurrent.futures import ThreadPoolExecutor
+    from parj_spark.construct.stats import write_stats_tables
 
-    from parj_spark.construct.stats import write_histograms, write_join_stats
-
-    triples_enc = triples_enc.cache()
-    triples_enc.count()
     type_rows = props_df.filter(F.col("uri") == "rdf:type").collect()
     type_pid = type_rows[0]["id"] if type_rows else None
-
-    def w_class_stats():
-        # T2: per-class instance counts from the rdf:type partition
-        # (reference parj.c:338-364, MemoryStat.java:248-315) — lets the
-        # planner cost `?x rdf:type C` by the actual class size instead of
-        # the uniform n/ndv_o estimate (classes are skewed by construction)
-        if type_pid is not None:
-            cs = (
-                triples_enc.filter(F.col("p") == type_pid)
-                .groupBy("o")
-                .agg(F.count("*").alias("n"))
-            )
-        else:
-            cs = triples_enc.sparkSession.createDataFrame([], "o long, n long")
-        cs.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "class_stats")
-        )
-
-    writers = (
-        w_class_stats,
-        lambda: write_join_stats(triples_enc, out_dir, type_pid=type_pid),
-        lambda: write_histograms(triples_enc, out_dir),
-    )
-    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
-        futures = [pool.submit(f) for f in writers]
-        for fut in futures:
-            fut.result()
-    triples_enc.unpersist()
+    write_stats_tables(triples_enc, out_dir, type_pid)

@@ -140,25 +140,26 @@ class GraphStore:
 
 
 def _run_stage(spark, out_dir, name, resume, build):
-    """Checkpoint-or-skip one stage; returns the stage's DataFrame (re-read).
+    """Checkpoint-or-skip one stage; returns the stage's DataFrame (re-read)
+    and its row count, which is None when a resumed stage was skipped.
 
-    The lineage row counter rides the write itself via ``observe`` — a
-    separate post-write count() would be one extra job per stage, pure
-    scheduling latency at the iteration cadence of this pipeline."""
+    The row counter rides the write itself via ``observe`` — a separate
+    post-write count() would be one extra job per stage, pure scheduling
+    latency at the iteration cadence of this pipeline. It feeds the lineage
+    row and the later stages that need the size to pick a plan."""
     from pyspark.sql import Observation
 
     path = os.path.join(out_dir, name)
     if resume and lineage.stage_done(path, spark):
-        return spark.read.parquet(path)
+        return spark.read.parquet(path), None
     t0 = time.time()
     df = build()
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
-    lineage.record_stage(
-        out_dir, name, None, obs.get["n"], time.time() - t0, spark=spark
-    )
+    n = obs.get["n"]
+    lineage.record_stage(out_dir, name, None, n, time.time() - t0, spark=spark)
     # the frame just written carries the checkpoint's schema: no inference
-    return spark.read.schema(df.schema).parquet(path)
+    return spark.read.schema(df.schema).parquet(path), n
 
 
 # written only after ALL materialize writers commit — the resume key for the
@@ -199,7 +200,7 @@ def run_pipeline(
     sameas: str | None = None,
     validate: dict | None = None,
 ) -> GraphStore:
-    mentions = _run_stage(
+    mentions, _ = _run_stage(
         spark, out_dir, "mentions", resume, lambda: extract.extract_mentions(docs)
     )
 
@@ -260,12 +261,12 @@ def run_pipeline(
         )
         return cmap
 
-    canon = _run_stage(spark, out_dir, "canon_map", resume, build_canon)
+    canon, _ = _run_stage(spark, out_dir, "canon_map", resume, build_canon)
     surfaces.unpersist()
     for df in canon_frames.values():  # release CC working caches
         df.unpersist()
 
-    triples_uri = _run_stage(
+    triples_uri, n_triples = _run_stage(
         spark,
         out_dir,
         "triples_uri",
@@ -275,6 +276,7 @@ def run_pipeline(
     return materialize_triples(
         spark, triples_uri, out_dir, resume=resume, analyze=analyze,
         n_buckets=n_buckets, entail=entail, sameas=sameas, validate=validate,
+        triples_rows=n_triples,
     )
 
 
@@ -288,6 +290,7 @@ def materialize_triples(
     entail: bool | dict = False,
     sameas: str | dict | None = None,
     validate: dict | None = None,
+    triples_rows: int | None = None,
 ) -> GraphStore:
     """The pipeline tail shared by every triple producer (docs extraction,
     RDF import, derived CONSTRUCT graphs): (s_uri, p_uri, o_uri) ->
@@ -323,13 +326,17 @@ def materialize_triples(
     ``rdf:``/``rdfs:`` vocabulary; pass a dict of rdfs_closure keyword
     overrides (e.g. ``reason.W3C_VOCAB`` for full-URI graphs from
     import_rdf) to retarget it. Checkpointed like every other stage; a
-    no-TBox graph passes through untouched."""
+    no-TBox graph passes through untouched.
+
+    ``triples_rows``: the row count of ``triples_uri`` when the caller
+    already knows it (the stage that wrote it counted its rows), so the
+    dictionary build does not count the triples again."""
     if sameas:
         from parj_spark.construct.canonicalize import fold_entities
 
         fold_kw = sameas if isinstance(sameas, dict) else {"pred": sameas}
         src = triples_uri
-        triples_uri = _run_stage(
+        triples_uri, triples_rows = _run_stage(
             spark,
             out_dir,
             "sameas_folded",
@@ -369,7 +376,7 @@ def materialize_triples(
         from parj_spark.construct.reason import rdfs_closure
 
         entail_kw = entail if isinstance(entail, dict) else {}
-        triples_uri = _run_stage(
+        triples_uri, triples_rows = _run_stage(
             spark,
             out_dir,
             "entailed",
@@ -401,7 +408,7 @@ def materialize_triples(
             out_dir,
             "dict_stage",
             resume,
-            lambda: encode.build_dictionary(triples_uri),
+            lambda: encode.build_dictionary(triples_uri, n_triples=triples_rows),
         )
         f_props = pool.submit(
             _run_stage,
@@ -411,19 +418,19 @@ def materialize_triples(
             resume,
             lambda: encode.build_properties(triples_uri),
         )
-        dict_df, props_df = f_dict.result(), f_props.result()
+        (dict_df, dict_rows), (props_df, _) = f_dict.result(), f_props.result()
 
     marker = os.path.join(out_dir, GRAPH_COMMITTED_MARKER)
     if not (resume and lineage.path_exists(marker, spark)):
         t0 = time.time()
-        triples_enc = encode.encode_triples(triples_uri, dict_df, props_df)
-        mat.write_graph(triples_enc, out_dir, n_buckets=n_buckets)
-        store = GraphStore(spark, out_dir)
-        lineage.record_stage(
-            out_dir, "materialize", None, store.spo().count(), time.time() - t0,
-            spark=spark,
+        triples_enc = encode.encode_triples(
+            triples_uri, dict_df, props_df, dict_rows=dict_rows
         )
-        # all writers returned and spo re-read: commit the multi-output step
+        rows = mat.write_graph(triples_enc, out_dir, n_buckets=n_buckets)
+        lineage.record_stage(
+            out_dir, "materialize", None, rows, time.time() - t0, spark=spark
+        )
+        # all writers returned: commit the multi-output step
         lineage.touch(marker, spark)
     store = GraphStore(spark, out_dir)
     if analyze:
@@ -458,7 +465,10 @@ def import_rdf(
         ).select("s_uri", "p_uri", "o_uri")
     else:
         raise ValueError(f"unknown RDF format {fmt!r} (ntriples|nquads)")
-    triples_uri = _run_stage(spark, out_dir, "triples_uri", resume, build)
+    triples_uri, n_triples = _run_stage(
+        spark, out_dir, "triples_uri", resume, build
+    )
     return materialize_triples(
-        spark, triples_uri, out_dir, resume=resume, **kwargs
+        spark, triples_uri, out_dir, resume=resume, triples_rows=n_triples,
+        **kwargs,
     )

@@ -98,10 +98,16 @@ def pagerank(
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if dedup:
         e = e.distinct()
+    # the cached frames below end in a repartition with an explicit count
+    # and are filled before the loop: AQE may coalesce a cached plan's
+    # partitions (session.get_spark), and only such a frame reports the
+    # hash partitioning the iterations join on
+    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .repartition(n_parts, "node")
         .persist()
     )
     out_d = e.groupBy("src").agg(F.count("*").alias("outd"))
@@ -111,10 +117,11 @@ def pagerank(
     ew = (
         e.join(out_d, "src")
         .select("src", "dst", (F.lit(1.0) / F.col("outd")).alias("w"))
-        .repartition("src")
+        .repartition(n_parts, "src")
         .persist()
     )
     n_total = nodes.count()
+    ew.count()
     # explicit checkpoint-handle discipline (canonicalize.py's lifecycle,
     # adapted to localCheckpoint blocks): each eager checkpoint's RDD ids
     # are captured from the persistent-RDD registry at creation, and the

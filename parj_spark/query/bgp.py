@@ -1187,7 +1187,9 @@ class BGPEngine(GraphAccess):
             # 4.x: SelectedBucketsCount only appears with the rule off).
             # Joins are unaffected (SMJ keeps the bucketed scan either
             # way); the cost is bucket-grained task splits on full scans of
-            # the bucketed tables, which n_buckets is sized for anyway.
+            # the bucketed tables, and write_graph sizes the bucket count
+            # to the graph (one per ROWS_PER_BUCKET triples, at most
+            # n_buckets), so a small graph scans in a few tasks.
             self.spark.conf.set(
                 "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
             )

@@ -39,6 +39,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the shuffle partitions of persisted frames too:
+        # a small cached intermediate then scans as a few tasks instead of
+        # spark.sql.shuffle.partitions. A cached frame then reports its hash
+        # partitioning only when it ends in repartition(n, cols) with an
+        # explicit n and only once the cache is filled, so frames re-joined
+        # on their key are built that way (canonicalize.connected_components,
+        # graphalg.pagerank).
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

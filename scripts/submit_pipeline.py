@@ -34,10 +34,11 @@ def main() -> None:
     ap.add_argument("--no-resume", dest="resume", action="store_false")
     ap.add_argument(
         "--join-buckets", type=int, default=None,
-        help="bucket count for the bucketed permutation tables; size to "
-        "~cluster cores at deploy scale (sandbox default 32, a 1000-executor "
-        "run wants O(executor cores), e.g. 2048 — buckets bound the scan/"
-        "join parallelism of every shuffle-free BGP join)",
+        help="cap on the bucket count of the bucketed permutation tables; "
+        "a graph gets one bucket per 100k triples up to this cap (default "
+        "32). Size the cap to ~cluster cores at deploy scale: a "
+        "1000-executor run wants O(executor cores), e.g. 2048 — buckets "
+        "bound the scan/join parallelism of every shuffle-free BGP join",
     )
     ap.add_argument(
         "--sameas", default=None, metavar="PRED",

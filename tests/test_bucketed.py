@@ -226,3 +226,55 @@ def test_var_predicate_bound_object_prunes_buckets(spark, tiny_graph, bucketed):
     assert "_pos_b" in plan, plan  # POS orientation chosen for bound o
     assert "SelectedBucketsCount" in plan, plan  # bucket pruning engaged
     assert df.count() > 0
+
+
+def _meta_buckets(graph_dir: str) -> int:
+    import json
+    import os
+
+    path = os.path.join(graph_dir, "bucketed", materialize.BUCKETED_META)
+    with open(path) as f:
+        return json.load(f)["n_buckets"]
+
+
+def test_bucket_count_sized_to_the_graph(spark, tiny_graph, tmp_path, monkeypatch):
+    """write_graph gives a graph one bucket per ROWS_PER_BUCKET triples,
+    at most n_buckets, and records the count in _BUCKETED_META.json."""
+    n = tiny_graph.spo().count()
+    assert _meta_buckets(tiny_graph.out_dir) == min(
+        materialize.DEFAULT_JOIN_BUCKETS, -(-n // materialize.ROWS_PER_BUCKET)
+    )
+    # ten triples a bucket: the data-sized count is far above the explicit cap
+    monkeypatch.setattr(materialize, "ROWS_PER_BUCKET", 10)
+    assert -(-n // 10) > 4
+    out = str(tmp_path / "capped")
+    enc = tiny_graph.spo().select("s", "p", "o")
+    assert materialize.write_graph(enc, out, n_buckets=4) == n
+    assert _meta_buckets(out) == 4
+    prefix = materialize.register_bucketed_tables(spark, f"{out}/bucketed")
+    assert spark.table(f"{prefix}_spo_b").count() == n
+
+
+def test_compaction_re_derives_bucket_count(spark, tiny_corpus, tmp_path, monkeypatch):
+    """compact_stream rewrites the layout for the merged graph, so the
+    bucket count follows the merged triple count."""
+    from parj_spark import streaming
+    from parj_spark.construct import run_pipeline
+
+    docs, _ = tiny_corpus
+    out, stream_dir = str(tmp_path / "g"), str(tmp_path / "stream")
+    store = run_pipeline(spark, docs, out, resume=False, analyze=False)
+    n = store.spo().count()
+    # one bucket holds exactly the base graph; one more triple needs two
+    monkeypatch.setattr(materialize, "ROWS_PER_BUCKET", n)
+    assert _meta_buckets(out) == 1
+    extra = spark.createDataFrame(
+        [("ub:BNew_A", "ub:bucketPred", "ub:BNew_B")],
+        "s_uri string, p_uri string, o_uri string",
+    )
+    streaming.append_epoch(extra, store.dict(), store.properties(), stream_dir, 0)
+    fresh = streaming.compact_stream(store, stream_dir)
+    assert fresh.spo().count() == n + 1
+    assert _meta_buckets(out) == 2
+    prefix = fresh.bucketed_prefix()
+    assert spark.table(f"{prefix}_spo_b").count() == n + 1

@@ -103,3 +103,78 @@ def test_cc_null_endpoint_same_labels_on_both_paths(spark):
         labels, _ = connected_components(df, collect_below=gate)
         got.append({r["node"]: r["component"] for r in labels.collect()})
     assert got[0] == got[1] == {"a": "a", "b": "a", "d": "d", "e": "d"}
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _children(node):
+    return _seq(node.children())
+
+
+def _nodes(node):
+    yield node
+    for c in _children(node):
+        yield from _nodes(c)
+
+
+def _path_to_leaf(node):
+    """Node names from ``node`` down its single-child chain to the leaf."""
+    names = [node.nodeName()]
+    while _children(node):
+        (node,) = _children(node)
+        names.append(node.nodeName())
+    return names, node
+
+
+def test_cc_iteration_join_does_not_reshuffle_cached_edges(spark, monkeypatch):
+    """Shuffle discipline of the distributed loop, checked on the planned
+    physical plan of every round's join while the loop's frames are
+    cached: the (src, dst) edge side of the sort-merge join reads its
+    cache with no Exchange in between, and so does the labels side of the
+    first round. The session lets AQE coalesce cached plans, which drops
+    the partitioning of a cached frame unless it ends in a repartition
+    with an explicit partition count."""
+    from parj_spark.construct import canonicalize
+
+    plans = []
+    propagate = canonicalize._propagate
+
+    def recording(sym, labels, bcast, n_parts):
+        cand = propagate(sym, labels, bcast, n_parts)
+        plan = cand._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        plans.append(plan)
+        return cand
+
+    monkeypatch.setattr(canonicalize, "_propagate", recording)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = [(f"a{i}", f"a{i + 1}") for i in range(4)] + [("b0", "b1"), ("b2", "b1")]
+        edges = spark.createDataFrame(pairs, "src string, dst string")
+        labels, _ = connected_components(
+            edges, collect_below=0, broadcast_labels_below=0
+        )
+        got = {r["node"]: r["component"] for r in labels.collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert got == _uf_oracle(pairs)
+    assert plans
+    for i, plan in enumerate(plans):
+        joins = [n for n in _nodes(plan) if n.nodeName() == "SortMergeJoin"]
+        assert len(joins) == 1, plan.toString()
+        sides = {}
+        for child in _children(joins[0]):
+            names, leaf = _path_to_leaf(child)
+            cols = {a.name() for a in _seq(leaf.output())}
+            sides["edges" if {"src", "dst"} <= cols else "labels"] = (names, leaf)
+        names, leaf = sides["edges"]
+        assert leaf.nodeName() == "InMemoryTableScan", names
+        assert not any("Exchange" in n for n in names), (i, names)
+        if i == 0:
+            names, leaf = sides["labels"]
+            assert leaf.nodeName() == "InMemoryTableScan", names
+            assert not any("Exchange" in n for n in names), names

@@ -368,3 +368,112 @@ def test_var_pred_estimate_flat_in_catalog_size():
     # flat means the 50x catalog costs far less than 50x per call; allow
     # generous noise (interpreter jitter) with a 5x ceiling
     assert large < small * 5 + 1e-4, (small, large)
+
+
+def _reference_analyze(t, type_pid, hist_buckets=16, top_k=64):
+    """The analyze tables by the textbook algebra, independent of
+    parj_spark.construct.stats: per-column key histograms, one join per
+    orientation unioned, T2 straight off the rdf:type triples and one
+    percentile pass per column over the raw triples."""
+    from pyspark.sql import functions as F
+
+    hists = {
+        c: t.groupBy("p", F.col(c).alias("k")).agg(F.count("*").alias("n"))
+        for c in "so"
+    }
+
+    def t3(inst=None):
+        parts = []
+        for c1 in "so":
+            for c2 in "so":
+                a = hists[c1].select(F.col("p").alias("p1"), "k", F.col("n").alias("n1"))
+                lead = []
+                if inst is not None:
+                    a, lead = a.join(inst, "k"), ["cls"]
+                b = hists[c2].select(F.col("p").alias("p2"), "k", F.col("n").alias("n2"))
+                parts.append(
+                    a.join(b, "k")
+                    .groupBy(*lead, "p1", "p2")
+                    .agg(F.sum(F.col("n1") * F.col("n2")).alias("card"))
+                    .select(
+                        *lead, "p1", "p2",
+                        F.lit((c1 + c2).upper()).alias("orientation"), "card",
+                    )
+                )
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    fractions = [i / hist_buckets for i in range(1, hist_buckets)]
+    hparts = []
+    for c in "so":
+        bnds = t.groupBy("p").agg(F.percentile_approx(c, fractions, 10_000).alias("bnds"))
+        hparts.append(
+            t.join(bnds, "p")
+            .withColumn("bucket", F.size(F.filter("bnds", lambda b: b < F.col(c))).cast("int"))
+            .groupBy("p", "bucket")
+            .agg(
+                F.count("*").alias("n"),
+                F.approx_count_distinct(c).alias("ndv"),
+                F.min(c).alias("lo"),
+                F.max(c).alias("hi"),
+            )
+            .select("p", F.lit(c).alias("col"), "bucket", "lo", "hi", "n", "ndv")
+        )
+    tables = {"join_stats": t3(), "histograms": hparts[0].unionByName(hparts[1])}
+    if type_pid is None:
+        return tables
+    typ = t.filter(F.col("p") == type_pid)
+    tables["class_stats"] = typ.groupBy("o").agg(F.count("*").alias("n"))
+    top = (
+        tables["class_stats"].orderBy(F.desc("n"), F.asc("o")).limit(top_k)
+        .select(F.col("o").alias("cls"))
+    )
+    inst = typ.select(F.col("s").alias("k"), F.col("o").alias("cls")).join(top, "cls")
+    tables["class_join_stats"] = t3(inst)
+    return tables
+
+
+def _assert_same_rows(written, reference):
+    reference = reference.select(*written.columns)
+    assert written.count() > 0
+    assert written.exceptAll(reference).count() == 0
+    assert reference.exceptAll(written).count() == 0
+
+
+def test_analyze_tables_equal_reference_algebra(spark, tiny_graph):
+    """Every analyze table derived from the one key histogram equals the
+    per-column textbook algebra, row for row (both ways)."""
+    from parj_spark.construct.schemas import read_table
+
+    t = tiny_graph.spo().select("s", "p", "o")
+    type_pid = BGPEngine(tiny_graph)._type_pid
+    assert type_pid is not None
+    ref = _reference_analyze(t, type_pid)
+    for name in ("join_stats", "class_stats", "class_join_stats", "histograms"):
+        _assert_same_rows(read_table(spark, tiny_graph.out_dir, name), ref[name])
+
+
+def test_analyze_without_rdf_type(spark, tmp_path):
+    """A graph with no rdf:type gets an empty class_stats table and no
+    class_join_stats table; the other tables match the reference."""
+    import os
+
+    from parj_spark.construct import materialize
+    from parj_spark.construct.schemas import read_table
+
+    t = spark.createDataFrame(
+        [(1, 0, 10), (2, 0, 10), (2, 0, 11), (10, 1, 5), (11, 1, 5), (5, 2, 1)],
+        "s bigint, p bigint, o bigint",
+    )
+    props = spark.createDataFrame(
+        [(0, "ub:a"), (1, "ub:b"), (2, "ub:c")], "id bigint, uri string"
+    )
+    out = str(tmp_path / "g")
+    materialize.analyze_graph(t, props, out)
+    assert read_table(spark, out, "class_stats").count() == 0
+    assert not os.path.exists(os.path.join(out, "class_join_stats"))
+    ref = _reference_analyze(t, None)
+    for name in ("join_stats", "histograms"):
+        _assert_same_rows(read_table(spark, out, name), ref[name])
