@@ -38,6 +38,8 @@ QUERIES = {
         "kg_transitive_closure"
     ](spark, d),
     "kg_sparql_update": lambda spark, d: contract.QUERIES["kg_sparql_update"](spark, d),
+    "kg_sparql_path": contract.QUERIES["kg_sparql_path"],
+    "kg_sparql_path_star": contract.QUERIES["kg_sparql_path_star"],
     "q03_top_revenue_orders": lambda spark, d: contract.QUERIES[
         "q03_top_revenue_orders"
     ](spark, d),

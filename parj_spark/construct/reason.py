@@ -338,60 +338,61 @@ def tbox_from_store(
     )
 
 
-def transitive_materialize(
-    triples: DataFrame,
-    pred: str,
-    *,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Instance-level transitive closure of one predicate, materialized.
+# doubling rounds before a closure gives up: round k closes every path of
+# up to 2^k hops, so 30 rounds cover any path of up to 2^30 hops
+MAX_DOUBLING_ROUNDS = 30
 
-    The owl:TransitiveProperty analog (LUBM's ``subOrganizationOf``): every
-    (a pred b), (b pred c) chain entails (a pred c). Unlike the TBox rules
-    above this closes over DATA-sized relations, so it cannot be collected
-    driver-side; it runs as iterative path doubling — each round joins the
-    closed-so-far relation with itself (R ∪ R∘R), reaching any chain of
-    length d in O(log d) rounds, with `localCheckpoint` cutting lineage per
-    round (same discipline as canonicalize.connected_components). Output is
-    ``triples`` ∪ the derived (s, pred, o) edges, distinct.
 
-    Scale shape: the edge relation for one predicate is a small slice of
-    the graph (predicate-pruned scan on the permutation layout); each round
-    is one self-join shuffle on the closing slice only — the full graph is
-    never re-shuffled. Convergence is checked with one count per round.
+def transitive_closure(edges: DataFrame) -> DataFrame:
+    """Distinct transitive closure of an (s, o) edge relation.
+
+    Iterative path doubling: each round joins the closed-so-far relation
+    with itself (R ∪ R∘R), so a path of d hops closes in O(log d) rounds.
+    A cycle gives its self-pairs (a, a); a null endpoint matches no join,
+    so an edge into null extends nothing and an edge out of null extends
+    only through its object. Each round runs ONE action: the lazy
+    ``localCheckpoint`` cuts lineage and the round's convergence ``count``
+    fills it, with no checkpoint action of its own (same discipline as
+    canonicalize.connected_components). The rounds run at call time, so
+    the returned frame is already materialized.
     """
-    # lazy checkpoints: the count() right after is the materializing action,
-    # so each round costs ONE job, not a checkpoint job plus a count job
-    edges = (
-        triples.filter(F.col("p") == pred)
-        .select("s", "o")
-        .dropDuplicates(["s", "o"])
-        .localCheckpoint(eager=False)
-    )
+    edges = edges.select("s", "o").dropDuplicates().localCheckpoint(eager=False)
     n = edges.count()
-    for _ in range(max_iter):
+    for _ in range(MAX_DOUBLING_ROUNDS):
         hop = (
             edges.alias("l")
             .join(edges.alias("r"), F.col("l.o") == F.col("r.s"))
             .select(F.col("l.s").alias("s"), F.col("r.o").alias("o"))
         )
-        nxt = (
-            edges.union(hop)
-            .dropDuplicates(["s", "o"])
-            .localCheckpoint(eager=False)
-        )
+        nxt = edges.union(hop).dropDuplicates().localCheckpoint(eager=False)
         n_nxt = nxt.count()
         if n_nxt == n:
-            break
+            return nxt
         edges, n = nxt, n_nxt
-    else:
-        raise RuntimeError(
-            f"transitive_materialize({pred!r}) did not converge in "
-            f"{max_iter} doubling rounds (chain length > 2^{max_iter})"
-        )
-    derived = nxt.select("s", F.lit(pred).alias("p"), "o")
+    raise RuntimeError(
+        f"transitive_closure did not converge in MAX_DOUBLING_ROUNDS="
+        f"{MAX_DOUBLING_ROUNDS} doubling rounds "
+        f"(a path longer than 2^{MAX_DOUBLING_ROUNDS} hops)"
+    )
+
+
+def transitive_materialize(triples: DataFrame, pred: str) -> DataFrame:
+    """Instance-level transitive closure of one predicate, materialized.
+
+    The owl:TransitiveProperty analog (LUBM's ``subOrganizationOf``): every
+    (a pred b), (b pred c) chain entails (a pred c). Unlike the TBox rules
+    above this closes over DATA-sized relations, so it cannot be collected
+    driver-side: the predicate's (s, o) slice goes through
+    :func:`transitive_closure`. Output is ``triples`` with that predicate's
+    edges replaced by their closure.
+
+    Scale shape: the edge relation for one predicate is a small slice of
+    the graph (predicate-pruned scan on the permutation layout); each round
+    shuffles the closing slice only — the full graph is never re-shuffled.
+    """
+    closed = transitive_closure(triples.filter(F.col("p") == pred))
     return (
         triples.filter(F.col("p") != pred)
         .select("s", "p", "o")
-        .union(derived)
+        .union(closed.select("s", F.lit(pred).alias("p"), "o"))
     )

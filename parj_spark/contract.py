@@ -589,8 +589,8 @@ def kg_sparql_minus(spark, sf_dir):
 
 def kg_sparql_path(spark, sf_dir):
     """One-or-more property path ``p+`` (beyond reference parity, opt-in):
-    transitive closure over a derived region-successor chain — semi-naive
-    distributed iteration; oracle is the recursive-CTE closure."""
+    transitive closure over a derived region-successor chain — distributed
+    path doubling; oracle is the recursive-CTE closure."""
     from parj_spark.query.sparql import execute_on_triples
 
     r = _t(spark, sf_dir, "region")

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parj_spark.construct.pipeline import GraphStore
+from parj_spark.construct.reason import transitive_closure
 
 # Explicit-broadcast-hint gate for pattern scans. Deliberately conservative:
 # a hint OVERRIDES Catalyst/AQE's own cost choice, so it should only assert
@@ -235,7 +236,6 @@ class GraphAccess:
     relation, where every term is its own id and decoding is a no-op.
     """
 
-    MAX_PATH_DEPTH = 64
     TERM_TYPE = "long"
 
     def _project(self, df: DataFrame, select: list[str], decode: bool) -> DataFrame:
@@ -254,36 +254,6 @@ class GraphAccess:
                 "(pass services={name: DataFrame})"
             )
         return None
-
-    def _closure_edges(self, edges: DataFrame) -> DataFrame:
-        """Distinct transitive closure of an (s, o) edge relation — the
-        SPARQL ``p+`` path, which the reference (BGP-only) cannot express.
-        Semi-naive iteration: each round extends only the previous round's
-        frontier by one edge and anti-joins away the already-known pairs,
-        so work is O(new pairs) per round, not O(closure) — the standard
-        Datalog delta evaluation, distributed. Lineage is cut with
-        localCheckpoint every round (self-referencing iterative joins grow
-        the logical plan multiplicatively — same discipline as
-        canonicalize.connected_components). The iteration runs actions at
-        plan-build time, so :meth:`_path_rel` caches its result."""
-        edges = edges.distinct().localCheckpoint()
-        paths = edges
-        frontier = edges
-        for _ in range(self.MAX_PATH_DEPTH):
-            ext = (
-                frontier.withColumnRenamed("o", "m")
-                .join(edges.withColumnRenamed("s", "m"), "m")
-                .select("s", "o")
-            )
-            frontier = (
-                ext.join(paths, ["s", "o"], "left_anti").distinct().localCheckpoint()
-            )
-            if frontier.isEmpty():
-                return paths
-            paths = paths.union(frontier).localCheckpoint()
-        raise RuntimeError(
-            f"property-path closure exceeded {self.MAX_PATH_DEPTH} hops"
-        )
 
     def _nodes_rel(self) -> DataFrame:
         """Zero-length path domain: every term occurring as subject or
@@ -347,14 +317,14 @@ class GraphAccess:
                 .select("s", "o")
             )
         elif path.op == "plus":
-            df = self._closure_edges(self._path_rel(path.parts[0]))
+            df = transitive_closure(self._path_rel(path.parts[0]))
         elif path.op in ("star", "opt"):
             zero = self._nodes_rel().select(
                 F.col("n").alias("s"), F.col("n").alias("o")
             )
-            step = self._path_rel(path.parts[0])
-            if path.op == "star":
-                step = self._closure_edges(step)
+            step = self._path_rel(
+                Path("plus", path.parts) if path.op == "star" else path.parts[0]
+            )
             df = step.unionByName(zero).distinct()
         else:  # pragma: no cover - parser never emits other ops
             raise ValueError(f"unknown path op {path.op!r}")
@@ -1966,7 +1936,7 @@ class BGPEngine(GraphAccess):
         for i, step in enumerate(self._plan_joins(ordered, terms), 1):
             pat, acc = step.pattern, step.access
             if acc.kind == "path":
-                access = "path closure (semi-naive fixpoint relation)"
+                access = "path closure (path-doubling fixpoint relation)"
             elif acc.kind == "absent":
                 access = "absent from the catalogs (matches nothing)"
             elif acc.kind == "var_table":

@@ -43,9 +43,9 @@ enables the ASK form (one boolean row, planned as an existence probe);
 own BGP and removed from the core by a left anti-join on the shared
 variables (a no-shared-variable block removes nothing, per the spec);
 ``allow_paths=True`` enables property paths — ``p+`` planned as the
-transitive closure of the predicate's edge set (semi-naive delta iteration,
-distributed — something the BGP-only reference cannot express) plus the
-composite forms ``^p`` (inverse), ``p1/p2`` (sequence), ``p1|p2``
+transitive closure of the predicate's edge set (distributed path doubling,
+``reason.transitive_closure`` — something the BGP-only reference cannot
+express) plus the composite forms ``^p`` (inverse), ``p1/p2`` (sequence), ``p1|p2``
 (alternation), ``p*`` / ``p?`` (zero-length forms over the graph's term
 domain), ``!p`` / ``!(p1|p2)`` (negated property sets), ``p{n}`` /
 ``p{n,}`` / ``p{n,m}`` quantifiers (lowered at parse time onto seq/opt/

@@ -635,6 +635,36 @@ def test_path_closure_execute_on_triples(spark):
     assert sorted(r["y"] for r in fromb.collect()) == ["c", "d"]
 
 
+@pytest.mark.parametrize("n", [65, 200])
+def test_path_closure_long_chain(spark, spark_jobs, n):
+    """p+ over an n-edge chain longer than 64 hops returns all n(n+1)/2
+    ordered pairs, and p* anchored at the chain head reaches all n+1
+    nodes. The closure doubles the path length it covers each round, so
+    the whole p+ query stays under 100 Spark jobs (one hop per round
+    would need several jobs per hop)."""
+    from parj_spark.query.sparql import execute_on_triples
+
+    node = [f"v{i:03d}" for i in range(n + 1)]
+    t = spark.createDataFrame(
+        [(node[i], "next", node[i + 1]) for i in range(n)], ["s", "p", "o"]
+    )
+    with spark_jobs() as ids:
+        got = execute_on_triples(
+            t, "SELECT ?x ?y WHERE { ?x <next>+ ?y }", allow_paths=True
+        )
+        pairs = [(r["x"], r["y"]) for r in got.collect()]
+        jobs = len(ids())
+    assert len(pairs) == n * (n + 1) // 2
+    assert set(pairs) == {
+        (node[i], node[j]) for i in range(n + 1) for j in range(i + 1, n + 1)
+    }
+    assert jobs < 100
+    star = execute_on_triples(
+        t, "SELECT ?y WHERE { <v000> <next>* ?y }", allow_paths=True
+    )
+    assert sorted(r["y"] for r in star.collect()) == node
+
+
 def test_path_closure_engine(spark, engine, tiny_graph):
     """Engine path over encoded permutation tables: subOrganizationOf+ from
     a research group reaches its department AND (2 hops) its university —
