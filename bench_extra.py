@@ -31,21 +31,22 @@ from bench import BENCH_EXTRA  # noqa: E402
 # bench.py's BENCH_EXTRA + the heavy HEADLINE entries, by name
 QUERIES = {
     **BENCH_EXTRA,
-    "dedup_substring": lambda spark, d: contract.dedup_substring(spark, d),
-    "dedup_simhash": lambda spark, d: contract.dedup_simhash(spark, d),
-    "dedup_exact": lambda spark, d: contract.dedup_exact(spark, d),
-    "kg_transitive_closure": lambda spark, d: contract.QUERIES[
-        "kg_transitive_closure"
-    ](spark, d),
-    "kg_sparql_update": lambda spark, d: contract.QUERIES["kg_sparql_update"](spark, d),
-    "kg_sparql_path": contract.QUERIES["kg_sparql_path"],
-    "kg_sparql_path_star": contract.QUERIES["kg_sparql_path_star"],
-    "q03_top_revenue_orders": lambda spark, d: contract.QUERIES[
-        "q03_top_revenue_orders"
-    ](spark, d),
-    "q10_window_topk": lambda spark, d: contract.QUERIES["q10_window_topk"](spark, d),
-    "sim_cosine_topk": lambda spark, d: contract.QUERIES["sim_cosine_topk"](spark, d),
-    "text_repetition": lambda spark, d: contract.QUERIES["text_repetition"](spark, d),
+    **{
+        n: contract.QUERIES[n]
+        for n in (
+            "dedup_substring",
+            "dedup_simhash",
+            "dedup_exact",
+            "kg_transitive_closure",
+            "kg_sparql_update",
+            "kg_sparql_path",
+            "kg_sparql_path_star",
+            "q03_top_revenue_orders",
+            "q10_window_topk",
+            "sim_cosine_topk",
+            "text_repetition",
+        )
+    },
 }
 
 

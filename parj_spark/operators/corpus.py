@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 
 def _tokens(text_col: str):
+    """Whitespace tokens, lowercased (portable: split on single spaces)."""
     return F.split(F.lower(F.col(text_col)), " ")
 
 

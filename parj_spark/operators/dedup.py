@@ -18,13 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parj_spark.operators.corpus import _spread, _tokens
+
 DEFAULT_MINHASH_HASHES = 8
 DEFAULT_BANDS = 4
-
-
-def tokens_col(text_col: str = "text"):
-    """Whitespace tokens, lowercased (portable: split on single spaces)."""
-    return F.split(F.lower(F.col(text_col)), " ")
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -65,9 +62,7 @@ def with_shingles(
     construction is the CPU-heavy map stage of every consumer, and an
     under-split input (one small file -> one scan partition) would run it
     serially."""
-    from parj_spark.operators.corpus import _spread
-
-    toked = _spread(df).select(id_col, tokens_col(text_col).alias("__toks"))
+    toked = _spread(df).select(id_col, _tokens(text_col).alias("__toks"))
     return toked.select(id_col, _shingles_from(F.col("__toks"), n).alias("shingles"))
 
 
@@ -314,9 +309,7 @@ def simhash32(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     token hash = first 8 hex chars of md5 as uint32; per bit, vote +1/-1
     over tokens; fingerprint bit b set iff vote > 0.
     """
-    from parj_spark.operators.corpus import _spread
-
-    toks = _spread(df).select(id_col, F.explode(tokens_col(text_col)).alias("tok"))
+    toks = _spread(df).select(id_col, F.explode(_tokens(text_col)).alias("tok"))
     h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     toks = toks.select(id_col, h.alias("h"))
     votes = [
@@ -341,7 +334,7 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Exact cosine near-dup pairs (brute self-join) — correctness baseline.
 
-    The scale path is LSH bucketing (similarity.cosine_lsh_buckets); this
+    The scale path is banded LSH (similarity.cosine_lsh_neardup_pairs); this
     operator is the oracle-checkable reference for it.
     """
     from parj_spark.operators.similarity import cosine_sim

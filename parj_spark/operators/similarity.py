@@ -1,17 +1,35 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  All arithmetic is JVM-side (zip_with + aggregate fold in double); no
-  Python in the hot path.
-- ``cosine_lsh_topk``: random-hyperplane LSH bucketing — the scale path.
-  Sign-bit signatures shrink the candidate set from n to ~n/2^bits per
-  bucket before the exact re-rank; the projection matrix is a deterministic
-  seeded numpy array applied via one Arrow-batched pandas stage.
+Operators:
+
+- ``cosine_topk``: brute-force exact top-k, the correctness baseline; all
+  arithmetic is JVM-side (zip_with + aggregate fold in double).
+- ``ivf_topk``: IVF-Flat ANN: sampled centroids, probe the nearest cells.
+- ``cosine_lsh_topk``: hyperplane-sign bucket probe with multi-probe.
+- ``cosine_lsh_neardup_pairs``: banded-LSH near-duplicate pairs with exact
+  JVM verification.
+- ``semantic_dedup``: SemDeDup, in-cell cosine pairs then union-find.
+
+Shared vector kernels (each algebra written once):
+
+- ``_matrix`` / ``_unit``: stack vectors to float64, L2-normalized rows.
+- ``_centroids``: the n vectors with the smallest md5(id), unit length.
+- ``_nearest_cells``: each row's centroid cells, nearest first.
+- ``_sign_buckets``: per-band integer bucket of the hyperplane sign bits.
+- ``_keyed``: one Arrow-batched stage adding a key to (id, vec) rows.
+- ``_pair_cosines``: one GEMM scoring every i < j pair of a group.
+- ``_query_vec`` / ``_rerank``: fetch the query vector; exact top-k re-rank
+  against a broadcast query.
+
+The numpy arrays (centroids, hyperplanes) ride in the Python closures;
+PySpark broadcasts a pickled closure on its own once it passes its
+broadcast threshold.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -44,6 +62,93 @@ def cosine_sim(a_col: str, b_col: str):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _matrix(vecs) -> np.ndarray:
+    """Stack a sequence of vectors into a float64 (rows, dim) matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _unit(vecs) -> np.ndarray:
+    """``_matrix`` with every row L2-normalized; the norm is clamped at
+    1e-12, so a zero vector stays a zero row instead of NaN."""
+    M = _matrix(vecs)
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _centroids(emb: DataFrame, id_col: str, vec_col: str, n: int) -> np.ndarray:
+    """The ``n`` vectors with the smallest md5(id), unit length: a
+    deterministic seeded sample of real points, collected in one job."""
+    rows = (
+        emb.select(id_col, vec_col)
+        .orderBy(F.md5(F.col(id_col).cast("string")))
+        .limit(n)
+        .collect()
+    )
+    return _unit([r[1] for r in rows])
+
+
+def _nearest_cells(vecs, C: np.ndarray) -> np.ndarray:
+    """Each row's centroid cells by cosine, nearest first (ties keep the
+    lower cell): a (rows, cells) index matrix."""
+    return np.argsort(-(_unit(vecs) @ C.T), axis=1, kind="stable")
+
+
+def _sign_buckets(vecs, planes: np.ndarray) -> np.ndarray:
+    """Integer bucket of each row's hyperplane sign bits, per band:
+    ``planes`` is (bands, planes, dim) and the result (rows, bands)."""
+    bits = np.einsum("nd,bpd->bnp", _matrix(vecs), planes) > 0
+    return (bits @ (1 << np.arange(planes.shape[1]))).T
+
+
+def _keyed(emb: DataFrame, id_col: str, vec_col: str, name: str, key_fn) -> DataFrame:
+    """(id, vec, ``name``) rows from one Arrow-batched stage, the key being
+    ``key_fn`` of the batch's vectors (one long per row).
+
+    The vector rides through the stage, so a filter or group on the key
+    reads (id, vec, key) directly: no join re-attaches the embedding. The
+    query side calls the same ``key_fn`` on the driver, so the query's key
+    and the rows' keys cannot drift apart."""
+    vtype = emb.schema[vec_col].dataType.simpleString()
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not pdf.empty:
+                yield pdf.assign(**{name: key_fn(pdf[vec_col]).astype(np.int64)})
+
+    return _spread(emb.select(id_col, vec_col)).mapInPandas(
+        assign, f"{id_col} long, {vec_col} {vtype}, {name} long"
+    )
+
+
+def _pair_cosines(vecs):
+    """(i, j, cosine) over every i < j pair of rows, from one GEMM over the
+    group; the O(c^2) scores never exist as Spark rows. Callers apply their
+    own cut-off."""
+    Mn = _unit(vecs)
+    i, j = np.triu_indices(len(Mn), 1)
+    return i, j, (Mn @ Mn.T)[i, j]
+
+
+def _query_vec(emb: DataFrame, query_id: int, id_col: str, vec_col: str):
+    """The query row's vector, fetched to the driver in one job: as float64
+    numpy and as the one-row ``qvec`` frame ``_rerank`` takes."""
+    row = emb.filter(F.col(id_col) == query_id).select(vec_col).first()
+    q = np.asarray(row[0], dtype=np.float64)
+    qframe = emb.sparkSession.createDataFrame([(q.tolist(),)], "qvec array<double>")
+    return q, qframe
+
+
+def _rerank(
+    cands: DataFrame, qframe: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact top-k of ``cands`` by cosine to the one-row ``qframe`` (column
+    ``qvec``, broadcast into the scan). Ranking uses the rounded score with
+    an id tie-break, so results are engine-portable."""
+    scored = cands.crossJoin(F.broadcast(qframe)).select(
+        id_col, F.round(cosine_sim(vec_col, "qvec"), 6).alias("cosine")
+    )
+    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+
+
 def cosine_topk(
     emb: DataFrame,
     query_id: int,
@@ -60,15 +165,8 @@ def cosine_topk(
     q = emb.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("qvec")
     )
-    scored = (
-        _spread(emb.filter(F.col(id_col) != query_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(cosine_sim(vec_col, "qvec"), 6).alias("cosine"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    cands = _spread(emb.filter(F.col(id_col) != query_id))
+    return _rerank(cands, q, id_col, vec_col, k)
 
 
 def ivf_topk(
@@ -88,49 +186,16 @@ def ivf_topk(
     Arrow-batched numpy matmul. At 10^9 vectors this is the standard
     IVF-Flat shape: scan cost drops from n to ~n*(n_probe/n_centroids).
     """
-    spark = emb.sparkSession
-    cent_rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(n_centroids)
-        .collect()
+    C = _centroids(emb, id_col, vec_col, n_centroids)
+    with_cell = _keyed(
+        emb, id_col, vec_col, "cell", lambda vecs: _nearest_cells(vecs, C)[:, 0]
     )
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-    bC = spark.sparkContext.broadcast(C)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = bC.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cell = (Mn @ cm.T).argmax(axis=1)
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = cell.astype(np.int32)
-            yield out
-
-    # the vector rides through the Arrow stage, so the probe filter reads
-    # (id, vec, cell) directly — no shuffle join to re-attach the embedding
-    vtype = emb.schema[vec_col].dataType.simpleString()
-    with_cell = _spread(emb.select(id_col, vec_col)).mapInPandas(
-        assign, f"{id_col} long, {vec_col} {vtype}, cell int"
-    )
-
-    qvec_row = emb.filter(F.col(id_col) == query_id).select(vec_col).first()
-    q = np.asarray(qvec_row[0], dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(c) for c in (C @ qn).argsort()[::-1][:n_probe]]
-
-    qdf = spark.createDataFrame([(list(map(float, q)),)], f"qvec array<double>")
+    q, qframe = _query_vec(emb, query_id, id_col, vec_col)
+    probe_cells = _nearest_cells([q], C)[0, :n_probe].tolist()
     cands = with_cell.filter(
-        (F.col("cell").isin(probe_cells)) & (F.col(id_col) != query_id)
-    ).crossJoin(F.broadcast(qdf))
-    scored = cands.select(
-        id_col, F.round(cosine_sim(vec_col, "qvec"), 6).alias("cosine")
+        F.col("cell").isin(probe_cells) & (F.col(id_col) != query_id)
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return _rerank(cands, qframe, id_col, vec_col, k)
 
 
 def signature_bits(n_planes: int = 16, dim: int = 64, seed: int = 7) -> np.ndarray:
@@ -161,27 +226,22 @@ def cosine_lsh_neardup_pairs(
     O(n * bands), never O(n^2). ``max_bucket`` drops degenerate buckets (the
     same frequent-bucket skew guard as dedup.minhash_lsh_pairs).
     """
-    spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
     planes = np.stack(
         [signature_bits(n_planes, dim, seed + band) for band in range(n_bands)]
     )  # (bands, planes, dim)
-    bplanes = spark.sparkContext.broadcast(planes)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = bplanes.value
-        weights = 1 << np.arange(P.shape[1])
         for pdf in batches:
             if pdf.empty:
                 continue
-            M = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
-            ids = np.repeat(pdf[id_col].values, P.shape[0])
-            bands = np.tile(np.arange(P.shape[0]), len(pdf))
-            # (bands, n, planes) signs -> per-band integer buckets
-            bits = np.einsum("nd,bpd->bnp", M, P) > 0
-            bucket = (bits @ weights).T.reshape(-1)  # row-major: (n, bands)
+            bucket = _sign_buckets(pdf[vec_col], planes)  # (n, bands)
             yield pd.DataFrame(
-                {id_col: ids, "band": bands.astype(np.int32), "bucket": bucket.astype(np.int64)}
+                {
+                    id_col: np.repeat(pdf[id_col].values, n_bands),
+                    "band": np.tile(np.arange(n_bands, dtype=np.int32), len(pdf)),
+                    "bucket": bucket.reshape(-1).astype(np.int64),
+                }
             )
 
     # the (id, band, bucket) assignment feeds exactly one consumer (the
@@ -190,26 +250,28 @@ def cosine_lsh_neardup_pairs(
     stacked = _spread(emb.select(id_col, vec_col)).mapInPandas(
         assign, f"{id_col} long, band int, bucket long"
     )
-    # the sign stage emits ids only; the vector is attached back to the
-    # (id, band, bucket) rows by an equi-join on the id (``cands`` below),
-    # which moves corpus x n_bands vector bytes through an exchange.
-    # Emitting the vector from the sign stage instead would delete that
-    # join (ROADMAP open item 4).
+    # the sign stage emits ids only and the vector is attached back to the
+    # (id, band, bucket) rows by an equi-join on the id (``cands`` below).
+    # Emitting the vector from the sign stage instead (n_bands copies of
+    # every vector through Arrow) deletes that join but was not faster in
+    # alternating A/B runs on 4400 64-d vectors at 4 cores: medians 1.82 s
+    # (join) against 1.87 s over 12 reps, 2.31 s against 2.24 s over 8,
+    # with overlapping quartiles.
     pre = emb.select(
         F.col(id_col).alias("__pid"), F.col(vec_col).alias("__pvec")
     )
     # Candidate pruning runs as one numpy GEMM per (band, bucket) group —
     # the O(bucket^2) candidate cosines never exist as rows, and the JVM
     # exact verification below only sees pairs the GEMM scores within
-    # PREFILTER_MARGIN of the threshold. Output-preserving by error bound:
+    # ``margin`` of the threshold. Output-preserving by error bound:
     # both sides compute in float64 from the same float32 inputs, so the
     # GEMM and the sequential JVM fold differ only by summation order —
     # |err| <= ~d * eps (~1e-13 for d <= 2^20, unit-scale values), while a
     # final-filter survivor needs exact cosine >= threshold - 5.1e-7 (the
-    # round(.,6) lift), far inside the 1e-4 margin. The margin also absorbs
-    # the prefilter's norm clamp (max(norm, 1e-12)): a zero-norm side makes
-    # the exact cosine NaN, which fails the final filter just as the
-    # clamped ~0 score fails the prefilter.
+    # round(.,6) lift), far inside the 1e-4 margin. A zero-norm side scores
+    # ~0 against the prefilter's norm clamp (max(norm, 1e-12)), so at any
+    # threshold above the margin it never reaches the exact cosine, whose
+    # division by a zero norm raises DIVIDE_BY_ZERO under ANSI mode.
     vtype = emb.schema[vec_col].dataType.simpleString()
     margin = 1e-4
 
@@ -227,16 +289,11 @@ def cosine_lsh_neardup_pairs(
         # the posting list: degenerate buckets are skipped outright)
         if c < 2 or (max_bucket is not None and c > max_bucket):
             return empty
-        M = np.stack(pdf["__pvec"].apply(lambda v: np.asarray(v, dtype=np.float64)))
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        S = Mn @ Mn.T
-        iu, ju = np.triu_indices(c, 1)
-        keep = S[iu, ju] >= threshold - margin
-        if not keep.any():
-            return empty
+        i, j, cos = _pair_cosines(pdf["__pvec"])
+        keep = cos >= threshold - margin
         ids = pdf["__pid"].to_numpy()
         vecs = pdf["__pvec"].to_numpy()
-        ki, kj = iu[keep], ju[keep]
+        ki, kj = i[keep], j[keep]
         ia, ib = ids[ki], ids[kj]
         swap = ia > ib
         # normalize orientation id_a < id_b; dot is elementwise-commutative
@@ -267,23 +324,19 @@ def cosine_lsh_neardup_pairs(
             bucket_prefilter, f"id_a long, id_b long, va {vtype}, vb {vtype}"
         )
     )
-    # exact verification of the (few) margin survivors with the SAME fold
-    # expressions the former per-pair verify evaluated — bit-identical
-    # doubles over the same float32 values, so the reported cosine and the
-    # surviving set are unchanged. A pair colliding in several bands is
-    # verified once per band (dup factor <= n_bands; ~1.03 measured on
-    # random vectors) and deduplicated after the threshold filter, where
-    # survivors are orders of magnitude fewer than candidates.
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))),
-        6,
-    )
-    verified = (
-        cands.select("id_a", "id_b", cos.alias("cosine"))
+    # exact verification of the (few) margin survivors with the same
+    # ``cosine_sim`` fold the brute-force oracle
+    # (dedup.embedding_neardup_pairs) evaluates — bit-identical doubles over
+    # the same float32 values, so every reported cosine equals the oracle's.
+    # A pair colliding in several bands is verified once per band (dup
+    # factor <= n_bands; ~1.03 measured on random vectors) and deduplicated
+    # after the threshold filter, where survivors are orders of magnitude
+    # fewer than candidates.
+    return (
+        cands.select("id_a", "id_b", F.round(cosine_sim("va", "vb"), 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .distinct()
     )
-    return verified
 
 
 def cosine_lsh_topk(
@@ -305,60 +358,31 @@ def cosine_lsh_topk(
     brute cross-join is not an option; this prunes the exact re-rank to the
     probed buckets only.
     """
-    spark = emb.sparkSession
-    dim = len(emb.select(vec_col).first()[0])
-    planes = signature_bits(n_planes, dim, seed)
-    bplanes = spark.sparkContext.broadcast(planes)
+    # The query's signature is computed driver-side from the fetched vector
+    # (which also gives the dimension): deriving it by filtering the keyed
+    # stage's output cannot push the id filter below the Python stage, so
+    # the whole table would be signed once to find the query row and again
+    # for the candidates — two Arrow stages per action instead of one.
+    q, qframe = _query_vec(emb, query_id, id_col, vec_col)
+    planes = signature_bits(n_planes, len(q), seed)[None]  # one band
 
-    # the vector rides through the Arrow stage (same shape as ivf_topk),
-    # so the probe filter reads (id, vec, bucket) directly — re-attaching
-    # the embedding via emb.join(buckets) would shuffle the full table
-    vtype = emb.schema[vec_col].dataType.simpleString()
-    sig_schema = f"{id_col} long, {vec_col} {vtype}, bucket long"
+    def bucket(vecs) -> np.ndarray:
+        return _sign_buckets(vecs, planes)[:, 0]
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = bplanes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
-            bits = (M @ P.T) > 0  # (n, planes)
-            bucket = bits @ (1 << np.arange(P.shape[0]))
-            out = pdf[[id_col, vec_col]].copy()
-            out["bucket"] = bucket.astype(np.int64)
-            yield out
+    with_b = _keyed(emb, id_col, vec_col, "bucket", bucket)
+    qbucket = int(bucket([q])[0])
 
-    with_b = _spread(emb.select(id_col, vec_col)).mapInPandas(assign, sig_schema)
-
-    # The query's signature is computed driver-side (one first() for the
-    # vector + the same numpy sign as `assign`, mirroring ivf_topk's
-    # driver-side centroid probe): deriving it by filtering the mapInPandas
-    # output cannot push the id filter below the Python stage, so the whole
-    # table would be signed once to find the query row and again for the
-    # candidates — two Arrow stages per action instead of one.
-    qvec_row = emb.filter(F.col(id_col) == query_id).select(vec_col).first()
-    qv = np.asarray(qvec_row[0], dtype=np.float64)
-    qbucket = int(((qv @ planes.T) > 0) @ (1 << np.arange(n_planes)))
-
-    # multi-probe: query bucket plus all <=probe_bits-bit flips
-    flips = [0]
-    if probe_bits >= 1:
-        flips += [1 << b for b in range(n_planes)]
-    if probe_bits >= 2:
-        flips += [
-            (1 << a) | (1 << b)
-            for a in range(n_planes)
-            for b in range(a + 1, n_planes)
-        ]
-    probe_buckets = [qbucket ^ x for x in flips]
-    qdf = spark.createDataFrame([(list(map(float, qv)),)], "qvec array<double>")
+    # multi-probe: the query bucket plus every flip of 1 (probe_bits >= 1)
+    # and of 2 (probe_bits >= 2) of its bits
+    probe_buckets = [
+        qbucket ^ sum(1 << b for b in bits)
+        for r in range(max(0, min(probe_bits, 2)) + 1)
+        for bits in combinations(range(n_planes), r)
+    ]
     cands = with_b.filter(
         F.col("bucket").isin(probe_buckets) & (F.col(id_col) != query_id)
-    ).crossJoin(F.broadcast(qdf))
-    scored = cands.select(
-        id_col, F.round(cosine_sim(vec_col, "qvec"), 6).alias("cosine")
     )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return _rerank(cands, qframe, id_col, vec_col, k)
 
 
 def semantic_dedup(
@@ -394,48 +418,22 @@ def semantic_dedup(
     """
     from parj_spark.operators.dedup import neardup_clusters
 
-    spark = emb.sparkSession
-    cent_rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(n_centroids)
-        .collect()
-    )
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-    C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    bC = spark.sparkContext.broadcast(C)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = bC.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = (Mn @ cm.T).argmax(axis=1).astype(np.int32)
-            yield out
-
-    vtype = emb.schema[vec_col].dataType.simpleString()
-    with_cell = _spread(emb.select(id_col, vec_col)).mapInPandas(
-        assign, f"{id_col} long, {vec_col} {vtype}, cell int"
+    C = _centroids(emb, id_col, vec_col, n_centroids)
+    with_cell = _keyed(
+        emb, id_col, vec_col, "cell", lambda vecs: _nearest_cells(vecs, C)[:, 0]
     )
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                              "id_b": pd.Series(dtype="int64")})
         c = len(pdf)
         if c < 2 or (max_cell is not None and c > max_cell):
-            return empty
-        M = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        S = Mn @ Mn.T  # one GEMM for the whole cell
-        iu, ju = np.triu_indices(c, 1)
+            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
+                                 "id_b": pd.Series(dtype="int64")})
+        i, j, cos = _pair_cosines(pdf[vec_col])
         # round(., 6) mirrors the exact-verify convention of the other
         # cosine operators, so thresholds compare identically everywhere
-        keep = np.round(S[iu, ju], 6) >= threshold
+        keep = np.round(cos, 6) >= threshold
         ids = pdf[id_col].to_numpy()
-        x, y = ids[iu[keep]], ids[ju[keep]]
+        x, y = ids[i[keep]], ids[j[keep]]
         return pd.DataFrame(
             {"id_a": np.minimum(x, y), "id_b": np.maximum(x, y)}
         )

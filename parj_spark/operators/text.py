@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parj_spark.operators.corpus import _tokens
+
 PUNCT_CLASS = "[.,;:!?]"
 
 STOPWORDS = [
@@ -25,10 +27,6 @@ LANG_MARKERS = {
     "es": ["el", "los", "una", "y"],
 }
 _LANG_ORDER = ["en", "de", "fr", "es"]
-
-
-def _tokens(text_col: str):
-    return F.split(F.lower(F.col(text_col)), " ")
 
 
 # GPT-2-style pre-tokenizer, restricted to the Java-and-RE2-common subset

@@ -156,6 +156,53 @@ def test_ivf_topk_recall(spark):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
+def test_ivf_topk_zero_norm_centroid(spark):
+    """A zero vector among the sampled centroids stays a zero row (norm
+    clamped at 1e-12). Unclamped, the driver-side divide made it a NaN
+    row: argmax sent every vector to that cell and the query probed it
+    first, so IVF scanned the whole table."""
+    import hashlib
+    import warnings
+
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vecs = {i: [float(x) for x in rng.standard_normal(16)] for i in range(200)}
+    # the smallest md5(id) is the first centroid the sampler picks
+    first = min(vecs, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    vecs[first] = [0.0] * 16
+    query = 1 if first != 1 else 2
+    vecs[1000] = vecs[query]  # planted exact copy of the query
+    emb = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<double>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        rows = similarity.ivf_topk(emb, query_id=query, k=10).collect()
+    assert len(rows) == 10
+    assert (1000, 1.0) in {(r.vec_id, r.cosine) for r in rows}
+
+
+@pytest.mark.parametrize(
+    "search",
+    [
+        lambda emb, q: similarity.cosine_lsh_topk(emb, query_id=q, k=10, probe_bits=0),
+        lambda emb, q: similarity.ivf_topk(emb, query_id=q, k=10, n_probe=1),
+    ],
+    ids=["lsh_probe_bits_0", "ivf_n_probe_1"],
+)
+def test_query_key_matches_row_keys(spark, search):
+    """The query's bucket / nearest cell is computed on the driver and the
+    rows' keys in the Arrow stage; probing only the query's own key must
+    still reach an exact copy of the query, which both sides key alike."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    vecs = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(500)]
+    vecs.append((10**9, vecs[0][1]))  # planted exact copy of query 0
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    rows = {r.vec_id: r.cosine for r in search(emb, 0).collect()}
+    assert rows.get(10**9) == 1.0
+
+
 def test_decode_images_codec_injection(spark, planted_docs):
     """Real-codec branch: injected codec decodes what it can, everything it
     can't falls back to the deterministic fake — never raises (the round-1
