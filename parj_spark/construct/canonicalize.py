@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parj_spark.session import collect_if_small
+
 
 def _local_components(spark, pdf, node_type) -> tuple[DataFrame, int]:
     """Driver-local connected components over a collected edge set.
@@ -95,41 +97,42 @@ def _propagate(
     )
 
 
-# default edge-count gate for the driver-local solver; callers that already
-# know the edge count pass collect_below=0 past it to skip the probe read.
-# 250k (not the broadcast loop's 1M label gate): the local path's cost is
-# dominated by shipping the result labels driver->executors, measured ~7-10s
-# at 1.2M labels vs ~4.5s for the broadcast-mode distributed loop on the
-# same (star-shaped, diameter-2) 900k-edge relation — while at <=100k edges
-# the local path wins 5-30x (pure action-latency elimination)
+# edge-count gate for the driver-local solver. 250k (not the broadcast
+# loop's 1M label gate): the local path's cost is dominated by shipping the
+# result labels driver->executors, measured ~7-10s at 1.2M labels vs ~4.5s
+# for the broadcast-mode distributed loop on the same (star-shaped,
+# diameter-2) 900k-edge relation — while at <=100k edges the local path
+# wins 5-30x (pure action-latency elimination)
 LOCAL_CC_EDGES = 250_000
+# label-count gate of the distributed loop's broadcast join: past it the
+# per-iteration driver collect + hash-relation rebuild costs more than the
+# shuffle it saves (measured 2-5x slower at 3.6M labels)
+BROADCAST_CC_LABELS = 1_000_000
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    broadcast_labels_below: int = 1_000_000,
     shortcut_after: int = 3,
-    collect_below: int = LOCAL_CC_EDGES,
+    size: int | None = None,
 ) -> tuple[DataFrame, int]:
     """(node, component) for every node in ``edges``; component = min member label.
 
     ``edges`` must have columns (src, dst); undirected semantics.
     Returns (labels_df, iterations_run).
 
-    Size-adaptive execution (the same gate philosophy as the dictionary
-    decode and the broadcast-mode label loop): below ``collect_below``
-    edges the whole edge set is collected once and solved driver-side
-    (:func:`_local_components`) — the distributed loop in broadcast mode
-    already ships every label to the driver per iteration via
-    ``F.broadcast(labels)``, so the memory class is unchanged while 5+
-    scheduled actions collapse into one bounded collect (measured: the
+    Size-adaptive execution through :func:`~parj_spark.session.collect_if_small`:
+    an edge set of at most ``LOCAL_CC_EDGES`` rows is collected once and
+    solved driver-side (:func:`_local_components`) — the distributed loop
+    in broadcast mode already ships every label to the driver per
+    iteration via ``F.broadcast(labels)``, so the memory class is unchanged
+    while 5+ scheduled actions collapse into one collect (measured: the
     construct pipeline's 29k-edge CC dropped ~4s of pure local-mode
-    scheduling latency). The probe is ``limit(collect_below + 1)``: if at
-    most ``collect_below`` rows come back, that IS the complete edge set;
-    otherwise the partial read is discarded and the distributed loop below
-    handles the corpus-scale graph. ``collect_below=0`` forces the
-    distributed path (the convergence-contract tests pin it).
+    scheduling latency). ``size`` is an upper bound on the edge count the
+    caller already holds: with it the gate decides without a probe read;
+    without it a bounded ``limit`` read decides. A larger edge set goes to
+    the distributed loop below. Both sides give the same labels
+    (``tests/test_size_gate.py`` runs each by setting ``LOCAL_CC_EDGES``).
 
     Engineered for minimum job count: the loop runs exactly ONE Spark action
     per iteration (the changed-count, which also materializes the new label
@@ -157,12 +160,9 @@ def connected_components(
     null as -1 and merge it into whichever node holds the last code).
     """
     edges = edges.select("src", "dst").na.drop()
-    if collect_below and collect_below > 0:
-        head = edges.limit(collect_below + 1).toPandas()
-        if len(head) <= collect_below:
-            return _local_components(
-                edges.sparkSession, head, edges.schema["src"].dataType
-            )
+    pdf = collect_if_small(edges, LOCAL_CC_EDGES, size)
+    if pdf is not None:
+        return _local_components(edges.sparkSession, pdf, edges.schema["src"].dataType)
 
     # duplicates in sym are harmless under min-aggregation -> skip distinct
     # (saves a full shuffle of the edge set)
@@ -199,11 +199,8 @@ def connected_components(
     sig_prev, n_nodes = signature(labels)  # also materializes the cache
     # size-gated join strategy (decided once; node count is stable): small
     # label sets broadcast so each iteration pays ONE shuffle (the group-min)
-    # instead of two; past the gate the per-iteration driver collect +
-    # hash-relation rebuild costs more than the shuffle it saves (measured
-    # 2-5x slower at 3.6M labels), so big label sets use the shuffle join —
-    # same adaptive pattern as the dictionary decode
-    bcast = 0 < n_nodes <= broadcast_labels_below
+    # instead of two; big label sets use the shuffle join
+    bcast = 0 < n_nodes <= BROADCAST_CC_LABELS
 
     # self-loop per node: the propagate-join's group-min then includes the
     # node's own current label, so no per-iteration union with the labels

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parj_spark.fixtures import ontology as O
+from parj_spark.session import collect_if_small
 
 
 def assemble_triples(mentions: DataFrame, canon: DataFrame) -> DataFrame:
@@ -59,23 +60,28 @@ def assemble_triples(mentions: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
-def _dense_ids(terms: DataFrame, col: str, local_below: int = 1_000_000) -> DataFrame:
+# distinct-term gate for the driver-local id assignment; the whole
+# dictionary is later broadcast by encode_triples under a gate 8x larger
+# (BROADCAST_DICT_ROWS), so collecting it costs no new memory class
+LOCAL_DENSE_IDS = 1_000_000
+
+
+def _dense_ids(terms: DataFrame, col: str, size: int | None = None) -> DataFrame:
     """(id, uri) with dense deterministic ids: rank in the global uri sort.
 
-    Size-adaptive (same gate philosophy as the broadcast decode and the
-    union-find): below ``local_below`` distinct terms the set is collected
-    once and ranked driver-side — pandas' string sort is code-point order,
-    which equals Spark's UTF-8 byte ordering, so the (id, uri) assignment
-    is bit-identical to the distributed rank — collapsing the checkpoint +
-    offset-collect + window + join chain into one bounded collect (the
-    whole dictionary is later broadcast by encode_triples under a gate 8x
-    larger anyway, so the memory class is unchanged). The probe is
-    ``limit(N + 1)``: an over-gate term set costs one partial read and
-    falls through to the distributed assignment below — range-partition
-    the sorted distinct terms, rank locally per partition, then add the
-    (tiny, broadcast) per-partition cumulative offsets: the classic
-    distributed zipWithIndex, with no Python row path and no
-    single-partition window bottleneck.
+    Size-adaptive through :func:`~parj_spark.session.collect_if_small`: a
+    set of at most ``LOCAL_DENSE_IDS`` distinct terms is collected once and
+    ranked driver-side — pandas' string sort is code-point order, which
+    equals Spark's UTF-8 byte ordering, so the (id, uri) assignment is
+    bit-identical to the distributed rank — collapsing the checkpoint +
+    offset-collect + window + join chain into one collect. ``size`` is an
+    upper bound on the distinct-term count the caller already holds: with
+    it the gate decides without a probe read; without it a bounded
+    ``limit`` read decides. A larger term set gets the distributed
+    assignment below — range-partition the sorted distinct terms, rank
+    locally per partition, then add the (tiny, broadcast) per-partition
+    cumulative offsets: the classic distributed zipWithIndex, with no
+    Python row path and no single-partition window bottleneck.
     """
     from pyspark.sql import Window
 
@@ -83,18 +89,17 @@ def _dense_ids(terms: DataFrame, col: str, local_below: int = 1_000_000) -> Data
     # sort (nulls last) and the distributed range sort (nulls first) rank
     # the same set
     dedup = terms.select(F.col(col).alias("uri")).dropna().distinct()
-    if local_below and local_below > 0:
-        head = dedup.limit(local_below + 1).toPandas()
-        if len(head) <= local_below:
-            pdf = head.sort_values("uri", ignore_index=True)
-            pdf.insert(0, "id", pdf.index.astype("int64"))
-            schema = T.StructType(
-                [
-                    T.StructField("id", T.LongType(), False),
-                    T.StructField("uri", terms.schema[col].dataType, False),
-                ]
-            )
-            return terms.sparkSession.createDataFrame(pdf, schema)
+    pdf = collect_if_small(dedup, LOCAL_DENSE_IDS, size)
+    if pdf is not None:
+        pdf = pdf.sort_values("uri", ignore_index=True)
+        pdf.insert(0, "id", pdf.index.astype("int64"))
+        schema = T.StructType(
+            [
+                T.StructField("id", T.LongType(), False),
+                T.StructField("uri", terms.schema[col].dataType, False),
+            ]
+        )
+        return terms.sparkSession.createDataFrame(pdf, schema)
 
     distinct = (
         dedup
@@ -139,23 +144,21 @@ def build_dictionary(
     checkpointed parquet carries disjoint per-file uri ranges — per-query
     constant-term lookups (`uri IN (...)`) prune to a few row groups via
     parquet min/max instead of scanning the dictionary.
+
+    Distinct terms are at most twice the triple count, and that bound is
+    the size `_dense_ids`' gate decides on: no probe read, and a
+    corpus-scale dictionary goes straight to the distributed rank.
+    ``n_triples`` is the count the stage that wrote the triples observed;
+    only without it (a resumed stage) is it counted here, a metadata-only
+    job on checkpointed parquet.
     """
     terms = triples_uri.select(F.col("s_uri").alias("uri")).union(
         triples_uri.select(F.col("o_uri").alias("uri"))
     )
-    # cheap pre-gate for the driver-local id assignment: distinct terms are
-    # bounded by 2x the triple count, so a corpus-scale dictionary skips the
-    # gate probe — which would otherwise collect and discard a gate-sized
-    # prefix — and goes straight to the distributed rank. ``n_triples`` is
-    # the count the stage that wrote the triples observed; only without it
-    # (a resumed stage) is it counted here, a metadata-only job on
-    # checkpointed parquet
     if n_triples is None:
         n_triples = triples_uri.count()
-    n_bound = 2 * n_triples
-    local_below = 1_000_000 if n_bound <= 1_000_000 else 0
     return (
-        _dense_ids(terms, "uri", local_below=local_below)
+        _dense_ids(terms, "uri", size=2 * n_triples)
         .repartitionByRange(F.col("uri"))
         .sortWithinPartitions("uri")
     )

@@ -226,17 +226,10 @@ def run_pipeline(
         edges = linking.coref_edges(surfaces).persist()
         n_edges = edges.count()
         t_edges = time.time()
-        # the edge count is already known here, so decide the CC execution
-        # path outright instead of letting the gate probe re-collect a
-        # gate-sized prefix of an over-gate edge set (corpus-scale graphs
-        # go straight to the distributed loop)
-        labels, iters = canonicalize.connected_components(
-            edges,
-            collect_below=(
-                0 if n_edges > canonicalize.LOCAL_CC_EDGES
-                else canonicalize.LOCAL_CC_EDGES
-            ),
-        )
+        # the edge count is known here: as the size bound it lets the CC
+        # gate decide without a probe read (corpus-scale graphs go straight
+        # to the distributed loop)
+        labels, iters = canonicalize.connected_components(edges, size=n_edges)
         canon_frames["labels"] = labels
         canon_frames["edges"] = edges
         t_cc = time.time()

@@ -58,8 +58,12 @@ def _norm(a):
 
 
 def cosine_sim(a_col: str, b_col: str):
+    """Exact cosine; each norm is clamped at 1e-12 like ``_unit``'s, so a
+    zero vector scores 0 instead of failing the division."""
     a, b = F.col(a_col), F.col(b_col)
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _dot(a, b) / (
+        F.greatest(_norm(a), F.lit(1e-12)) * F.greatest(_norm(b), F.lit(1e-12))
+    )
 
 
 def _matrix(vecs) -> np.ndarray:
@@ -269,9 +273,7 @@ def cosine_lsh_neardup_pairs(
     # |err| <= ~d * eps (~1e-13 for d <= 2^20, unit-scale values), while a
     # final-filter survivor needs exact cosine >= threshold - 5.1e-7 (the
     # round(.,6) lift), far inside the 1e-4 margin. A zero-norm side scores
-    # ~0 against the prefilter's norm clamp (max(norm, 1e-12)), so at any
-    # threshold above the margin it never reaches the exact cosine, whose
-    # division by a zero norm raises DIVIDE_BY_ZERO under ANSI mode.
+    # 0 on both sides, which clamp the norm the same way (max(norm, 1e-12)).
     vtype = emb.schema[vec_col].dataType.simpleString()
     margin = 1e-4
 

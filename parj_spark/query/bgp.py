@@ -69,6 +69,27 @@ def _is_var(term) -> bool:
     return isinstance(term, str) and term.startswith("?")
 
 
+def instantiate(solutions: DataFrame, templates: list[Pattern]) -> DataFrame:
+    """Template triples instantiated once per solution, as a distinct
+    (s, p, o) string relation (a graph holds terms, not typed values).
+    Solutions with an unbound (null) template variable instantiate nothing
+    for that template (SPARQL 1.1 §16.2 for CONSTRUCT, Update §3.1.3 for
+    DELETE/INSERT templates), so OPTIONAL-bound vars work."""
+    out = None
+    for tp in templates:
+        used = [t[1:] for t in (tp.s, tp.p, tp.o) if _is_var(t)]
+        row = solutions.na.drop(subset=used).select(
+            *(
+                (F.col(t[1:]) if _is_var(t) else F.lit(t))
+                .cast("string")
+                .alias(c)
+                for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
+            )
+        )
+        out = row if out is None else out.unionByName(row)
+    return out.distinct()
+
+
 @dataclass(frozen=True)
 class Path:
     """Property-path expression tree (opt-in extension beyond reference
@@ -1022,21 +1043,9 @@ class GraphAccess:
             # first-solution semantics at plan level, not just result level.
             return result.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
         if q.construct is not None:
-            # CONSTRUCT over the decoded solution set: instantiate each
-            # template triple per solution, union, dedup (a result graph is
-            # a set of triples)
-            out = None
-            for tp in q.construct:
-                row = result.select(
-                    *(
-                        (F.col(t[1:]) if _is_var(t) else F.lit(t))
-                        .cast("string")  # a graph holds terms, not typed values
-                        .alias(c)
-                        for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
-                    )
-                )
-                out = row if out is None else out.unionByName(row)
-            return out.distinct()
+            # CONSTRUCT over the decoded solution set (a result graph is a
+            # set of triples, with no incomplete instantiation)
+            return instantiate(result, q.construct)
         if q.describe is not None:
             # DESCRIBE: the distinct outgoing edges of the described
             # resources (concise bounded description, one hop). The
@@ -1145,7 +1154,7 @@ class BGPEngine(GraphAccess):
         self.store = store
         self.spark = store.spark
         if bucketed_prefix == "auto":
-            bucketed_prefix = getattr(store, "bucketed_prefix", lambda: None)()
+            bucketed_prefix = store.bucketed_prefix()
         self.bucketed_prefix = bucketed_prefix
         if bucketed_prefix:
             # keep the bucketed read ON for scan-only shapes: Spark's
@@ -1190,7 +1199,7 @@ class BGPEngine(GraphAccess):
         self._join_stats: dict[tuple[int, int, str], int] = {}
         # type-restricted T3 (reference getTypeCardinality, parj.c:510-547):
         # {(class, p1, p2, orientation) -> card over class-instance join keys}
-        self._cjs_df = getattr(store, "class_join_stats", lambda: None)()
+        self._cjs_df = store.class_join_stats()
         self._class_join_stats: dict[tuple[int, int, int, str], int] = {}
         # the tracked-class set is O(top_k) and decides "pair absent means
         # zero" vs "class untracked" — loaded eagerly so lazy pair loading
@@ -1202,7 +1211,7 @@ class BGPEngine(GraphAccess):
         )
         # equi-depth histograms (Histogram.java:106-212 analog): per
         # (predicate, column) sorted bucket lists for constant selectivity
-        self._hist_df = getattr(store, "histograms", lambda: None)()
+        self._hist_df = store.histograms()
         self._hists: dict[tuple[int, str], list[tuple[int, int, int, int]]] = {}
         self._hydrated_pids: set[int] = set()
         # property-path relations (GraphAccess._path_rel), keyed by Path
@@ -1211,7 +1220,7 @@ class BGPEngine(GraphAccess):
 
         # T2 per-class stats (parj.c:338-364, MemoryStat.java:248-315):
         # {class id -> instance count}, for exact `?x rdf:type C` estimates
-        cs = getattr(store, "class_stats", lambda: None)()
+        cs = store.class_stats()
         self._class_stats = (
             {r["o"]: r["n"] for r in cs.collect()} if cs is not None else {}
         )

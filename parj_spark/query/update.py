@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from parj_spark.query.bgp import Pattern
+from parj_spark.query.bgp import Pattern, instantiate
 from parj_spark.query.sparql import (
     ALLOW_FLAGS,
     ENGINE_FLAGS,
@@ -53,36 +53,12 @@ from parj_spark.query.sparql import (
 _SPO = ["s", "p", "o"]
 
 
-def _is_var(t) -> bool:
-    return isinstance(t, str) and t.startswith("?")
-
-
 def _ground_rows(spark, templates: list[Pattern]) -> DataFrame:
     # a DATA block may repeat a triple; the graph is a set
     return spark.createDataFrame(
         list(dict.fromkeys((t.s, t.p, t.o) for t in templates)),
         "s string, p string, o string",
     )
-
-
-def _instantiate(solutions: DataFrame, templates: list[Pattern]) -> DataFrame:
-    """Template triples instantiated once per WHERE solution, as a distinct
-    (s, p, o) string relation. Solutions with an unbound (null) template
-    variable instantiate nothing for that template (SPARQL 1.1 Update §3.1.3:
-    incomplete instantiations are skipped), so OPTIONAL-bound vars work."""
-    out = None
-    for tp in templates:
-        used = [t[1:] for t in (tp.s, tp.p, tp.o) if _is_var(t)]
-        row = solutions.na.drop(subset=used).select(
-            *(
-                (F.col(t[1:]) if _is_var(t) else F.lit(t))
-                .cast("string")
-                .alias(c)
-                for t, c in ((tp.s, "s"), (tp.p, "p"), (tp.o, "o"))
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.distinct()
 
 
 def _op_changes(
@@ -96,8 +72,8 @@ def _op_changes(
         ins = _ground_rows(spark, op.insert_templates) if op.insert_templates else None
         return dels, ins
     sols = execute_on_triples(graph, op.where_text, **flags)
-    dels = _instantiate(sols, op.delete_templates) if op.delete_templates else None
-    ins = _instantiate(sols, op.insert_templates) if op.insert_templates else None
+    dels = instantiate(sols, op.delete_templates) if op.delete_templates else None
+    ins = instantiate(sols, op.insert_templates) if op.insert_templates else None
     return dels, ins
 
 
@@ -192,8 +168,8 @@ def apply_update(store, stream_dir: str, text: str, **flags):
             # itself is permissive; extension gating happens here)
             q = parse_sparql(op.where_text, **where_flags)
             sols = BGPEngine(view)._sparql_query(q, decode=True).localCheckpoint()
-            dels = _instantiate(sols, op.delete_templates) if op.delete_templates else None
-            ins = _instantiate(sols, op.insert_templates) if op.insert_templates else None
+            dels = instantiate(sols, op.delete_templates) if op.delete_templates else None
+            ins = instantiate(sols, op.insert_templates) if op.insert_templates else None
 
         if dels is not None:
             write_epoch_delta(

@@ -1,4 +1,6 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one size gate
+(``collect_if_small``) between an operator's driver-local and distributed
+sides.
 
 Local-mode settings mirror what a 1000-executor cluster deployment would set
 per-executor; the knobs that matter at 100 TB (AQE, skew join, shuffle
@@ -10,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -66,3 +68,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def collect_if_small(df: DataFrame, n: int, size: int | None = None):
+    """``df`` as a pandas frame when it has at most ``n`` rows, else None.
+
+    The one size gate between an operator's driver-local side and its
+    distributed side. ``size`` is an upper bound on ``df``'s row count
+    that the caller already holds (an exact count is one): within ``n``
+    the whole frame is collected with no limit, past ``n`` nothing is
+    read. Without it, one bounded ``limit(n + 1)`` read decides: if at
+    most ``n`` rows come back, that is the whole frame. ``n = -1`` never
+    collects, which pins a caller to its distributed side.
+    """
+    if size is not None:
+        return df.toPandas() if size <= n else None
+    head = df.limit(n + 1).toPandas()
+    return head if len(head) <= n else None

@@ -1,8 +1,10 @@
 """Property-based check: distributed connected components == classic
 union-find, over random small graphs (hypothesis)."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from parj_spark.construct import canonicalize
 from parj_spark.construct.canonicalize import connected_components
 
 
@@ -37,10 +39,12 @@ edge_lists = st.lists(
 def test_cc_matches_union_find(spark, edges):
     # both execution paths must agree with the oracle: the size-gated
     # driver-local solver (default — these edge sets are under the gate)
-    # and the distributed loop (collect_below=0 forces it)
+    # and the distributed loop (a gate of -1 forces it)
     df = spark.createDataFrame(edges, ["src", "dst"])
-    for gate in (1_000_000, 0):
-        labels, _ = connected_components(df, collect_below=gate)
+    for gate in (canonicalize.LOCAL_CC_EDGES, -1):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(canonicalize, "LOCAL_CC_EDGES", gate)
+            labels, _ = connected_components(df)
         got = {r["node"]: r["component"] for r in labels.collect()}
         assert got == _uf_oracle(edges)
 
@@ -50,12 +54,13 @@ def _chain(n):
     return [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(n)]
 
 
-def test_cc_pointer_doubling_handles_deep_chain(spark):
+def test_cc_pointer_doubling_handles_deep_chain(spark, monkeypatch):
     edges = _chain(300)
     df = spark.createDataFrame(edges, ["src", "dst"])
-    # collect_below=0: this pins the DISTRIBUTED loop's doubling escape
-    # hatch (the local solver has its own doubling, covered above)
-    labels, iters = connected_components(df, collect_below=0)
+    # a gate of -1 pins the DISTRIBUTED loop's doubling escape hatch (the
+    # local solver has its own doubling, covered above)
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_EDGES", -1)
+    labels, iters = connected_components(df)
     # plain min-propagation needs ~300 rounds; doubling kicks in after 3
     # and halves remaining depth per round -> well under the 25-round cap
     assert iters <= 15
@@ -64,45 +69,30 @@ def test_cc_pointer_doubling_handles_deep_chain(spark):
     assert set(got.values()) == {"n0000"}
 
 
-def test_cc_raises_instead_of_returning_partial_labels(spark):
-    import pytest
-
+def test_cc_raises_instead_of_returning_partial_labels(spark, monkeypatch):
     df = spark.createDataFrame(_chain(40), ["src", "dst"])
+    # a gate of -1 pins the distributed loop (the local solver always
+    # returns complete labels, so the contract lives there)
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_EDGES", -1)
     with pytest.raises(RuntimeError, match="did not converge"):
         # doubling disabled (shortcut_after past max_iter): 3 rounds cannot
-        # close a 40-deep chain, and partial labels must never leak out.
-        # collect_below=0 pins the distributed loop (the local solver
-        # always returns complete labels, so the contract lives there)
-        connected_components(df, max_iter=3, shortcut_after=99, collect_below=0)
+        # close a 40-deep chain, and partial labels must never leak out
+        connected_components(df, max_iter=3, shortcut_after=99)
 
 
-def test_cc_local_path_deep_chain_and_gate_boundary(spark):
+def test_cc_local_path_deep_chain_and_gate_boundary(spark, monkeypatch):
     # the driver-local solver on a deep chain (vectorized doubling), plus
-    # the gate boundary: a set of exactly collect_below edges goes local,
+    # the gate boundary: a set of exactly LOCAL_CC_EDGES edges goes local,
     # one more falls through to the distributed loop — identical labels
     edges = _chain(120)
     df = spark.createDataFrame(edges, ["src", "dst"])
     oracle = _uf_oracle(edges)
-    local, _ = connected_components(df, collect_below=len(edges))
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_EDGES", len(edges))
+    local, _ = connected_components(df)
     assert {r["node"]: r["component"] for r in local.collect()} == oracle
-    dist, _ = connected_components(df, collect_below=len(edges) - 1)
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_EDGES", len(edges) - 1)
+    dist, _ = connected_components(df)
     assert {r["node"]: r["component"] for r in dist.collect()} == oracle
-
-
-def test_cc_null_endpoint_same_labels_on_both_paths(spark):
-    # an edge with a null endpoint links nothing: the driver-local solver
-    # must not merge it into another component (pandas codes null as -1),
-    # and the distributed loop must not emit a null node
-    from parj_spark.construct.canonicalize import LOCAL_CC_EDGES
-
-    df = spark.createDataFrame(
-        [("a", "b"), ("c", None), ("d", "e")], "src string, dst string"
-    )
-    got = []
-    for gate in (LOCAL_CC_EDGES, 0):
-        labels, _ = connected_components(df, collect_below=gate)
-        got.append({r["node"]: r["component"] for r in labels.collect()})
-    assert got[0] == got[1] == {"a": "a", "b": "a", "d": "d", "e": "d"}
 
 
 def _seq(s):
@@ -136,8 +126,6 @@ def test_cc_iteration_join_does_not_reshuffle_cached_edges(spark, monkeypatch):
     first round. The session lets AQE coalesce cached plans, which drops
     the partitioning of a cached frame unless it ends in a repartition
     with an explicit partition count."""
-    from parj_spark.construct import canonicalize
-
     plans = []
     propagate = canonicalize._propagate
 
@@ -150,14 +138,14 @@ def test_cc_iteration_join_does_not_reshuffle_cached_edges(spark, monkeypatch):
         return cand
 
     monkeypatch.setattr(canonicalize, "_propagate", recording)
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_EDGES", -1)
+    monkeypatch.setattr(canonicalize, "BROADCAST_CC_LABELS", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pairs = [(f"a{i}", f"a{i + 1}") for i in range(4)] + [("b0", "b1"), ("b2", "b1")]
         edges = spark.createDataFrame(pairs, "src string, dst string")
-        labels, _ = connected_components(
-            edges, collect_below=0, broadcast_labels_below=0
-        )
+        labels, _ = connected_components(edges)
         got = {r["node"]: r["component"] for r in labels.collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -181,6 +181,25 @@ def test_ivf_topk_zero_norm_centroid(spark):
     assert (1000, 1.0) in {(r.vec_id, r.cosine) for r in rows}
 
 
+def test_cosine_topk_zero_norm_vector(spark):
+    """A zero vector scores cosine 0 (each norm clamped at 1e-12, as in
+    ``_unit``) instead of failing the query with a division by zero under
+    ANSI mode, and the top-k ranks the other vectors as before."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    vecs = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(200)]
+    vecs[7] = (7, [0.0] * 16)
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    top = similarity.cosine_topk(emb, query_id=1, k=3).collect()
+    M = np.array([v for _, v in vecs])
+    cos = M @ M[1] / np.maximum(np.linalg.norm(M, axis=1), 1e-12) / np.linalg.norm(M[1])
+    cos[1] = -np.inf
+    assert [r.vec_id for r in top] == list(np.argsort(-cos, kind="stable")[:3])
+    every = similarity.cosine_topk(emb, query_id=1, k=199).collect()
+    assert {r.vec_id: r.cosine for r in every}[7] == 0.0
+
+
 @pytest.mark.parametrize(
     "search",
     [

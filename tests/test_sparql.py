@@ -1005,6 +1005,40 @@ def test_construct_engine(engine):
     assert one["p"] == "ub:taughtBy"
 
 
+def test_construct_skips_incomplete_instantiations(spark):
+    """A template triple with an unbound (OPTIONAL) var is left out of the
+    constructed graph (SPARQL 1.1 §16.2), not emitted with a null term."""
+    from parj_spark.query.sparql import execute_on_triples
+
+    t = spark.createDataFrame(
+        [("ub:a", "rdf:type", "ub:C"), ("ub:b", "rdf:type", "ub:C"), ("ub:a", "ub:q", "ub:v")],
+        ["s", "p", "o"],
+    )
+    got = execute_on_triples(
+        t,
+        PREFIXES + "CONSTRUCT { ?s ub:r ?o } "
+        "WHERE { ?s rdf:type ub:C . OPTIONAL { ?s ub:q ?o } }",
+        allow_construct=True,
+    )
+    assert _rows(got) == [("ub:a", "ub:r", "ub:v")]
+
+
+def test_construct_engine_skips_incomplete_instantiations(engine):
+    """Engine path: undergraduates have no email, so the email template
+    instantiates nothing while the complete template gives one triple per
+    student."""
+    got = engine.sparql(
+        PREFIXES + "CONSTRUCT { ?x ub:mail ?e . ?x ub:kind ub:Student } "
+        "WHERE { ?x a ub:UndergraduateStudent OPTIONAL { ?x ub:emailAddress ?e } }",
+        construct=True,
+    )
+    rows = _rows(got)
+    students = engine.query([Pattern("?x", "rdf:type", "ub:UndergraduateStudent")])
+    assert rows and len(rows) == students.count()
+    assert {p for _, p, _ in rows} == {"ub:kind"}
+    assert all(None not in r for r in rows)
+
+
 def test_bind_rejected_by_default():
     with pytest.raises(ValueError, match="BIND"):
         parse_sparql(
